@@ -694,17 +694,17 @@ object Dedup {
     *    below its 10 MB default is asking for smaller broadcasts, so the
     *    bar scales down proportionally instead of only consulting the
     *    sign (raising it above the default does NOT raise graft bars).
-    * Returns 0 when auto-broadcast is disabled (<= 0): every gate then
-    * takes its exact fallback shuffle plan. Callers must keep the
-    * `bar > 0 &&` guard so a 0-byte estimate never broadcasts when
-    * broadcasting is disabled.
+    * Returns 0 when auto-broadcast is disabled (<= 0) or the key itself
+    * is set to <= 0: every gate then takes its exact fallback shuffle
+    * plan. Callers must keep the `bar > 0 &&` guard so a 0-byte estimate
+    * never broadcasts when broadcasting is disabled.
     */
   private[graft] def effectiveBroadcastBar(
       spark: org.apache.spark.sql.SparkSession, confKey: String): Long = {
     val autoBar = broadcastLimitBytes(spark)
-    if (autoBar <= 0) 0L
+    lazy val conf = parseBytesConf(spark.conf.get(confKey, "256MB"))
+    if (autoBar <= 0 || conf <= 0) 0L
     else {
-      val conf = parseBytesConf(spark.conf.get(confKey, "256MB"))
       val scaled =
         if (autoBar < DefaultAutoBar)
           math.max(1L, (conf.toDouble * autoBar / DefaultAutoBar).toLong)

@@ -154,6 +154,30 @@ object EntityResolution {
       .orderBy("decision")
   }
 
+  /** The LAZY pre-checkpoint admitted-match subtree of [[entities]]
+    * (observation stream + blocking + scoring + admission filter),
+    * factored out so PlanAudit can assert its blocking-join shape
+    * (substring-keyed BroadcastHashJoins, no cartesian) on the plan that
+    * actually executes at the checkpoint — [[entities]]' returned plan
+    * only shows the checkpointed RDD (ADVICE r16).
+    */
+  private[graft] def entitiesAdmittedLazy(cust: DataFrame): DataFrame = {
+    val off = cust.agg(
+      ((floor(max(col("c_custkey")) / 10000) + 1) * 10000).as("off"))
+    val obs2 = cust.filter(col("c_custkey") % 2 === 0)
+      .crossJoin(broadcast(off))
+      .select(
+        (col("c_custkey") + col("off") * 2).as("did"),
+        upper(col("c_name")).as("dname"),
+        col("c_nationkey").as("dnation"),
+        col("c_mktsegment").as("dseg"))
+    val d = dirty(cust).unionByName(obs2)
+    val sc = scoredCandidates(cust, d)
+    sc.filter(col("score") >= 3000L &&
+      (lower(col("dname")) === lower(col("c_name")) ||
+        length(col("dname")) =!= length(col("c_name"))))
+  }
+
   /** x229: pairs → ENTITIES (r11 verdict #8) — production linkage does
     * not stop at scored pairs: it forms entity clusters by transitive
     * closure over admitted matches and elects a surviving record per
@@ -199,30 +223,6 @@ object EntityResolution {
     * column exists for exactly this), rather than being silently
     * resolved either way.
     */
-  /** The LAZY pre-checkpoint admitted-match subtree of [[entities]]
-    * (observation stream + blocking + scoring + admission filter),
-    * factored out so PlanAudit can assert its blocking-join shape
-    * (substring-keyed BroadcastHashJoins, no cartesian) on the plan that
-    * actually executes at the checkpoint — [[entities]]' returned plan
-    * only shows the checkpointed RDD (ADVICE r16).
-    */
-  private[graft] def entitiesAdmittedLazy(cust: DataFrame): DataFrame = {
-    val off = cust.agg(
-      ((floor(max(col("c_custkey")) / 10000) + 1) * 10000).as("off"))
-    val obs2 = cust.filter(col("c_custkey") % 2 === 0)
-      .crossJoin(broadcast(off))
-      .select(
-        (col("c_custkey") + col("off") * 2).as("did"),
-        upper(col("c_name")).as("dname"),
-        col("c_nationkey").as("dnation"),
-        col("c_mktsegment").as("dseg"))
-    val d = dirty(cust).unionByName(obs2)
-    val sc = scoredCandidates(cust, d)
-    sc.filter(col("score") >= 3000L &&
-      (lower(col("dname")) === lower(col("c_name")) ||
-        length(col("dname")) =!= length(col("c_name"))))
-  }
-
   def entities(spark: SparkSession, cust: DataFrame): DataFrame = {
     val off = cust.agg(
       ((floor(max(col("c_custkey")) / 10000) + 1) * 10000).as("off"))

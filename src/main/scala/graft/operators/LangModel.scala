@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.DecimalType
   * than shuffling the corpus. Per-doc averaging partitions by doc_id.
   * With a web-scale vocab the model outgrows a broadcast, so the hints are
   * BYTE-GATED (the x05/x152 switch idiom): measured model bytes vs
-  * `graft.lm.broadcastMaxBytes` (default 256 MB) with
+  * `graft.lm.broadcastMaxBytes` (default 256 MB of built relation; raw
+  * model bytes are gated at a quarter of the key, and a key <= 0 disables
+  * the hint — `Dedup.effectiveBroadcastBar`) with
   * `autoBroadcastJoinThreshold=-1` respected absolutely; past the bar the
   * same plan becomes a shuffle join on uniformly-distributed bigram keys —
   * nothing else changes and both branches share the oracle. The decision

@@ -27,7 +27,9 @@ import org.apache.spark.sql.types.DecimalType
   * Scale shape (100 TB): the MODEL is aggregate-sized — per-class token
   * counts are hash aggregates bounded by vocab × classes, independent of
   * corpus rows — and is byte-gated for broadcast exactly like x171
-  * (`graft.nb.broadcastMaxBytes`, default 256 MB, shuffle join on the
+  * (`graft.nb.broadcastMaxBytes`, default 256 MB of built relation:
+  * raw model bytes are gated at a quarter of the key, and a key <= 0
+  * disables the hint — `Dedup.effectiveBroadcastBar`; shuffle join on the
   * uniformly-distributed (class, word) keys past the bar). Scoring is one
   * pass over the test token-TYPE table (doc × distinct-word, smaller than
   * the token stream) fanned out × classes (a 5-row broadcast). The

@@ -795,7 +795,9 @@ object Similarity {
     * banded-index pass over the two language blocks, the fr block's probe
     * fanout (11 masks per band at radius 2, bandBits = 4) and its vector
     * block each BYTE-GATED: broadcast only while their measured bytes
-    * stay under `graft.ann.broadcastMaxBytes` (default 256 MB) and
+    * stay under `graft.ann.broadcastMaxBytes` (default 256 MB of built
+    * relation, so a quarter of it in raw bytes; <= 0 disables — see
+    * `Dedup.effectiveBroadcastBar`) and
     * `spark.sql.autoBroadcastJoinThreshold` is enabled, otherwise a plain
     * co-partitioned equi-join (the x05 / `graft.lm.broadcastMaxBytes`
     * idiom — at corpus scale a "smaller language block" is still billions

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.explode
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -27,11 +28,18 @@ import scala.collection.mutable
   * at runtime (`mod.rs:445-453`), each pipe here carries a concrete schema
   * checked at analysis time — strictly stronger.
   *
-  * Scale: the DSL only *composes* DataFrames; everything Catalyst sees is
-  * the same declarative plan you'd write by hand, so pushdown/pruning/
-  * broadcast all apply unchanged. The fixpoint loop keeps per-iteration
-  * frontiers as checkpointed DataFrames — cluster-sized frontiers are fine;
-  * only the empty-check is an action.
+  * Scale: each node's op is the same declarative plan you'd write by
+  * hand, so pushdown/pruning/broadcast apply *within* a node. A pipe
+  * boundary is a cache boundary: `run` materializes each batch pipe once
+  * per run, the first time a node reads it (`persist`, which keeps
+  * lineage), so sinks, sort-sample jobs and construction-time
+  * checkpoints downstream read it instead of re-running the upstream
+  * graph — the reference's "every value passes each stage once". The
+  * price is that no filter or column pruning crosses a pipe: a consumer's
+  * predicate applies to the materialized pipe, not to the upstream scan.
+  * Every pipe the run persisted is released when it ends. The fixpoint
+  * loop keeps per-iteration frontiers as checkpointed DataFrames —
+  * cluster-sized frontiers are fine; only the empty-check is an action.
   */
 object PipeGraph {
   def builder: Builder = new Builder(Vector.empty)
@@ -183,9 +191,6 @@ object PipeGraph {
 /** A validated pipeline; `run` executes it (≈ `Pipeline::wait`,
   * `/root/reference/src/pipeline/mod.rs:357-396` — in batch, Spark's DAG
   * completion replaces the reference's counter-based quiescence detection).
-  *
-  * Returns the final content of every pipe (post-run, for asserts — the
-  * consume-and-assert style of the reference's tests).
   */
 final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
   import PipeGraph._
@@ -223,14 +228,40 @@ final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
     out.toVector // reverse-topological order
   }
 
+  /** Runs every node in topological order; cyclic components iterate to
+    * a fixpoint (at most `maxIterations` rounds).
+    *
+    * Each batch pipe is materialized once per run: it is persisted the
+    * first time a stage or consumer reads it — before the node's op, so
+    * construction-time jobs inside the op read it too — and every pipe
+    * the run persisted is unpersisted (blocking) when the run ends,
+    * whether it succeeds or throws. Streaming pipes, pipes the caller had
+    * already cached (left cached), and the pipes inside a cycle (which
+    * keep their per-iteration `localCheckpoint`) are not persisted.
+    *
+    * Returns the final content of every pipe (for asserts — the
+    * consume-and-assert style of the reference's tests). The map is lazy:
+    * its DataFrames were released with the run, so reading one recomputes
+    * it from its sources.
+    */
   def run(spark: SparkSession, maxIterations: Int = 100): Map[String, DataFrame] = {
     // pipe -> accumulated content (union of all writes)
     val pipes = mutable.Map[String, DataFrame]()
     def write(pipe: String, df: DataFrame): Unit =
       pipes(pipe) = pipes.get(pipe).map(_.union(df)).getOrElse(df)
 
+    // Batch pipes this run persisted; a pipe the caller already cached
+    // (or one whose plan equals an earlier pipe's) is used as is.
+    val persisted = mutable.ArrayBuffer[DataFrame]()
+    def read(pipe: String): Option[DataFrame] = pipes.get(pipe).map { df =>
+      if (!df.isStreaming && df.storageLevel == StorageLevel.NONE) {
+        persisted += df.persist()
+      }
+      df
+    }
+
     val comps = sccs.reverse // topological order
-    comps.foreach { comp =>
+    try comps.foreach { comp =>
       val isCycle = comp.length > 1 || {
         val i = comp.head
         nodes(i).writes.exists(nodes(i).reads.contains(_))
@@ -240,15 +271,15 @@ final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
         node match {
           case Producer(out, make) => write(out, make(spark))
           case Transform(in, outs, op) =>
-            pipes.get(in).foreach { df =>
+            read(in).foreach { df =>
               outs.zip(op(df)).foreach { case (p, o) => write(p, o) }
             }
-          case Consumer(in, sink) => pipes.get(in).foreach(sink)
+          case Consumer(in, sink) => read(in).foreach(sink)
         }
       } else {
         runCycle(spark, comp, pipes, write, maxIterations)
       }
-    }
+    } finally persisted.reverseIterator.foreach(_.unpersist(blocking = true))
     pipes.toMap
   }
 

@@ -503,8 +503,10 @@ object Round6bQueries {
     * bar prices an arbitrary unknown-width plan, while this side is a
     * known 16 B/edge packed relation whose alternative is shuffling
     * the far larger wedge set — so a dedicated knob is the bar
-    * (graft.triangles.broadcastMaxBytes, default 256 MB ≈ 16 M edges,
-    * comfortably inside a production executor heap), while
+    * (graft.triangles.broadcastMaxBytes, default 256 MB of built
+    * relation; raw edge bytes are gated at a quarter of the key, i.e.
+    * 64 MB ≈ 4 M edges, and a key <= 0 disables the hint — see
+    * `Dedup.effectiveBroadcastBar`), while
     * autoBroadcastJoinThreshold=-1 (broadcast disabled session-wide)
     * is respected absolutely. Past the bar, the closing probe becomes
     * a plain shuffle join on (u, v), co-partitioned with the wedge

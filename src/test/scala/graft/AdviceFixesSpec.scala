@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{FuzzyJoin, LineOps}
+import graft.operators.{Dedup, FuzzyJoin, LineOps}
 import graft.sources.CollectorSink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -131,6 +131,22 @@ class AdviceFixesSpec extends SparkSuite {
     // The old toString render hashed UnsafeArrayData object identity —
     // different partitioning gave different checksums for nested schemas.
     assert(a.checksum == b.checksum && a.rows == b.rows && a.rows > 0)
+  }
+
+  // --- effectiveBroadcastBar: a non-positive key disables the gate -------
+
+  test("graft.*.broadcastMaxBytes <= 0 disables graft broadcasts (bar 0)") {
+    val key = "graft.dedup.broadcastMaxBytes"
+    try {
+      assert(Dedup.effectiveBroadcastBar(spark, key) ==
+        (256L << 20) / Dedup.RelationOverhead) // default: 256MB / 4
+      for (v <- Seq("0", "-1")) {
+        spark.conf.set(key, v)
+        assert(Dedup.effectiveBroadcastBar(spark, key) == 0L, s"at $v")
+      }
+      spark.conf.set(key, "8")
+      assert(Dedup.effectiveBroadcastBar(spark, key) == 2L)
+    } finally spark.conf.unset(key)
   }
 }
 

@@ -3,6 +3,7 @@ package graft
 import graft.pipeline.PipeGraph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Mirrors the reference's builder-validation and end-to-end pipeline tests
   * (`/root/reference/tests/pipeline_tests.rs`, `tests/stage_tests.rs`).
@@ -159,6 +160,85 @@ class PipeGraphSpec extends SparkSuite {
     val e = intercept[Exception](g.run(spark))
     assert(e.getMessage.contains("task panicked") ||
       Option(e.getCause).exists(_.getMessage.contains("task panicked")))
+  }
+
+  // --- once per run: a pipe is a cache boundary, released when run ends
+
+  /** Rows 0..n-1 from a Range (not a LocalRelation, whose projections the
+    * optimizer folds on the driver).
+    */
+  private def range(n: Int)(s: org.apache.spark.sql.SparkSession): DataFrame =
+    s.range(0, n, 1, 4).toDF("v")
+
+  /** A stage op that counts its row evaluations in `evals`. */
+  private def counted(evals: org.apache.spark.util.LongAccumulator)(
+      df: DataFrame): DataFrame = {
+    val bump = udf((v: Long) => { evals.add(1); v })
+    df.select(bump(col("v")).as("v"))
+  }
+
+  private def persistentRddIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("each batch pipe is computed once per run and released after it") {
+    val evals = spark.sparkContext.longAccumulator("pipe_evals")
+    val before = persistentRddIds
+    var odds, evens = 0L
+    val g = PipeGraph.builder
+      .producer("in")(range(100))
+      .stage("in", "scored")(counted(evals))
+      .branchingStage("scored", Seq("odds", "evens"))(df =>
+        Seq(df.filter(col("v") % 2 === 1), df.filter(col("v") % 2 === 0)))
+      .consumer("odds")(df => odds = df.orderBy("v").collect().length.toLong)
+      .consumer("evens")(df => evens = df.count())
+      .build().toOption.get
+    val pipes = g.run(spark)
+    assert(odds == 50 && evens == 50)
+    // Without the cache boundary every sink job (and the orderBy sample
+    // job) re-ran the stage: >= 2x.
+    assert(evals.value == 100, s"stage evaluated ${evals.value} times")
+    assert(pipes.values.forall(_.storageLevel == StorageLevel.NONE))
+    assert(persistentRddIds.subsetOf(before))
+    // the returned map is lazy: still readable, recomputed on demand
+    assert(pipes("evens").count() == evens)
+  }
+
+  test("a failing run releases every pipe it persisted") {
+    val before = persistentRddIds
+    var seen = Vector.empty[DataFrame]
+    val g = PipeGraph.builder
+      .inputs("in", range(50))
+      .stage("in", "out") { df =>
+        seen :+= df
+        val boom = udf((v: Long) =>
+          if (v >= 40) throw new RuntimeException("task panicked") else v)
+        df.select(boom(col("v")).as("v"))
+      }
+      .consumer("out")(df => { seen :+= df; df.collect(); () })
+      .build().toOption.get
+    intercept[Exception](g.run(spark))
+    assert(seen.length == 2)
+    assert(seen.forall(_.storageLevel == StorageLevel.NONE))
+    assert(persistentRddIds.subsetOf(before))
+  }
+
+  test("a pipe the caller already cached is used as is and stays cached") {
+    val evals = spark.sparkContext.longAccumulator("cached_evals")
+    val cached = counted(evals)(range(40)(spark)).cache()
+    try {
+      assert(cached.count() == 40 && evals.value == 40)
+      var total = 0L
+      val g = PipeGraph.builder
+        .producer("in")(_ => cached)
+        .stage("in", "out")(df => df.filter(col("v") % 2 === 0))
+        .consumer("out")(df => total = df.count())
+        .build().toOption.get
+      g.run(spark)
+      assert(total == 20)
+      assert(evals.value == 40, "the caller's cache was bypassed")
+      assert(cached.storageLevel != StorageLevel.NONE)
+      assert(cached.count() == 40 && evals.value == 40)
+    } finally cached.unpersist(blocking = true)
   }
 
   test("cycle that never converges hits maxIterations") {
