@@ -67,9 +67,7 @@ object Bench {
       // the graph queries (r11 verdict #4 — per-run infrastructure, like a
       // persisted edge table in production); sweeping it would force each
       // graph query to re-derive it, which is exactly the waste it removes.
-      val keep = graft.operators.CoPurchaseGraph.sharedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
+      graft.operators.CoPurchaseGraph.sweepLeftovers(spark)
       dt
     }
 

@@ -42,9 +42,7 @@ object PlanDump {
       }
       // Same hygiene as Bench: drop leftover checkpoint blocks so one
       // query's materialized lineage can't distort the next one's probes.
-      val keep = graft.operators.CoPurchaseGraph.sharedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
+      graft.operators.CoPurchaseGraph.sweepLeftovers(spark)
     }
     spark.stop()
   }

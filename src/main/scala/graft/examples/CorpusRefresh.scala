@@ -1,8 +1,9 @@
 package graft.examples
 
 import graft.{Sessions, Tables}
+import graft.operators.TextOps
 import graft.pipeline.PipeGraph
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental corpus-refresh pipeline — the companion to
@@ -33,9 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusRefresh {
 
-  private def toks: Column =
-    filter(split(lower(col("text")), " "), (w: Column) => w =!= "")
-
   /** New-snapshot docs that are content-novel vs the existing corpus. */
   def novelDocs(docs: DataFrame): DataFrame = {
     val fp = docs.withColumn("fp", md5(col("text")))
@@ -48,7 +46,7 @@ object CorpusRefresh {
   /** Docs whose passages are mostly (≥ threshold) duplicated corpus-wide. */
   def passageDupFraction(docs: DataFrame): DataFrame = {
     val chunks = docs
-      .select(col("doc_id"), toks.as("ts"))
+      .select(col("doc_id"), TextOps.tokenArray(col("text")).as("ts"))
       .select(col("doc_id"),
         explode(sequence(lit(0L),
           greatest(size(col("ts")).cast("long") - 1, lit(0L)),
@@ -73,7 +71,7 @@ object CorpusRefresh {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
     docs
-      .withColumn("n_tok", size(toks).cast("long"))
+      .withColumn("n_tok", size(TextOps.tokenArray(col("text"))).cast("long"))
       .withColumn("cum", sum(col("n_tok")).over(w) - col("n_tok"))
       .filter(col("cum") < budget)
   }

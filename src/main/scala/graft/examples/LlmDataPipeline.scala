@@ -3,7 +3,7 @@ package graft.examples
 import graft.{Sessions, Tables}
 import graft.operators.{Dedup, TextAnalysis, TextOps}
 import graft.pipeline.PipeGraph
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end LLM training-data pipeline — the "switch from the reference"
@@ -47,16 +47,9 @@ object LlmDataPipeline {
       .stage("docs", "enriched") { docs =>
         // Top-bigram repetition ratio (the x42 gate): repetitive docs have
         // one bigram dominating their bigram stream.
-        val toks = filter(split(lower(col("text")), " "), (w: Column) => w =!= "")
-        val rep = docs
-          .select(col("doc_id"), toks.as("toks"))
-          .select(col("doc_id"), explode(when(size(col("toks")) >= 2,
-            zip_with(slice(col("toks"), lit(1), size(col("toks")) - 1),
-              slice(col("toks"), lit(2), size(col("toks")) - 1),
-              (a, b) => concat(a, lit(" "), b))).otherwise(array())).as("bigram"))
-          .groupBy("doc_id", "bigram").agg(count(lit(1)).as("c"))
+        val rep = TextAnalysis.bigramCounts(docs)
           .groupBy("doc_id")
-          .agg((max(col("c")) * 5 > sum(col("c"))).as("repetitive"))
+          .agg(TextAnalysis.topBigramRepetitive(max(col("c")), sum(col("c"))).as("repetitive"))
         // OOV rate vs the corpus head vocabulary (the x72 signal): the
         // vocabulary is an aggregate — tiny at any corpus size — so the
         // per-doc pass is one broadcast join over the token stream.
@@ -141,7 +134,7 @@ object LlmDataPipeline {
         // per source (the x87 op) — the output is ready-to-batch training
         // sequences. Both passes are narrow except the per-source packing
         // window.
-        val ts = filter(split(lower(col("text")), " "), (w: Column) => w =!= "")
+        val ts = TextOps.tokenArray(col("text"))
         val cap = greatest(size(col("ts")).cast("long") - 64, lit(0L))
         val chunks = train
           .select(col("doc_id"), col("source"), ts.as("ts"))

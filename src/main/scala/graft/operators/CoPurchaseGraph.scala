@@ -33,8 +33,8 @@ import org.apache.spark.storage.StorageLevel
   * holds (r9's isolation rationale traded ~6 s of redundant derivation
   * per sf0.1 run for a property the symmetry already guarantees).
   *
-  * Liveness: the cache survives Bench's per-query persistent-RDD sweep
-  * (Bench skips [[sharedRddIds]]); anything else that unpersists the
+  * Liveness: the cache survives the per-query persistent-RDD sweep
+  * ([[sweepLeftovers]] skips its blocks); anything else that unpersists the
   * blocks (ScalingSlopeSpec's full sweep, a stopped context) is detected
   * by [[alive]] and the table is re-derived on next access — a dropped
   * shared view degrades to the old per-query behavior, never to an error.
@@ -60,16 +60,25 @@ object CoPurchaseGraph {
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   /** RDD ids backing live shared tables OF THIS SESSION's context —
-    * Bench's per-query sweep must not unpersist these (the whole point
-    * is cross-query reuse). Scoped to the session's applicationId so a
+    * the per-query sweep must not unpersist these (the whole point is
+    * cross-query reuse). Scoped to the session's applicationId so a
     * fresh context never inherits exemptions from a dead one.
     */
-  def sharedRddIds(s: SparkSession): Set[Int] = {
+  private def sharedRddIds(s: SparkSession): Set[Int] = {
     import scala.jdk.CollectionConverters._
     val prefix = s.sparkContext.applicationId + "|"
     sharedByKey.asScala.collect {
       case (k, id) if k.startsWith(prefix) => id
     }.toSet
+  }
+
+  /** The per-query leftover sweep: unpersists (non-blocking) every
+    * persistent RDD of `s`'s context except [[sharedRddIds]].
+    */
+  def sweepLeftovers(s: SparkSession): Unit = {
+    val keep = sharedRddIds(s)
+    s.sparkContext.getPersistentRDDs.values
+      .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
   }
 
   private def backingRdd(df: DataFrame) =

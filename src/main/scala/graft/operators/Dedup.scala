@@ -349,8 +349,7 @@ object Dedup {
     * tokens of (+1 if token-hash bit i set else -1).
     */
   def simhashFingerprints(docs: DataFrame): DataFrame =
-    simhashFingerprintsNarrow(docs,
-      filter(split(lower(col("text")), " "), w => w =!= ""))
+    simhashFingerprintsNarrow(docs, TextOps.tokenArray(col("text")))
 
   /** Character n-gram units (doc_id, w): every `n`-char sliding window of
     * the lowercased text. The tokenization-robust feature source production

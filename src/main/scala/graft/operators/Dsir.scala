@@ -104,8 +104,7 @@ object Dsir {
        |  FROM documents),
        | toks AS (
        |   SELECT doc_id,
-       |          unnest(list_filter(string_split(lower(text), ' '),
-       |                             x -> x <> '')) AS w
+       |          unnest(${TextOps.tokenArraySql}) AS w
        |   FROM g),
        | bt AS (SELECT doc_id,
        |               CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) % $F AS b

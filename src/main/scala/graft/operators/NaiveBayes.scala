@@ -128,52 +128,51 @@ object NaiveBayes {
   }
 
   private val confusionSql: String =
-    """WITH g AS (
-      |  SELECT doc_id, lang,
-      |         CASE WHEN doc_id % 3 <> 0
-      |              THEN text || ' mk_' || lang || ' mk_' || lang
-      |                        || ' mk_' || lang
-      |              ELSE text END AS text
-      |  FROM documents),
-      | toks AS (
-      |   SELECT doc_id,
-      |          unnest(list_filter(string_split(lower(text), ' '),
-      |                             x -> x <> '')) AS w
-      |   FROM g),
-      | tr AS (SELECT doc_id, lang FROM g WHERE doc_id % 10 < 8),
-      | te AS (SELECT doc_id, lang FROM g WHERE doc_id % 10 >= 8),
-      | ttr AS (SELECT t.doc_id, t.w, d.lang AS c
-      |         FROM toks t JOIN tr d USING (doc_id)),
-      | cwc AS (SELECT c, w, count(*) AS cwc FROM ttr GROUP BY 1, 2),
-      | nc AS (SELECT c, count(*) AS nc FROM ttr GROUP BY 1),
-      | vocab AS (SELECT count(DISTINCT w) AS v FROM ttr),
-      | dc AS (SELECT lang AS c, count(*) AS dc FROM tr GROUP BY 1),
-      | dt AS (SELECT count(*) AS dt FROM tr),
-      | classes AS (
-      |   SELECT nc.c, nc.nc, vocab.v,
-      |          CAST(CAST(round(-ln(CAST(dc.dc AS DOUBLE) / dt.dt), 6)
-      |            AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS prior_unat
-      |   FROM nc JOIN dc USING (c) CROSS JOIN dt CROSS JOIN vocab),
-      | tcnt AS (SELECT t.doc_id, t.w, count(*) AS cnt
-      |          FROM toks t JOIN te USING (doc_id) GROUP BY 1, 2),
-      | scored AS (
-      |   SELECT tc.doc_id, cl.c,
-      |          sum(tc.cnt * CAST(CAST(round(-ln(
-      |              CAST(coalesce(m.cwc, 0) + 1 AS DOUBLE)
-      |              / (CAST(cl.nc AS DOUBLE) + cl.v)), 6)
-      |            AS DECIMAL(18,6)) * 1000000 AS BIGINT))
-      |          + any_value(cl.prior_unat) AS score
-      |   FROM tcnt tc CROSS JOIN classes cl
-      |   LEFT JOIN cwc m ON m.c = cl.c AND m.w = tc.w
-      |   GROUP BY 1, 2),
-      | mn AS (SELECT doc_id, min(score) AS m FROM scored GROUP BY 1),
-      | pred AS (SELECT s.doc_id, min(s.c) AS predicted
-      |          FROM scored s
-      |          JOIN mn ON s.doc_id = mn.doc_id AND s.score = mn.m
-      |          GROUP BY 1)
-      |SELECT d.lang AS actual, p.predicted, CAST(count(*) AS BIGINT) AS n
-      |FROM pred p JOIN te d ON p.doc_id = d.doc_id
-      |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+    s"""WITH g AS (
+       |  SELECT doc_id, lang,
+       |         CASE WHEN doc_id % 3 <> 0
+       |              THEN text || ' mk_' || lang || ' mk_' || lang
+       |                        || ' mk_' || lang
+       |              ELSE text END AS text
+       |  FROM documents),
+       | toks AS (
+       |   SELECT doc_id,
+       |          unnest(${TextOps.tokenArraySql}) AS w
+       |   FROM g),
+       | tr AS (SELECT doc_id, lang FROM g WHERE doc_id % 10 < 8),
+       | te AS (SELECT doc_id, lang FROM g WHERE doc_id % 10 >= 8),
+       | ttr AS (SELECT t.doc_id, t.w, d.lang AS c
+       |         FROM toks t JOIN tr d USING (doc_id)),
+       | cwc AS (SELECT c, w, count(*) AS cwc FROM ttr GROUP BY 1, 2),
+       | nc AS (SELECT c, count(*) AS nc FROM ttr GROUP BY 1),
+       | vocab AS (SELECT count(DISTINCT w) AS v FROM ttr),
+       | dc AS (SELECT lang AS c, count(*) AS dc FROM tr GROUP BY 1),
+       | dt AS (SELECT count(*) AS dt FROM tr),
+       | classes AS (
+       |   SELECT nc.c, nc.nc, vocab.v,
+       |          CAST(CAST(round(-ln(CAST(dc.dc AS DOUBLE) / dt.dt), 6)
+       |            AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS prior_unat
+       |   FROM nc JOIN dc USING (c) CROSS JOIN dt CROSS JOIN vocab),
+       | tcnt AS (SELECT t.doc_id, t.w, count(*) AS cnt
+       |          FROM toks t JOIN te USING (doc_id) GROUP BY 1, 2),
+       | scored AS (
+       |   SELECT tc.doc_id, cl.c,
+       |          sum(tc.cnt * CAST(CAST(round(-ln(
+       |              CAST(coalesce(m.cwc, 0) + 1 AS DOUBLE)
+       |              / (CAST(cl.nc AS DOUBLE) + cl.v)), 6)
+       |            AS DECIMAL(18,6)) * 1000000 AS BIGINT))
+       |          + any_value(cl.prior_unat) AS score
+       |   FROM tcnt tc CROSS JOIN classes cl
+       |   LEFT JOIN cwc m ON m.c = cl.c AND m.w = tc.w
+       |   GROUP BY 1, 2),
+       | mn AS (SELECT doc_id, min(score) AS m FROM scored GROUP BY 1),
+       | pred AS (SELECT s.doc_id, min(s.c) AS predicted
+       |          FROM scored s
+       |          JOIN mn ON s.doc_id = mn.doc_id AND s.score = mn.m
+       |          GROUP BY 1)
+       |SELECT d.lang AS actual, p.predicted, CAST(count(*) AS BIGINT) AS n
+       |FROM pred p JOIN te d ON p.doc_id = d.doc_id
+       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef(

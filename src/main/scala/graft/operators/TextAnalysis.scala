@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over `documents` (north-star ops): wordcount
@@ -146,6 +146,28 @@ object TextAnalysis {
        |JOIN (SELECT doc_id, count(*) AS ws_tokens, count(DISTINCT w) AS distinct_tokens
        |      FROM (${TextOps.tokensSql}) toks GROUP BY doc_id) t
        |  ON d.doc_id = t.doc_id""".stripMargin
+
+  /** Per-doc bigram occurrence counts (doc_id, bigram, c). */
+  def bigramCounts(docs: DataFrame): DataFrame =
+    TextOps.withToks(docs)
+      .select(col("doc_id"), explode(TextOps.bigramArray(col("toks"))).as("bigram"))
+      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("c"))
+
+  /** Oracle-side rendering of [[bigramCounts]]. */
+  val bigramCountsSql: String =
+    s"""SELECT doc_id, bigram, count(*) AS c FROM (
+       |  SELECT doc_id, unnest(${TextOps.bigramArraySql}) AS bigram
+       |  FROM (SELECT doc_id, ${TextOps.tokenArraySql} AS toks
+       |        FROM documents) t) b
+       |GROUP BY 1, 2""".stripMargin
+
+  /** Gopher-style repetition gate: the doc's top bigram count is over 20%
+    * of its bigram total, in integer form (no float in the gate).
+    */
+  def topBigramRepetitive(top: Column, total: Column): Column = top * 5 > total
+
+  /** Oracle-side rendering of [[topBigramRepetitive]]. */
+  def topBigramRepetitiveSql(top: String, total: String): String = s"$top * 5 > $total"
 
   /** Content fingerprint: md5 of whitespace-normalized lowercase text.
     * (The rolling-hash variant lives in the SimHash operator; md5 keeps

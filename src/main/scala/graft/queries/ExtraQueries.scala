@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{dsum, dsumSql}
+import graft.operators.TextOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,7 +86,7 @@ object ExtraQueries {
     QueryDef(
       "x28_array_funcs",
       (s, dir) => {
-        val toks = filter(split(lower(col("text")), " "), (w: org.apache.spark.sql.Column) => w =!= "")
+        val toks = TextOps.tokenArray(col("text"))
         Tables.documents(s, dir)
           .select(col("doc_id"),
             size(toks).cast("long").as("n_toks"),
@@ -93,13 +94,13 @@ object ExtraQueries {
             array_contains(toks, "the").as("has_the"))
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id,
-             |       CAST(len(toks) AS BIGINT) AS n_toks,
-             |       array_to_string(list_sort(toks)[1:3], ',') AS first3,
-             |       list_contains(toks, 'the') AS has_the
-             |FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-             |      FROM documents) t
-             |ORDER BY doc_id""".stripMargin)),
+      Some(s"""SELECT doc_id,
+              |       CAST(len(toks) AS BIGINT) AS n_toks,
+              |       array_to_string(list_sort(toks)[1:3], ',') AS first3,
+              |       list_contains(toks, 'the') AS has_the
+              |FROM (SELECT doc_id, ${TextOps.tokenArraySql} AS toks
+              |      FROM documents) t
+              |ORDER BY doc_id""".stripMargin)),
 
     // Map scalar functions (§2.B scalar row: map family): parse the JSON
     // props into a typed MapType, then element_at + map_keys.

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{dsum, dsumSql}
-import graft.operators.Skew
+import graft.operators.{Skew, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -235,25 +235,17 @@ object Round2Queries {
     // references `toks` from a materialized projection instead.
     QueryDef(
       "x38_bigrams",
-      (s, dir) => {
-        val toks = col("toks")
-        val bigrams = when(size(toks) >= 2,
-          zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
-            (a, b) => concat(a, lit(" "), b)))
-          .otherwise(array())
+      (s, dir) =>
         Tables.documents(s, dir)
-          .select(filter(split(lower(col("text")), " "),
-            (w: Column) => w =!= "").as("toks"))
-          .select(explode(bigrams).as("bigram"))
+          .select(TextOps.tokenArray(col("text")).as("toks"))
+          .select(explode(TextOps.bigramArray(col("toks"))).as("bigram"))
           .groupBy("bigram").agg(count(lit(1)).as("c"))
           .orderBy(desc("c"), col("bigram"))
-          .limit(20)
-      },
-      Some("""SELECT bigram, count(*) AS c FROM (
-             |  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
-             |                               j -> toks[j] || ' ' || toks[j + 1])) AS bigram
-             |  FROM (SELECT list_filter(string_split(lower(text), ' '), x -> x <> '') AS toks
-             |        FROM documents) t) b
-             |GROUP BY bigram ORDER BY c DESC, bigram LIMIT 20""".stripMargin))
+          .limit(20),
+      Some(s"""SELECT bigram, count(*) AS c FROM (
+              |  SELECT unnest(${TextOps.bigramArraySql}) AS bigram
+              |  FROM (SELECT ${TextOps.tokenArraySql} AS toks
+              |        FROM documents) t) b
+              |GROUP BY bigram ORDER BY c DESC, bigram LIMIT 20""".stripMargin))
   )
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{dsum, dsumSql}
+import graft.operators.{TextAnalysis, TextOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -101,8 +102,7 @@ object Round3Queries {
       "x41_top_tfidf_term",
       (s, dir) => {
         val toks = Tables.documents(s, dir).select(col("doc_id"),
-          explode(filter(split(lower(col("text")), " "),
-            (w: Column) => w =!= "")).as("term"))
+          explode(TextOps.tokenArray(col("text"))).as("term"))
         val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
         val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
         val w = org.apache.spark.sql.expressions.Window
@@ -114,19 +114,18 @@ object Round3Queries {
           .select("doc_id", "term", "tf", "df")
           .orderBy("doc_id")
       },
-      Some("""SELECT doc_id, term, tf, df FROM (
-             |  SELECT doc_id, term, tf, df,
-             |         row_number() OVER (PARTITION BY doc_id
-             |                            ORDER BY tf DESC, df ASC, term ASC) AS rn
-             |  FROM (
-             |    SELECT doc_id, term, count(*) AS tf,
-             |           CAST(count(*) OVER (PARTITION BY term) AS BIGINT) AS df
-             |    FROM (
-             |      SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '),
-             |                                        x -> x <> '')) AS term
-             |      FROM documents) tk
-             |    GROUP BY 1, 2) tfd) ranked
-             |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
+      Some(s"""SELECT doc_id, term, tf, df FROM (
+              |  SELECT doc_id, term, tf, df,
+              |         row_number() OVER (PARTITION BY doc_id
+              |                            ORDER BY tf DESC, df ASC, term ASC) AS rn
+              |  FROM (
+              |    SELECT doc_id, term, count(*) AS tf,
+              |           CAST(count(*) OVER (PARTITION BY term) AS BIGINT) AS df
+              |    FROM (
+              |      SELECT doc_id, unnest(${TextOps.tokenArraySql}) AS term
+              |      FROM documents) tk
+              |    GROUP BY 1, 2) tfd) ranked
+              |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
     // Repetition-based quality gate (the Gopher-style "top 2-gram ratio"
     // filter): a document whose most frequent bigram exceeds 20% of its
@@ -135,39 +134,21 @@ object Round3Queries {
     // shuffle on (doc, bigram), one on doc; both keys well-distributed.
     QueryDef(
       "x42_bigram_repetition",
-      (s, dir) => {
-        val toks = col("toks")
-        val bigrams = when(size(toks) >= 2,
-          zip_with(slice(toks, lit(1), size(toks) - 1),
-            slice(toks, lit(2), size(toks) - 1),
-            (a, b) => concat(a, lit(" "), b)))
-          .otherwise(array())
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            filter(split(lower(col("text")), " "),
-              (w: Column) => w =!= "").as("toks"))
-          .select(col("doc_id"), explode(bigrams).as("bigram"))
-          .groupBy("doc_id", "bigram").agg(count(lit(1)).as("c"))
+      (s, dir) =>
+        TextAnalysis.bigramCounts(Tables.documents(s, dir))
           .groupBy("doc_id")
           .agg(max(col("c")).as("top_cnt"), sum(col("c")).as("total"))
           .select(col("doc_id"), col("top_cnt"), col("total"),
-            (col("top_cnt") * 5 > col("total")).as("repetitive"))
-          .orderBy("doc_id")
-      },
-      Some("""SELECT doc_id, top_cnt, total, top_cnt * 5 > total AS repetitive
-             |FROM (
-             |  SELECT doc_id, max(c) AS top_cnt, CAST(sum(c) AS BIGINT) AS total
-             |  FROM (
-             |    SELECT doc_id, bigram, count(*) AS c FROM (
-             |      SELECT doc_id,
-             |             unnest(list_transform(generate_series(1, len(toks) - 1),
-             |                                   j -> toks[j] || ' ' || toks[j + 1])) AS bigram
-             |      FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-             |                                       x -> x <> '') AS toks
-             |            FROM documents) t) b
-             |    GROUP BY 1, 2) g
-             |  GROUP BY 1) agg
-             |ORDER BY doc_id""".stripMargin)),
+            TextAnalysis.topBigramRepetitive(col("top_cnt"), col("total")).as("repetitive"))
+          .orderBy("doc_id"),
+      Some(s"""SELECT doc_id, top_cnt, total,
+              |       ${TextAnalysis.topBigramRepetitiveSql("top_cnt", "total")} AS repetitive
+              |FROM (
+              |  SELECT doc_id, max(c) AS top_cnt, CAST(sum(c) AS BIGINT) AS total
+              |  FROM (
+              |    ${TextAnalysis.bigramCountsSql}) g
+              |  GROUP BY 1) agg
+              |ORDER BY doc_id""".stripMargin)),
 
     // Unpivot (wide→long, the inverse of x32's pivot): three lineitem
     // measures melted into (metric, val) rows, then aggregated per metric.

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{dsum, dsumSql}
+import graft.operators.TextOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -301,8 +302,7 @@ object Round4bQueries {
     QueryDef(
       "x86_chunking",
       (s, dir) => {
-        val ts = filter(split(lower(col("text")), " "),
-          (w: org.apache.spark.sql.Column) => w =!= "")
+        val ts = TextOps.tokenArray(col("text"))
         val cap = greatest(size(col("ts")).cast("long") - 10, lit(0L))
         Tables.documents(s, dir)
           .select(col("doc_id"), ts.as("ts"))
@@ -314,19 +314,19 @@ object Round4bQueries {
               (col("chunk_start") + 1).cast("int"), lit(10)), " ").as("chunk"))
           .orderBy("doc_id", "chunk_start")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id,
-             |         list_filter(string_split(lower(text), ' '), x -> x <> '') AS ts
-             |  FROM documents),
-             | chunks AS (
-             |  SELECT doc_id, ts,
-             |         unnest(list_distinct(list_append(generate_series(0,
-             |           CAST(greatest(len(ts) - 10, 0) AS BIGINT), 5),
-             |           CAST(greatest(len(ts) - 10, 0) AS BIGINT)))) AS chunk_start
-             |  FROM toks)
-             |SELECT doc_id, chunk_start,
-             |       array_to_string(list_slice(ts, chunk_start + 1, chunk_start + 10), ' ') AS chunk
-             |FROM chunks ORDER BY 1, 2""".stripMargin)),
+      Some(s"""WITH toks AS (
+              |  SELECT doc_id,
+              |         ${TextOps.tokenArraySql} AS ts
+              |  FROM documents),
+              | chunks AS (
+              |  SELECT doc_id, ts,
+              |         unnest(list_distinct(list_append(generate_series(0,
+              |           CAST(greatest(len(ts) - 10, 0) AS BIGINT), 5),
+              |           CAST(greatest(len(ts) - 10, 0) AS BIGINT)))) AS chunk_start
+              |  FROM toks)
+              |SELECT doc_id, chunk_start,
+              |       array_to_string(list_slice(ts, chunk_start + 1, chunk_start + 10), ' ') AS chunk
+              |FROM chunks ORDER BY 1, 2""".stripMargin)),
 
     // Sequence packing by cumulative token budget, PER SOURCE: each
     // source shard packs its docs (doc_id order) into 512-token bins via
@@ -337,8 +337,7 @@ object Round4bQueries {
     QueryDef(
       "x87_seq_packing",
       (s, dir) => {
-        val ts = filter(split(lower(col("text")), " "),
-          (w: org.apache.spark.sql.Column) => w =!= "")
+        val ts = TextOps.tokenArray(col("text"))
         val w = Window.partitionBy("source").orderBy("doc_id")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         Tables.documents(s, dir)
@@ -349,15 +348,14 @@ object Round4bQueries {
               .cast("long"))
           .orderBy("doc_id")
       },
-      Some("""WITH n AS (
-             |  SELECT doc_id, source,
-             |         CAST(len(list_filter(string_split(lower(text), ' '),
-             |           x -> x <> '')) AS BIGINT) AS n_tok
-             |  FROM documents)
-             |SELECT doc_id, source, n_tok,
-             |       CAST((sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id)
-             |             - n_tok) // 512 AS BIGINT) AS bin
-             |FROM n ORDER BY 1""".stripMargin)),
+      Some(s"""WITH n AS (
+              |  SELECT doc_id, source,
+              |         CAST(len(${TextOps.tokenArraySql}) AS BIGINT) AS n_tok
+              |  FROM documents)
+              |SELECT doc_id, source, n_tok,
+              |       CAST((sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id)
+              |             - n_tok) // 512 AS BIGINT) AS bin
+              |FROM n ORDER BY 1""".stripMargin)),
 
     // TPC-H Q21 shape (suppliers solely at fault): combined correlated
     // EXISTS + NOT EXISTS on the same fact — the hardest anti-join

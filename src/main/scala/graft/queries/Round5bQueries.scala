@@ -143,8 +143,7 @@ object Round5bQueries {
     QueryDef(
       "x106_budget_mix",
       (s, dir) => {
-        val ntok = size(filter(split(lower(col("text")), " "),
-          w => w =!= ""))
+        val ntok = size(TextOps.tokenArray(col("text")))
         val w = Window.partitionBy("source")
           .orderBy(col("mk"), col("doc_id"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -158,22 +157,21 @@ object Round5bQueries {
             sum(col("ntok")).as("toks_sel"))
           .orderBy("source")
       },
-      Some("""WITH scored AS (
-             |  SELECT doc_id, source,
-             |         len(list_filter(string_split(lower(text), ' '),
-             |             x -> x <> '')) AS ntok,
-             |         md5(text) AS mk
-             |  FROM documents),
-             | cum AS (
-             |  SELECT source, ntok,
-             |         sum(ntok) OVER (PARTITION BY source
-             |                         ORDER BY mk, doc_id
-             |                         ROWS BETWEEN UNBOUNDED PRECEDING
-             |                              AND CURRENT ROW) AS cum
-             |  FROM scored)
-             |SELECT source, count(*) AS docs_sel,
-             |       CAST(sum(ntok) AS BIGINT) AS toks_sel
-             |FROM cum WHERE cum <= 800
-             |GROUP BY 1 ORDER BY 1""".stripMargin))
+      Some(s"""WITH scored AS (
+              |  SELECT doc_id, source,
+              |         len(${TextOps.tokenArraySql}) AS ntok,
+              |         md5(text) AS mk
+              |  FROM documents),
+              | cum AS (
+              |  SELECT source, ntok,
+              |         sum(ntok) OVER (PARTITION BY source
+              |                         ORDER BY mk, doc_id
+              |                         ROWS BETWEEN UNBOUNDED PRECEDING
+              |                              AND CURRENT ROW) AS cum
+              |  FROM scored)
+              |SELECT source, count(*) AS docs_sel,
+              |       CAST(sum(ntok) AS BIGINT) AS toks_sel
+              |FROM cum WHERE cum <= 800
+              |GROUP BY 1 ORDER BY 1""".stripMargin))
   )
 }

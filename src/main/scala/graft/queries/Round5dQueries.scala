@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.{dsum, dsumSql}
+import graft.operators.TextOps
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,7 +35,7 @@ object Round5dQueries {
     QueryDef(
       "x113_passage_dedup",
       (s, dir) => {
-        val ts = filter(split(lower(col("text")), " "), (w: Column) => w =!= "")
+        val ts = TextOps.tokenArray(col("text"))
         val chunks = Tables.documents(s, dir)
           .select(col("doc_id"), ts.as("ts"))
           .select(col("doc_id"),
@@ -53,27 +54,27 @@ object Round5dQueries {
             sum(when(col("nd") > 1, 1L).otherwise(0L)).as("n_dup"))
           .orderBy("doc_id")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id,
-             |         list_filter(string_split(lower(text), ' '), x -> x <> '') AS ts
-             |  FROM documents),
-             | c AS (
-             |  SELECT doc_id,
-             |         unnest(generate_series(0,
-             |           CAST(greatest(len(ts) - 1, 0) AS BIGINT), 10)) AS start,
-             |         ts
-             |  FROM toks),
-             | p AS (
-             |  SELECT doc_id, start,
-             |         array_to_string(list_slice(ts, start + 1, start + 10), ' ')
-             |           AS passage
-             |  FROM c),
-             | spread AS (
-             |  SELECT passage, count(DISTINCT doc_id) AS nd FROM p GROUP BY 1)
-             |SELECT doc_id, count(*) AS n_passages,
-             |       CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
-             |FROM p JOIN spread USING (passage)
-             |GROUP BY 1 ORDER BY 1""".stripMargin)),
+      Some(s"""WITH toks AS (
+              |  SELECT doc_id,
+              |         ${TextOps.tokenArraySql} AS ts
+              |  FROM documents),
+              | c AS (
+              |  SELECT doc_id,
+              |         unnest(generate_series(0,
+              |           CAST(greatest(len(ts) - 1, 0) AS BIGINT), 10)) AS start,
+              |         ts
+              |  FROM toks),
+              | p AS (
+              |  SELECT doc_id, start,
+              |         array_to_string(list_slice(ts, start + 1, start + 10), ' ')
+              |           AS passage
+              |  FROM c),
+              | spread AS (
+              |  SELECT passage, count(DISTINCT doc_id) AS nd FROM p GROUP BY 1)
+              |SELECT doc_id, count(*) AS n_passages,
+              |       CAST(sum(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup
+              |FROM p JOIN spread USING (passage)
+              |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // Explicitly salted join — the generic hot-key defense when the big
     // side of a shuffle join has skewed keys and the small side is too big

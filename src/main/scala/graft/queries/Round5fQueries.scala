@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.Column
+import graft.operators.TextOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,7 @@ object Round5fQueries {
         // exchange/sort. pos is now 1-based (was 0-based); every
         // downstream use (lag difference, island break, max+k-min) is
         // shift-invariant, so the output is unchanged.
-        val grams = graft.operators.TextOps
-          .positionedGrams(Tables.documents(s, dir), k)
+        val grams = TextOps.positionedGrams(Tables.documents(s, dir), k)
         val spread = grams.groupBy("gram")
           .agg(countDistinct(col("doc_id")).as("nd"))
         val dup = grams.join(spread, "gram").filter(col("nd") > 1)
@@ -59,41 +58,41 @@ object Round5fQueries {
             coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
           .orderBy("doc_id")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id,
-             |         generate_subscripts(list_filter(string_split(lower(text), ' '), x -> x <> ''), 1) - 1 AS pos,
-             |         unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS w
-             |  FROM documents),
-             | grams AS (
-             |  SELECT doc_id, pos,
-             |         w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
-             |           || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win AS gram
-             |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-             | g AS (SELECT doc_id, pos, gram FROM grams WHERE gram IS NOT NULL),
-             | spread AS (
-             |  SELECT gram FROM g GROUP BY 1 HAVING count(DISTINCT doc_id) > 1),
-             | dup AS (SELECT doc_id, pos FROM g JOIN spread USING (gram)),
-             | marked AS (
-             |  SELECT doc_id, pos,
-             |         CASE WHEN pos > coalesce(lag(pos) OVER w2, -1000000) + 5
-             |              THEN 1 ELSE 0 END AS newSpan
-             |  FROM dup WINDOW w2 AS (PARTITION BY doc_id ORDER BY pos)),
-             | islands AS (
-             |  SELECT doc_id, pos,
-             |         sum(newSpan) OVER (PARTITION BY doc_id ORDER BY pos
-             |           ROWS UNBOUNDED PRECEDING) AS island
-             |  FROM marked),
-             | spans AS (
-             |  SELECT doc_id, island, max(pos) + 5 - min(pos) AS len
-             |  FROM islands GROUP BY 1, 2),
-             | per_doc AS (
-             |  SELECT doc_id, count(*) AS n_spans, sum(len) AS dup_tokens
-             |  FROM spans GROUP BY 1)
-             |SELECT d.doc_id,
-             |       CAST(coalesce(n_spans, 0) AS BIGINT) AS n_spans,
-             |       CAST(coalesce(dup_tokens, 0) AS BIGINT) AS dup_tokens
-             |FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
-             |ORDER BY 1""".stripMargin)),
+      Some(s"""WITH toks AS (
+              |  SELECT doc_id,
+              |         generate_subscripts(${TextOps.tokenArraySql}, 1) - 1 AS pos,
+              |         unnest(${TextOps.tokenArraySql}) AS w
+              |  FROM documents),
+              | grams AS (
+              |  SELECT doc_id, pos,
+              |         w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
+              |           || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win AS gram
+              |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+              | g AS (SELECT doc_id, pos, gram FROM grams WHERE gram IS NOT NULL),
+              | spread AS (
+              |  SELECT gram FROM g GROUP BY 1 HAVING count(DISTINCT doc_id) > 1),
+              | dup AS (SELECT doc_id, pos FROM g JOIN spread USING (gram)),
+              | marked AS (
+              |  SELECT doc_id, pos,
+              |         CASE WHEN pos > coalesce(lag(pos) OVER w2, -1000000) + 5
+              |              THEN 1 ELSE 0 END AS newSpan
+              |  FROM dup WINDOW w2 AS (PARTITION BY doc_id ORDER BY pos)),
+              | islands AS (
+              |  SELECT doc_id, pos,
+              |         sum(newSpan) OVER (PARTITION BY doc_id ORDER BY pos
+              |           ROWS UNBOUNDED PRECEDING) AS island
+              |  FROM marked),
+              | spans AS (
+              |  SELECT doc_id, island, max(pos) + 5 - min(pos) AS len
+              |  FROM islands GROUP BY 1, 2),
+              | per_doc AS (
+              |  SELECT doc_id, count(*) AS n_spans, sum(len) AS dup_tokens
+              |  FROM spans GROUP BY 1)
+              |SELECT d.doc_id,
+              |       CAST(coalesce(n_spans, 0) AS BIGINT) AS n_spans,
+              |       CAST(coalesce(dup_tokens, 0) AS BIGINT) AS dup_tokens
+              |FROM documents d LEFT JOIN per_doc p ON d.doc_id = p.doc_id
+              |ORDER BY 1""".stripMargin)),
 
     // Rank-based quantile normalization per group — the ML-preprocessing
     // transform that maps each value to its empirical percentile
@@ -137,16 +136,14 @@ object Round5fQueries {
       "x129_decontam_rewrite",
       (s, dir) => {
         val k = 5
-        val toks = filter(split(lower(col("text")), " "),
-          (w: Column) => w =!= "")
+        val toks = TextOps.tokenArray(col("text"))
         val tokensOf = Tables.documents(s, dir)
           .select(col("doc_id"), posexplode(toks).as(Seq("pos", "w")))
         // NARROW since r17 (shared TextOps.positionedGrams, 1-based pos);
         // the covered-position explode shifts back to tokensOf's 0-based
         // positions (pos-1 .. pos-1+k-1), so the anti-join keys are
         // unchanged.
-        val grams = graft.operators.TextOps
-          .positionedGrams(Tables.documents(s, dir), k)
+        val grams = TextOps.positionedGrams(Tables.documents(s, dir), k)
         val benchGrams = grams.filter(col("doc_id") < 20)
           .select("gram").distinct()
         val covered = grams.filter(col("doc_id") >= 20)
@@ -169,43 +166,42 @@ object Round5fQueries {
             coalesce(col("clean_md5"), md5(lit(""))).as("clean_md5"))
           .orderBy("doc_id")
       },
-      Some("""WITH toks AS (
-             |  SELECT doc_id,
-             |         generate_subscripts(list_filter(string_split(lower(text), ' '), x -> x <> ''), 1) - 1 AS pos,
-             |         unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS w
-             |  FROM documents),
-             | grams AS (
-             |  SELECT doc_id, pos,
-             |         w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
-             |           || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win AS gram
-             |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-             | bench AS (
-             |  SELECT DISTINCT gram FROM grams
-             |  WHERE doc_id < 20 AND gram IS NOT NULL),
-             | covered AS (
-             |  SELECT DISTINCT g.doc_id,
-             |         unnest(generate_series(g.pos, g.pos + 4)) AS pos
-             |  FROM grams g JOIN bench USING (gram)
-             |  WHERE g.doc_id >= 20),
-             | kept AS (
-             |  SELECT t.doc_id, t.pos, t.w FROM toks t
-             |  WHERE t.doc_id >= 20 AND NOT EXISTS (
-             |    SELECT 1 FROM covered c
-             |    WHERE c.doc_id = t.doc_id AND c.pos = t.pos)),
-             | rebuilt AS (
-             |  SELECT doc_id, count(*) AS n_kept,
-             |         md5(string_agg(w, ' ' ORDER BY pos)) AS clean_md5
-             |  FROM kept GROUP BY 1),
-             | corpus AS (
-             |  SELECT doc_id,
-             |         CAST(len(list_filter(string_split(lower(text), ' '),
-             |           x -> x <> '')) AS BIGINT) AS n_tokens
-             |  FROM documents WHERE doc_id >= 20)
-             |SELECT c.doc_id, c.n_tokens,
-             |       CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
-             |       coalesce(r.clean_md5, md5('')) AS clean_md5
-             |FROM corpus c LEFT JOIN rebuilt r ON c.doc_id = r.doc_id
-             |ORDER BY 1""".stripMargin)),
+      Some(s"""WITH toks AS (
+              |  SELECT doc_id,
+              |         generate_subscripts(${TextOps.tokenArraySql}, 1) - 1 AS pos,
+              |         unnest(${TextOps.tokenArraySql}) AS w
+              |  FROM documents),
+              | grams AS (
+              |  SELECT doc_id, pos,
+              |         w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
+              |           || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win AS gram
+              |  FROM toks WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
+              | bench AS (
+              |  SELECT DISTINCT gram FROM grams
+              |  WHERE doc_id < 20 AND gram IS NOT NULL),
+              | covered AS (
+              |  SELECT DISTINCT g.doc_id,
+              |         unnest(generate_series(g.pos, g.pos + 4)) AS pos
+              |  FROM grams g JOIN bench USING (gram)
+              |  WHERE g.doc_id >= 20),
+              | kept AS (
+              |  SELECT t.doc_id, t.pos, t.w FROM toks t
+              |  WHERE t.doc_id >= 20 AND NOT EXISTS (
+              |    SELECT 1 FROM covered c
+              |    WHERE c.doc_id = t.doc_id AND c.pos = t.pos)),
+              | rebuilt AS (
+              |  SELECT doc_id, count(*) AS n_kept,
+              |         md5(string_agg(w, ' ' ORDER BY pos)) AS clean_md5
+              |  FROM kept GROUP BY 1),
+              | corpus AS (
+              |  SELECT doc_id,
+              |         CAST(len(${TextOps.tokenArraySql}) AS BIGINT) AS n_tokens
+              |  FROM documents WHERE doc_id >= 20)
+              |SELECT c.doc_id, c.n_tokens,
+              |       CAST(coalesce(r.n_kept, 0) AS BIGINT) AS n_kept,
+              |       coalesce(r.clean_md5, md5('')) AS clean_md5
+              |FROM corpus c LEFT JOIN rebuilt r ON c.doc_id = r.doc_id
+              |ORDER BY 1""".stripMargin)),
 
     // Temporal burstiness per user: the index of dispersion
     // (n·Σc² − (Σc)²) / (n·Σc) over the user's hourly event counts —

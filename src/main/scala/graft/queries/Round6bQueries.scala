@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
+import graft.operators.{LineOps, TextAnalysis, TextOps}
 import org.apache.spark.sql.functions._
 
 /** Round-6b: ordered-sequence analytics over the events stream.
@@ -688,8 +689,7 @@ object Round6bQueries {
     // per-source totals, per-source counts) each re-ran the tokenize
     // pipeline lazily.
     val toks = Tables.documents(s, dir).select(col("source"),
-      explode(filter(split(lower(col("text")), " "),
-        (w: org.apache.spark.sql.Column) => w =!= "")).as("w"))
+      explode(TextOps.tokenArray(col("text"))).as("w"))
       .localCheckpoint()
     val corpus = toks.groupBy("w").agg(count(lit(1)).as("c"))
     val total = corpus.agg(sum(col("c")).as("n"))
@@ -709,23 +709,23 @@ object Round6bQueries {
   }
 
   private val sourceDriftSql =
-    """WITH toks AS (
-      |  SELECT source,
-      |         unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS w
-      |  FROM documents),
-      |corpus AS (SELECT w, count(*) AS c FROM toks GROUP BY 1),
-      |total AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM corpus),
-      |vocab AS (SELECT w, CAST(c * 10000 // (SELECT n FROM total) AS BIGINT) AS corpus_per_10k
-      |          FROM corpus ORDER BY c DESC, w LIMIT 30),
-      |src_tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY 1),
-      |src_cnt AS (SELECT source, w, count(*) AS c FROM toks GROUP BY 1, 2),
-      |grid AS (
-      |  SELECT st.source, v.w, v.corpus_per_10k,
-      |         CAST(coalesce(sc.c, 0) * 10000 // st.n AS BIGINT) AS src_per_10k
-      |  FROM src_tot st CROSS JOIN vocab v
-      |  LEFT JOIN src_cnt sc ON sc.source = st.source AND sc.w = v.w)
-      |SELECT source, CAST(sum(abs(src_per_10k - corpus_per_10k)) AS BIGINT) AS l1_drift
-      |FROM grid GROUP BY 1 ORDER BY 1""".stripMargin
+    s"""WITH toks AS (
+       |  SELECT source,
+       |         unnest(${TextOps.tokenArraySql}) AS w
+       |  FROM documents),
+       |corpus AS (SELECT w, count(*) AS c FROM toks GROUP BY 1),
+       |total AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM corpus),
+       |vocab AS (SELECT w, CAST(c * 10000 // (SELECT n FROM total) AS BIGINT) AS corpus_per_10k
+       |          FROM corpus ORDER BY c DESC, w LIMIT 30),
+       |src_tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM toks GROUP BY 1),
+       |src_cnt AS (SELECT source, w, count(*) AS c FROM toks GROUP BY 1, 2),
+       |grid AS (
+       |  SELECT st.source, v.w, v.corpus_per_10k,
+       |         CAST(coalesce(sc.c, 0) * 10000 // st.n AS BIGINT) AS src_per_10k
+       |  FROM src_tot st CROSS JOIN vocab v
+       |  LEFT JOIN src_cnt sc ON sc.source = st.source AND sc.w = v.w)
+       |SELECT source, CAST(sum(abs(src_per_10k - corpus_per_10k)) AS BIGINT) AS l1_drift
+       |FROM grid GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** x156: the MassiveText-style combined filter as an AUDIT TABLE —
     * per doc, the keep/drop decision with its reason code, reasons
@@ -738,25 +738,14 @@ object Round6bQueries {
     */
   private[graft] def filterReport(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    import graft.operators.{LineOps, TextAnalysis}
     val docs = Tables.documents(s, dir)
     val lang = TextAnalysis.langId(docs).select("doc_id", "pred_lang")
     val qual = TextAnalysis.qualityScore(docs).select("doc_id", "quality")
     val reps = LineOps.lineRepetition(docs)
       .select(col("doc_id"), col("dup_line_per_10k"), col("dup_char_per_10k"))
-    val toks = col("toks")
-    val bigrams = when(size(toks) >= 2,
-      zip_with(slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => concat(a, lit(" "), b))).otherwise(array())
-    val big = docs
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), " "),
-          (w: org.apache.spark.sql.Column) => w =!= "").as("toks"))
-      .select(col("doc_id"), explode(bigrams).as("bigram"))
-      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("c"))
+    val big = TextAnalysis.bigramCounts(docs)
       .groupBy("doc_id")
-      .agg((max(col("c")) * 5 > sum(col("c"))).as("big_rep"))
+      .agg(TextAnalysis.topBigramRepetitive(max(col("c")), sum(col("c"))).as("big_rep"))
     docs.select("doc_id")
       .join(lang, "doc_id").join(qual, "doc_id")
       .join(reps, "doc_id").join(big, "doc_id")
@@ -770,22 +759,14 @@ object Round6bQueries {
       .orderBy("doc_id")
   }
 
-  private[queries] val filterReportSql: String = {
-    import graft.operators.{LineOps, TextAnalysis}
+  private[queries] val filterReportSql: String =
     s"""WITH lang AS (SELECT doc_id, pred_lang FROM (${TextAnalysis.langIdSql}) l),
        |qual AS (SELECT doc_id, quality FROM (${TextAnalysis.qualityScoreSql}) q),
        |reps AS (SELECT doc_id, dup_line_per_10k, dup_char_per_10k
        |         FROM (${LineOps.lineRepetitionSql}) r),
        |big AS (
-       |  SELECT doc_id, max(c) * 5 > sum(c) AS big_rep FROM (
-       |    SELECT doc_id, bigram, count(*) AS c FROM (
-       |      SELECT doc_id,
-       |             unnest(list_transform(generate_series(1, len(toks) - 1),
-       |                                   j -> toks[j] || ' ' || toks[j + 1])) AS bigram
-       |      FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-       |                                       x -> x <> '') AS toks
-       |            FROM documents) t) b
-       |    GROUP BY 1, 2) bc
+       |  SELECT doc_id, ${TextAnalysis.topBigramRepetitiveSql("max(c)", "sum(c)")} AS big_rep FROM (
+       |    ${TextAnalysis.bigramCountsSql}) bc
        |  GROUP BY 1)
        |SELECT d.doc_id,
        |       CASE WHEN lang.pred_lang <> 'en' THEN 'non_english'
@@ -798,7 +779,6 @@ object Round6bQueries {
        |JOIN lang USING (doc_id) JOIN qual USING (doc_id)
        |JOIN reps USING (doc_id) JOIN big USING (doc_id)
        |ORDER BY d.doc_id""".stripMargin
-  }
 
   val all: Seq[QueryDef] = Seq(
     QueryDef("x156_filter_report", filterReport, Some(filterReportSql)),

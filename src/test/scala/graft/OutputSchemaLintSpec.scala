@@ -41,9 +41,7 @@ class OutputSchemaLintSpec extends SparkSuite {
       // Sweep per-query checkpoint leftovers (the Bench.run discipline) so
       // 260+ constructions don't squeeze the shared test JVM; the shared
       // co-purchase graph is exempt — it exists to be reused.
-      val keep = graft.operators.CoPurchaseGraph.sharedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
+      graft.operators.CoPurchaseGraph.sweepLeftovers(spark)
       fields.flatMap { f =>
         f.dataType match {
           case dt: DecimalType =>
