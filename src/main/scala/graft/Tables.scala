@@ -22,6 +22,15 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
+
+  /** The events columns with `ts` as a raw long: the legacy nanos fixture
+    * as read, and the staged stream files (epoch micros).
+    */
+  private[graft] val rawEventsSchema: StructType = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", LongType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
+
   /** `events.ts` has shipped in two parquet encodings across fixture
     * generations: standard TIMESTAMP(MICROS) (current), and TIMESTAMP(NANOS)
     * (legacy), which Spark's schema inference rejects outright unless
@@ -56,11 +65,7 @@ object Tables {
           expr("convert_timezone('UTC', CAST(ts AS TIMESTAMP_NTZ))"))
       case scala.util.Success(LongType) =>
         // nanosAsLong inference: legacy TIMESTAMP(NANOS) surfaced as raw longs.
-        val raw = StructType(Seq(
-          StructField("event_id", LongType), StructField("ts", LongType),
-          StructField("user_id", LongType), StructField("event_type", StringType),
-          StructField("value", DoubleType), StructField("props", StringType)))
-        spark.read.schema(raw).parquet(path)
+        spark.read.schema(rawEventsSchema).parquet(path)
           .withColumn("ts", expr("CAST(timestamp_micros(ts DIV 1000) AS TIMESTAMP_NTZ)"))
       case other =>
         // Any other inference result (a new encoding, or an inference failure

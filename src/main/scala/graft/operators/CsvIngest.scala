@@ -28,38 +28,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   */
 object CsvIngest {
 
-  private def stage(spark: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
-    val src = Paths.get(dir, "events.parquet")
-    // Content-identity key: 128-bit MD5 over the SORTED per-file
-    // (name, size, mtime) listing — not a 32-bit hash of total bytes
-    // (r11 advice: a regenerated fixture with identical total size, or a
-    // 32-bit dir collision, would silently reuse a stale staged CSV while
-    // the oracle replays the fresh construction).
-    val listing = {
-      val files =
-        if (Files.isRegularFile(src)) Seq(src)
-        else {
-          val s = Files.list(src)
-          try {
-            val b = Seq.newBuilder[java.nio.file.Path]
-            val it = s.iterator()
-            while (it.hasNext) { val p = it.next(); if (Files.isRegularFile(p)) b += p }
-            b.result()
-          } finally s.close()
-        }
-      files.map(p => s"${p.getFileName}:${Files.size(p)}:" +
-          s"${Files.getLastModifiedTime(p).toMillis}")
-        .sorted.mkString(s"csv2|$dir|", "|", "")
-    }
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(listing.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
-    val staged = Paths.get(sys.props("java.io.tmpdir"), s"graft_csv_$key")
-    if (!Files.isDirectory(staged)) {
-      Staging.sweepStale("graft_csv_", _ == staged.getFileName.toString)
-      val tmp = Paths.get(staged.toString + "_tmp_" +
-        java.util.UUID.randomUUID().toString.take(8))
+  private def stage(spark: SparkSession, dir: String): String =
+    Staging.stage("graft_csv_", dir, Seq("events.parquet"), "", "csv2") { tmp =>
       val uid = when(col("event_id") % 13 === 5,
         concat(lit("x"), col("user_id").cast("string")))
         .otherwise(col("user_id").cast("string"))
@@ -80,19 +50,7 @@ object CsvIngest {
           graft.functions.TimeCols.ntzEpochMicros("ts")).as("value"))
         .coalesce(1)
         .write.mode("overwrite").text(tmp.toString)
-      try Files.move(tmp, staged,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException |
-                   _: java.nio.file.DirectoryNotEmptyException =>
-        // concurrent stager won; drop ours, use theirs
-        val walk = Files.walk(tmp)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-    staged.toString
-  }
+    }.toString
 
   def ingest(spark: SparkSession, dir: String): DataFrame = {
     val schema = StructType(Seq(

@@ -385,27 +385,15 @@ object Similarity {
     * (the docs/events stager idiom, embedding-shaped).
     */
   private def stagedEmbStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("label", IntegerType)))
-    val srcPath = Paths.get(dir, "embeddings.parquet")
-    val stageKey = StoredTables.contentKey("embstream", dir,
-      Files.size(srcPath), Files.getLastModifiedTime(srcPath).toMillis)
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_embstream_$stageKey")
-    if (!Files.isDirectory(staged)) {
-      // r15 advice #2: stale corpus versions' staged copies leave first,
-      // and a race-lost tmp dir is deleted, not leaked (Staging.publish).
-      Staging.sweepStale("graft_embstream_",
-        _ == staged.getFileName.toString)
-      val tmp = Paths.get(staged.toString +
-        s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      spark.read.schema(schema).parquet(srcPath.toString)
+    val staged = Staging.stage("graft_embstream_", dir, Seq("embeddings.parquet"), "") { tmp =>
+      spark.read.schema(schema)
+        .parquet(java.nio.file.Paths.get(dir, "embeddings.parquet").toString)
         .repartition(4).write.mode("overwrite").parquet(tmp.toString)
-      Staging.publish(tmp, staged)
     }
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(staged.toString)
@@ -484,8 +472,7 @@ object Similarity {
                 ()
             }
             .start()
-          q.processAllAvailable()
-          q.stop()
+          graft.streaming.StreamingOps.drain(q)
           require(segs().size >= 2,
             s"expected >= 2 streamed segments, got ${segs().size}")
           // Commit marker LAST (2-phase, the CollectorSink idiom): reuse

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Shared lifecycle for content-keyed staged fixture directories under
   * `java.io.tmpdir` (`graft_stream_*`, `graft_docstream_*`,
-  * `graft_embstream_*`, ...): every stager writes to a private
-  * `<staged>_tmp_<uuid>` dir and publishes it with an ATOMIC_MOVE rename,
-  * so readers only ever see complete fixtures and concurrent stagers
-  * race harmlessly (loser's move throws, winner's fixture is used).
+  * `graft_embstream_*`, ...). [[stage]] is the only stager: every fixture
+  * is written to a private `<staged>_tmp_<uuid>` dir and published with an
+  * ATOMIC_MOVE rename, so readers only ever see complete fixtures and
+  * concurrent stagers race harmlessly (loser's move throws, winner's
+  * fixture is used).
   *
   * r15 advice #2 closed here for ALL stagers, not just the flagged one:
   *  - the race-LOSER's tmp dir used to be leaked (the r14 /tmp-growth
@@ -20,24 +21,79 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   */
 private[graft] object Staging {
 
-  private def deleteRecursively(p: Path): Unit =
-    org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Stage a fixture derived from `sources` (tables under `dir`, each a
+    * single file or a parquet directory) and return its published dir,
+    * `<tmpdir>/<prefix><key><variant>`. `write` fills the given empty
+    * path and runs only when that dir does not exist yet; within one JVM
+    * concurrent callers for the same dir wait for a single writer.
+    *
+    * The key is [[StoredTables.contentKey]] over the prefix, `dir`,
+    * `params` and the (name, size, mtime) of every regular file of each
+    * source, so a regenerated fixture at the same path restages instead
+    * of replaying stale data against a fresh batch twin. Staging a new
+    * key first sweeps stale same-prefix dirs, keeping every variant of
+    * the current key.
+    */
+  def stage(prefix: String, dir: String, sources: Seq[String],
+      variant: String, params: Any*)(write: Path => Unit): Path = {
+    val key = StoredTables.contentKey(
+      (Seq(prefix, dir) ++ params ++ sources.flatMap(listing(dir, _))): _*)
+    val staged = Paths.get(sys.props("java.io.tmpdir"), s"$prefix$key$variant")
+    if (!Files.isDirectory(staged))
+      locks.computeIfAbsent(staged.toString, _ => new Object).synchronized {
+        if (!Files.isDirectory(staged)) {
+          sweepStale(prefix, _.startsWith(s"$prefix$key"))
+          val tmp = Paths.get(
+            s"${staged}_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+          try { write(tmp); publish(tmp, staged) }
+          catch { case e: Throwable =>
+            org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile); throw e }
+        }
+      }
+    staged
+  }
+
+  /** `name:size:mtime` of every regular file of one source, sorted. */
+  private def listing(dir: String, source: String): Seq[String] = {
+    val src = Paths.get(dir, source)
+    val files =
+      if (Files.isRegularFile(src)) Seq(src)
+      else {
+        val s = Files.list(src)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.filter(Files.isRegularFile(_)).toVector
+        } finally s.close()
+      }
+    files.map(p => s"${p.getFileName}:${Files.size(p)}:" +
+      s"${Files.getLastModifiedTime(p).toMillis}").sorted
+  }
+
+  /** Delete a file or directory tree; throws on any failure, so a caller
+    * that must start clean never continues on a half-deleted tree.
+    */
+  def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    val s = Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    finally s.close()
+  }
 
   /** Atomic publish of a fully-written tmp dir; on race loss the winner's
     * fixture stands and OUR tmp dir is removed instead of leaked.
     */
-  def publish(tmp: Path, staged: Path): Unit =
+  private def publish(tmp: Path, staged: Path): Unit =
     try Files.move(tmp, staged, StandardCopyOption.ATOMIC_MOVE)
     catch {
       case _: java.nio.file.FileAlreadyExistsException |
            _: java.nio.file.DirectoryNotEmptyException =>
-        deleteRecursively(tmp)
+        deleteTree(tmp)
     }
 
-  /** Remove stale same-prefix staged dirs (`keep` rejects them — pass a
-    * predicate accepting every CURRENT content key, e.g. all of a
-    * multi-variant stager's live variants) and day-old abandoned tmp
-    * dirs. Call before staging.
+  /** Remove stale same-prefix staged dirs (`keep` rejects them — it
+    * accepts every variant of the CURRENT content key) and day-old
+    * abandoned tmp dirs.
     *
     * Committed dirs are only swept past a 2 h age gate: the content key
     * hashes the SOURCE DIR too, so "different key" includes the other
@@ -47,7 +103,7 @@ private[graft] object Staging {
     * sequence everything is fresher than the gate; across rounds the
     * accumulation (the r15 advice #2 leak) still drains.
     */
-  def sweepStale(prefix: String, keep: String => Boolean): Unit = {
+  private def sweepStale(prefix: String, keep: String => Boolean): Unit = {
     val tmpRoot = Paths.get(sys.props("java.io.tmpdir"))
     val now = System.currentTimeMillis()
     val dayAgo = now - 24L * 3600 * 1000
@@ -62,6 +118,6 @@ private[graft] object Staging {
           else !keep(n) && f.lastModified() < twoHoursAgo
         }
       }
-      .foreach(f => deleteRecursively(f.toPath))
+      .foreach(f => org.apache.commons.io.FileUtils.deleteQuietly(f))
   }
 }

@@ -128,40 +128,16 @@ object Round9cQueries {
     */
   private def jsonSchemaDrift(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    import java.nio.file.{Files, Paths}
     val ev = Tables.events(s, dir).select("event_id", "event_type", "value")
-    // Deterministic staging keyed by input dir AND the fixture's
-    // bytes+mtime (the streaming stagers' idiom — keying on the dir alone
-    // would silently reuse stale staged JSON across a fixture
-    // regeneration, the r7 incident class); temp-dir + atomic rename so
-    // concurrent callers cannot see a half-written stage.
-    val srcPath = Paths.get(dir, "events.parquet")
-    val srcFiles =
-      if (Files.isRegularFile(srcPath)) Vector(srcPath)
-      else {
-        val st = Files.list(srcPath)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(Files.isRegularFile(_)).toVector
-        } finally st.close()
-      }
-    val srcBytes = srcFiles.map(Files.size).sum
-    val srcMtime = srcFiles.map(Files.getLastModifiedTime(_).toMillis)
-      .foldLeft(0L)(math.max)
-    val stageKey = java.lang.Long.toHexString(
-      java.util.Objects.hash("jsondrift", dir, srcBytes, srcMtime)
-        .toLong & 0xffffffffL)
-    val staged = Paths.get(sys.props("java.io.tmpdir"), s"graft_json_$stageKey")
-    if (!Files.isDirectory(staged)) {
-      graft.operators.Staging.sweepStale("graft_json_",
-        _ == staged.getFileName.toString)
-      val tmp = Paths.get(staged.toString +
-        s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+    // Staged once per content key of the fixture (Staging.stage: keying
+    // on the dir alone would silently reuse stale staged JSON across a
+    // fixture regeneration, the r7 incident class).
+    val staged = graft.operators.Staging.stage("graft_json_", dir,
+        Seq("events.parquet"), "") { tmp =>
       ev.filter(col("event_id") % 2 === 0).select("event_id", "event_type")
         .write.mode("overwrite").json(s"$tmp/legacy")
       ev.filter(col("event_id") % 2 === 1)
         .write.mode("overwrite").json(s"$tmp/current")
-      graft.operators.Staging.publish(tmp, staged)
     }
     val unionSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id",

@@ -2,10 +2,12 @@ package graft.streaming
 
 import graft.{QueryDef, Tables}
 import graft.QueryDef.dsumSql
+import graft.operators.Staging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryException}
 
 /** Structured-Streaming renderings of the reference's unbounded-producer
   * semantics (`/root/reference/src/pipeline/builder.rs:96-98`: "infinite
@@ -14,43 +16,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Mapping: unbounded producer → `readStream` source (rate-limited via
   * maxFilesPerTrigger ≈ pipe_buffer_size backpressure); stateful stage →
-  * `mapGroupsWithState`; `Pipeline::wait` → `processAllAvailable()`;
-  * termination detection comes from the engine.
+  * `mapGroupsWithState`; `Pipeline::wait` → [[StreamingOps.drain]]
+  * (run to quiescence, then stop); termination detection comes from the
+  * engine.
   */
 object StreamingOps {
 
-  /** Streaming twin of q15: file-source stream over the events parquet,
-    * 1-hour tumbling window + watermark, complete-mode aggregation into a
-    * memory sink, returned as a plain DataFrame with the exact q15 schema —
-    * so it shares q15's DuckDB oracle and the batch/stream parity is
-    * hash-checked by the driver.
-    *
-    * Scale: the same plan pointed at a real unbounded source (kafka) on a
-    * cluster is incremental — the state store holds one row per open
-    * (window, event_type); watermark bounds state growth.
-    */
-  /** File-source stream over the events parquet, staged into 4 files so
-    * maxFilesPerTrigger=1 yields genuinely incremental microbatches.
-    *
-    * The file source requires a *directory* (testdata itself is
-    * read-only); the staging key folds in the source's total size + max
-    * mtime, so a regenerated events.parquet at the same path (or a
-    * hashCode collision between dataset paths) gets a fresh staging dir
-    * instead of silently replaying stale data against a fresh batch twin.
-    * Write goes to a temp dir then an atomic rename, so a concurrent
-    * stager can never expose a half-written directory. Staged `ts` is a
-    * raw epoch-MICROS long, normalized from whatever unit the source
-    * fixture declares by going through the unit-aware [[Tables.events]]
-    * (streaming sources require an explicit schema anyway); consumers
-    * convert with plain `timestamp_micros(ts)`.
-    */
-  /** @param byTime stage the 4 files RANGE-partitioned on ts instead of
-    *   round-robin, so microbatches arrive in chronological order — the
-    *   shape a real stream has. Required by watermarked stream-stream
-    *   joins: with time-random files, batch 1 contains the stream's
-    *   latest timestamps, the watermark jumps to the end, and every
-    *   subsequent row is dropped as late.
-    */
   /** Streaming state-store partition count — ONE derivation for every
     * drain in this file (the r8 verdict flagged the former per-site
     * literal 8s as local-tuning residue posing as library defaults).
@@ -80,7 +51,62 @@ object StreamingOps {
     try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** @param sentinel additionally stage TWO far-future rows (years 2030
+  /** `Pipeline::wait` for one query: run it until every available input
+    * is processed, then stop it — in a `finally`, so a failing drain
+    * rethrows without leaving the query registered. `live` reads the
+    * still-running query (progress, a sink poll) before the stop.
+    */
+  private[graft] def drain(q: StreamingQuery,
+      live: StreamingQuery => Unit = _ => ()): Unit =
+    try { q.processAllAvailable(); live(q) } finally q.stop()
+
+  /** The memory-sink drain: start `df` into the in-memory table `sink`
+    * (replacing a previous run's view) in `mode`, [[drain]] it, and
+    * return the sink table.
+    */
+  private[graft] def memoryDrain(df: DataFrame, sink: String, mode: OutputMode,
+      live: StreamingQuery => Unit = _ => ()): DataFrame = {
+    df.sparkSession.catalog.dropTempView(sink)
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(sink)
+      .start(), live)
+    df.sparkSession.table(sink)
+  }
+
+  /** Await one checkpointed recovery leg (`Trigger.AvailableNow`). A leg
+    * run with `failAtBatch` set is SUPPOSED to die: its
+    * StreamingQueryException is swallowed iff the cause chain carries the
+    * injected `marker`. Anything else — including any failure of a leg
+    * run without `failAtBatch` — rethrows.
+    */
+  private[graft] def awaitLeg(q: StreamingQuery, failAtBatch: Option[Long],
+      marker: String): Unit =
+    try q.awaitTermination()
+    catch {
+      case e: StreamingQueryException
+          if failAtBatch.isDefined &&
+            Iterator.iterate(e: Throwable)(_.getCause)
+              .takeWhile(_ != null).take(10)
+              .exists(t => String.valueOf(t.getMessage).contains(marker)) =>
+        () // the leg was SUPPOSED to die here
+    }
+
+  /** File-source stream over the events parquet, staged into 4 files so
+    * maxFilesPerTrigger=1 yields genuinely incremental microbatches.
+    *
+    * The file source requires a *directory* (testdata itself is
+    * read-only), staged once per content key by [[Staging.stage]]. Staged
+    * `ts` is a raw epoch-MICROS long, normalized from whatever unit the
+    * source fixture declares by going through the unit-aware
+    * [[Tables.events]] (streaming sources require an explicit schema
+    * anyway); consumers convert with plain `timestamp_micros(ts)`.
+    *
+    * @param byTime stage the files RANGE-partitioned on ts instead of
+    *   round-robin, so microbatches arrive in chronological order — the
+    *   shape a real stream has. Required by watermarked stream-stream
+    *   joins: with time-random files, batch 1 contains the stream's
+    *   latest timestamps, the watermark jumps to the end, and every
+    *   subsequent row is dropped as late.
+    * @param sentinel additionally stage TWO far-future rows (years 2030
     *   and 2031, event_type "sentinel", as separate last-mtime files so
     *   they arrive as the final two batches: the 2031 batch exists to
     *   APPLY the 2030 watermark inside a real data batch). A watermark
@@ -89,50 +115,17 @@ object StreamingOps {
     *   analog of closing a kafka topic with a high-timestamp control
     *   record. Consumers must filter event_type before emitting.
     */
-  /** Schema of the staged events parquet files (ts as raw epoch-micros
-    * longs — the staging normalization).
-    */
-  private[graft] val eventsFileSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-
   private def stagedEventsStream(spark: SparkSession, dir: String,
       byTime: Boolean = false, maxFilesPerTrigger: Int = 1,
       sentinel: Boolean = false, timeFiles: Int = 2): DataFrame = {
-    val fileSchema = eventsFileSchema
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val srcPath = Paths.get(dir, "events.parquet")
-    // events.parquet may be a single file or a parquet directory.
-    val srcFiles =
-      if (Files.isRegularFile(srcPath)) Vector(srcPath)
-      else {
-        val s = Files.list(srcPath)
-        try s.iterator().asScala.filter(Files.isRegularFile(_)).toVector finally s.close()
-      }
-    val srcBytes = srcFiles.map(Files.size).sum
-    val srcMtime = srcFiles.map(Files.getLastModifiedTime(_).toMillis).foldLeft(0L)(math.max)
     // Time-ordered staging uses 2 files: cross-batch matching is still
     // exercised (2+ microbatches) at half the per-batch state-commit cost.
     val nFiles = if (byTime) timeFiles else 4
-    val stageBase = java.lang.Long.toHexString(
-      java.util.Objects.hash("us2", dir, srcBytes, srcMtime).toLong & 0xffffffffL)
-    val stageKey = stageBase +
-      (if (byTime) s"_t$nFiles" else "") + (if (sentinel) "_s" else "")
-    val staged = Paths.get(sys.props("java.io.tmpdir"), s"graft_stream_$stageKey")
-    if (!Files.isDirectory(staged)) {
-      // Stale corpus versions' staged copies leave first (r15 advice #2
-      // class: one dir per corpus version accumulated forever). All live
-      // VARIANTS share this corpus's base hash and are kept.
-      graft.operators.Staging.sweepStale("graft_stream_",
-        _.startsWith(s"graft_stream_$stageBase"))
-      val tmp = Paths.get(
-        staged.toString + s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+    val staged = Staging.stage("graft_stream_", dir, Seq("events.parquet"),
+        (if (byTime) s"_t$nFiles" else "") + (if (sentinel) "_s" else ""),
+        "us2") { tmp =>
       // Unit-aware source read (micros vs legacy nanos fixture), then
       // normalize ts to raw epoch-micros longs for staging —
       // session-tz-independently (TimeCols: NTZ wall time read as UTC).
@@ -155,7 +148,7 @@ object StreamingOps {
         }
         parts.zipWithIndex.foreach { case (p, i) =>
           Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(srcMtime + i * 1000L))
+            java.nio.file.attribute.FileTime.fromMillis(pinnedMtime0 + i * 1000L))
         }
       }
       if (sentinel) {
@@ -163,10 +156,10 @@ object StreamingOps {
         // latest pinned mtimes, replayed as the last two microbatches. A
         // watermark update takes effect in the batch AFTER the one that
         // observed it, and the engine's no-data batch that would apply a
-        // final update races processAllAvailable — so the 2031 batch is
-        // there to APPLY the 2030 watermark inside a real data batch,
-        // guaranteeing every pre-sentinel state entry is evicted (and its
-        // outer result emitted) before the drain returns.
+        // final update races the drain — so the 2031 batch is there to
+        // APPLY the 2030 watermark inside a real data batch, guaranteeing
+        // every pre-sentinel state entry is evicted (and its outer result
+        // emitted) before the drain returns.
         import spark.implicits._
         // 2030-01-01 / 2031-01-01 as epoch-MICROS (the staged ts unit).
         Seq(1893456000000000L, 1924992000000000L).zipWithIndex
@@ -184,24 +177,21 @@ object StreamingOps {
             val dest = tmp.resolve(s"part-zzz$i-sentinel.parquet")
             Files.move(sentPart, dest)
             Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime
-              .fromMillis(srcMtime + (3600 + i * 3600) * 1000L))
-            Files.walk(sentTmp).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.delete)
+              .fromMillis(pinnedMtime0 + (3600 + i * 3600) * 1000L))
+            Staging.deleteTree(sentTmp)
           }
-      }
-      try Files.move(tmp, staged, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        // Lost the race to a concurrent stager — its (identical) copy wins.
-        case _: java.nio.file.FileSystemException if Files.isDirectory(staged) =>
-          Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(Files.delete)
       }
     }
     spark.readStream
-      .schema(fileSchema)
+      .schema(Tables.rawEventsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(staged.toString)
   }
+
+  /** Base of the mtimes pinned on staged files whose replay order is
+    * the fixture (the file source replays in modification-time order).
+    */
+  private val pinnedMtime0 = 1700000000000L
 
   /** R3 unbounded producer + R15 backpressure as a PUBLIC streaming-source
     * pipe: `opts.maxBatchFiles` is the DSL's `pipe_buffer_size` analog
@@ -221,6 +211,16 @@ object StreamingOps {
         stagedEventsStream(spark, dir, maxFilesPerTrigger = Int.MaxValue)
     }
 
+  /** Streaming twin of q15: file-source stream over the events parquet,
+    * 1-hour tumbling window + watermark, complete-mode aggregation into a
+    * memory sink, returned as a plain DataFrame with the exact q15 schema —
+    * so it shares q15's DuckDB oracle and the batch/stream parity is
+    * hash-checked like every declared query.
+    *
+    * Scale: the same plan pointed at a real unbounded source (kafka) on a
+    * cluster is incremental — the state store holds one row per open
+    * (window, event_type); watermark bounds state growth.
+    */
   def tumblingHourly(spark: SparkSession, dir: String, sinkName: String): DataFrame =
     withStreamPartitions(spark) {
     val raw = stagedEventsStream(spark, dir)
@@ -228,21 +228,12 @@ object StreamingOps {
     // the stream (session tz is UTC so wall-clock matches); the window
     // output is already the TimestampType the batch q15 emits.
     val events = raw.withColumn("ts", expr("timestamp_micros(ts)"))
-
-    spark.catalog.dropTempView(sinkName)
-    val q = events
+    memoryDrain(events
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("c"),
-        round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2).as("s"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+        round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2).as("s")),
+      sinkName, OutputMode.Complete())
       // window.start is TimestampType — matching batch q15's date_trunc
       // output type exactly (session tz UTC keeps wall-clock identical).
       .select(col("window.start").as("w"), col("event_type"), col("c"), col("s"))
@@ -263,18 +254,10 @@ object StreamingOps {
     */
   def streamingDedup(spark: SparkSession, dir: String, sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
-      val q = stagedEventsStream(spark, dir)
+      memoryDrain(stagedEventsStream(spark, dir)
         .select("user_id", "event_type")
-        .dropDuplicates("user_id", "event_type")
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sinkName).orderBy("user_id", "event_type")
+        .dropDuplicates("user_id", "event_type"), sinkName, OutputMode.Append())
+        .orderBy("user_id", "event_type")
     }
 
   /** Streaming dedup with WATERMARK-BOUNDED state
@@ -309,29 +292,24 @@ object StreamingOps {
   private[graft] def streamingDedupBoundedMetrics(spark: SparkSession,
       dir: String, sinkName: String, horizon: String): (DataFrame, Long) =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
       // 6 time-ordered batches (5-day buckets), not the usual 2: state
       // eviction commits at END of batch, so a key emitted in batch k can
       // only be OBSERVED re-emitting from batch k+2 on — with 2 batches
       // re-emission is structurally impossible and the spec's small-
       // horizon evidence would be vacuous.
-      val q = stagedEventsStream(spark, dir, byTime = true, timeFiles = 6)
-        .withColumn("ts", expr("timestamp_micros(ts)"))
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .withWatermark("ts", horizon)
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select("user_id", "event_type")
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      val removed = q.recentProgress.toSeq
-        .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
-        .map(_.numRowsRemoved).sum
-      q.stop()
-      (spark.table(sinkName).orderBy("user_id", "event_type"), removed)
+      var removed = 0L
+      val out = memoryDrain(
+        stagedEventsStream(spark, dir, byTime = true, timeFiles = 6)
+          .withColumn("ts", expr("timestamp_micros(ts)"))
+          .select(col("user_id"), col("event_type"), col("ts"))
+          .withWatermark("ts", horizon)
+          .dropDuplicatesWithinWatermark("user_id", "event_type")
+          .select("user_id", "event_type"),
+        sinkName, OutputMode.Append(),
+        q => removed = q.recentProgress.toSeq
+          .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
+          .map(_.numRowsRemoved).sum)
+      (out.orderBy("user_id", "event_type"), removed)
     }
 
   /** Streaming funnel: x142's three-stage view→click→purchase conversion
@@ -358,9 +336,8 @@ object StreamingOps {
   def streamingFunnel(spark: SparkSession, dir: String, sinkName: String): DataFrame =
     withStreamPartitions(spark) {
       import spark.implicits._
-      spark.catalog.dropTempView(sinkName)
       val NONE = -1L
-      val q = stagedEventsStream(spark, dir, byTime = true)
+      val snapshots = stagedEventsStream(spark, dir, byTime = true)
         .select(col("user_id"), col("ts").as("us"), col("event_type"))
         .filter(col("event_type").isin("view", "click", "purchase"))
         .as[(Long, Long, String)]
@@ -387,16 +364,9 @@ object StreamingOps {
             Iterator.single((user, ver, t1, t2, t3))
         }
         .toDF("user_id", "ver", "t1", "t2", "t3")
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
       // Latest snapshot per user (versions increase monotonically), then
       // the funnel report in x142's exact shape.
-      val fin = spark.table(sinkName)
+      val fin = memoryDrain(snapshots, sinkName, OutputMode.Update())
         .groupBy("user_id")
         .agg(max(struct(col("ver"), col("t1"), col("t2"), col("t3"))).as("s"))
         .select(col("s.t1").as("t1"), col("s.t2").as("t2"), col("s.t3").as("t3"))
@@ -412,19 +382,6 @@ object StreamingOps {
         .orderBy("step")
     }
 
-  /** Streaming per-user-day admission quota — the rate limiter / ingest
-    * cap every event collector runs: admit at most N events per (user,
-    * event-time day), reject the rest. State per user is one count per
-    * ACTIVE day — bounded by the user's day span, and in production a
-    * watermark TTL drops days behind the horizon (the x176-ttl
-    * configuration); kept timeout-free here so the drained finite stream
-    * is exactly the batch rule.
-    *
-    * Exactness: admission order is (ts, event_id) — the same total order
-    * the batch oracle's row_number uses — valid incrementally because
-    * the staged source delivers batches in event-time order and equal
-    * timestamps land in one range-partitioned file.
-    */
   /** The x203 per-(user, day) admission function — ONE definition shared
     * by the declared query and the crash-recovery leg (QuotaRecoverySpec),
     * so the restart proof covers the exact state body the query ships.
@@ -448,26 +405,31 @@ object StreamingOps {
       admitted.result().iterator
     }
 
+  /** Streaming per-user-day admission quota — the rate limiter / ingest
+    * cap every event collector runs: admit at most N events per (user,
+    * event-time day), reject the rest. State per user is one count per
+    * ACTIVE day — bounded by the user's day span, and in production a
+    * watermark TTL drops days behind the horizon (the x176-ttl
+    * configuration); kept timeout-free here so the drained finite stream
+    * is exactly the batch rule.
+    *
+    * Exactness: admission order is (ts, event_id) — the same total order
+    * the batch oracle's row_number uses — valid incrementally because
+    * the staged source delivers batches in event-time order and equal
+    * timestamps land in one range-partitioned file.
+    */
   def streamingQuota(spark: SparkSession, dir: String, sinkName: String,
       perDay: Int = 3): DataFrame =
     withStreamPartitions(spark) {
       import spark.implicits._
-      spark.catalog.dropTempView(sinkName)
-      val q = stagedEventsStream(spark, dir, byTime = true)
+      memoryDrain(stagedEventsStream(spark, dir, byTime = true)
         .select(col("user_id"), col("ts").as("us"), col("event_id"))
         .as[(Long, Long, Long)]
         .groupByKey(_._1)
         .flatMapGroupsWithState[Map[Long, Int], (Long, Long)](
           OutputMode.Update(), GroupStateTimeout.NoTimeout())(quotaFn(perDay))
-        .toDF("user_id", "event_id")
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sinkName).orderBy("event_id")
+        .toDF("user_id", "event_id"), sinkName, OutputMode.Update())
+        .orderBy("event_id")
     }
 
   /** Streaming per-day event-type mix drift (x212) — the monitoring
@@ -496,24 +458,17 @@ object StreamingOps {
   def streamingMixDrift(spark: SparkSession, dir: String,
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
-      val q = stagedEventsStream(spark, dir, byTime = true)
+      val sink = memoryDrain(stagedEventsStream(spark, dir, byTime = true)
         .select(expr("ts DIV 86400000000").as("day"), col("event_type"))
-        .groupBy("day", "event_type").agg(count(lit(1)).as("n"))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .groupBy("day", "event_type").agg(count(lit(1)).as("n")),
+        sinkName, OutputMode.Update())
       // Update mode emits the RUNNING count per key per batch — counts
       // are monotone, so the drained value per key is the max.
       // localCheckpoint: the drained table is re-used three ways below
       // (per-day totals, global mix, spine) — checkpointing both bounds
       // the work AND gives each branch fresh attribute ids (the memory
       // sink's View otherwise makes the self-joins ambiguous).
-      val counts = spark.table(sinkName).groupBy("day", "event_type")
+      val counts = sink.groupBy("day", "event_type")
         .agg(max(col("n")).as("n")).localCheckpoint()
       val glob = counts.groupBy("event_type").agg(sum(col("n")).as("g"))
       val gtot = glob.agg(sum(col("g")).as("gt"))
@@ -548,13 +503,12 @@ object StreamingOps {
   def streamingContract(spark: SparkSession, dir: String,
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
       val clean = graft.Tables.events(spark, dir)
         .withColumn("us", graft.functions.TimeCols.ntzEpochMicros("ts"))
       val mx = clean.agg(max(col("us"))).collect()(0).getLong(0)
       val enumVals = clean.select("event_type").distinct()
         .collect().map(_.getString(0)).toSeq
-      val q = stagedEventsStream(spark, dir)
+      val feed = stagedEventsStream(spark, dir)
         .select(
           when(col("event_id") % 13 === 5, -col("user_id") - 1)
             .otherwise(col("user_id")).as("user_id"),
@@ -571,14 +525,7 @@ object StreamingOps {
           sum((col("value") < 0).cast("long")).as("vl"),
           sum((col("us") > mx).cast("long")).as("fr"),
           sum(col("user_id").isNull.cast("long")).as("nl"))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val agg = spark.table(sinkName).agg(
+      val agg = memoryDrain(feed, sinkName, OutputMode.Update()).agg(
         max(col("n")).as("n"), max(col("uid")).as("uid"),
         max(col("enm")).as("enm"), max(col("vl")).as("vl"),
         max(col("fr")).as("fr"), max(col("nl")).as("nl"))
@@ -608,22 +555,14 @@ object StreamingOps {
   def streamingHll(spark: SparkSession, dir: String,
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
       import graft.queries.Round15bQueries.{M, hllReport, hllRho}
-      val q = hllRho(
+      val sink = memoryDrain(hllRho(
           stagedEventsStream(spark, dir)
             .select(col("user_id").cast("string").as("k")), "k")
-        .groupBy("b").agg(max(col("rho")).as("m"))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .groupBy("b").agg(max(col("rho")).as("m")), sinkName, OutputMode.Update())
       val spine = spark.range(0, M).select(col("id").as("b"))
       val regs = spine.join(
-          spark.table(sinkName).groupBy("b").agg(max(col("m")).as("m")),
+          sink.groupBy("b").agg(max(col("m")).as("m")),
           Seq("b"), "left")
         .select(col("b"), coalesce(col("m"), lit(0L)).as("m"))
         .localCheckpoint()
@@ -661,17 +600,8 @@ object StreamingOps {
   def streamingManifest(spark: SparkSession, dir: String,
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
-      val q = graft.queries.Round10cQueries
-        .manifestAgg(stagedDocsStream(spark, dir))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sinkName)
+      memoryDrain(graft.queries.Round10cQueries
+        .manifestAgg(stagedDocsStream(spark, dir)), sinkName, OutputMode.Update())
         .groupBy("source")
         .agg(max(struct(col("n"), col("fp_xor"), col("fp_sum"),
           col("chars"))).as("v"))
@@ -680,6 +610,14 @@ object StreamingOps {
           col("v.chars").as("chars"))
         .orderBy("source")
     }
+
+  /** Drain result + the store-accounting stats Round19Spec pins:
+    * `kept` counts docs written to the text store at their arrival batch,
+    * so `compactedDocs < kept` WITNESSES that compaction dropped a
+    * later-revoked doc's text (winners == compactedDocs is the bound).
+    */
+  case class IncDedupDrain(survivors: DataFrame, batches: Int,
+      winners: Long, compactedDocs: Long, kept: Long, arrivals: Long)
 
   /** x251: streaming incremental dedup — x137's two-snapshot state
     * machine placed in its PRODUCTION position (r13 verdict #4): dedup as
@@ -729,14 +667,6 @@ object StreamingOps {
     * shares x137's from-scratch oracle VERBATIM
     * ([[graft.operators.IncrementalDedup.scratchOracleSql]]).
     */
-  /** Drain result + the store-accounting stats Round19Spec pins:
-    * `kept` counts docs written to the text store at their arrival batch,
-    * so `compactedDocs < kept` WITNESSES that compaction dropped a
-    * later-revoked doc's text (winners == compactedDocs is the bound).
-    */
-  case class IncDedupDrain(survivors: DataFrame, batches: Int,
-      winners: Long, compactedDocs: Long, kept: Long, arrivals: Long)
-
   def streamingIncrementalDedupWithStats(spark: SparkSession, dir: String,
       threshold: Double = 0.8): IncDedupDrain =
     withStreamPartitions(spark) {
@@ -822,8 +752,7 @@ object StreamingOps {
           ()
         }
         .start()
-      q.processAllAvailable()
-      q.stop()
+      drain(q)
       val nb = batches.get()
       require(nb > 0, "no microbatch ran")
       // Drain: reconstruct final state from the deltas, then COMPACT.
@@ -877,27 +806,20 @@ object StreamingOps {
   def streamingHistQuantiles(spark: SparkSession, dir: String,
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
       import graft.queries.Round17Queries
       val stats = Round17Queries.eventStats(spark, dir).localCheckpoint()
-      val q = stagedEventsStream(spark, dir)
+      val cells = stagedEventsStream(spark, dir)
         .select(col("event_type"),
           Round17Queries.vMicros(col("value")).as("v"))
         .join(broadcast(stats), "event_type")
         .select(col("event_type"),
           expr(s"v * ${Round17Queries.Buckets} DIV (mx + 1)").as("b"))
         .groupBy("event_type", "b").agg(count(lit(1)).as("cnt"))
-        .writeStream
-        .outputMode(OutputMode.Update())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
       // localCheckpoint: quantileReport self-joins the hist (the cum
       // prefix), and the memory sink's View hands both sides identical
       // attribute ids (the x212 gotcha) — checkpointing mints fresh ones.
-      val hist = spark.table(sinkName).groupBy("event_type", "b")
+      val hist = memoryDrain(cells, sinkName, OutputMode.Update())
+        .groupBy("event_type", "b")
         .agg(max(col("cnt")).as("cnt"))
         .localCheckpoint()
       Round17Queries.quantileReport(hist, stats,
@@ -929,7 +851,6 @@ object StreamingOps {
   def streamingScd2Enrich(spark: SparkSession, dir: String,
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
-      spark.catalog.dropTempView(sinkName)
       val byCust = Window.partitionBy("o_custkey")
         .orderBy(col("od"), col("o_orderkey"))
       val dim = graft.Tables.orders(spark, dir)
@@ -943,7 +864,7 @@ object StreamingOps {
         .select(col("o_custkey").as("du"), col("o_orderpriority").as("prio"),
           col("od").as("valid_from"), col("valid_to"))
         .localCheckpoint()
-      val q = stagedEventsStream(spark, dir, byTime = true)
+      memoryDrain(stagedEventsStream(spark, dir, byTime = true)
         .select(col("event_type"), col("user_id"),
           (lit(788918400000000L) +
             (col("ts") - lit(1704067200000000L)) * 80).as("pit"))
@@ -953,15 +874,9 @@ object StreamingOps {
           "left")
         .select(col("event_type"),
           coalesce(col("prio"), lit("none")).as("prio"))
-        .groupBy("event_type", "prio").agg(count(lit(1)).as("n"))
-        .writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sinkName).orderBy("event_type", "prio")
+        .groupBy("event_type", "prio").agg(count(lit(1)).as("n")),
+        sinkName, OutputMode.Complete())
+        .orderBy("event_type", "prio")
     }
 
   /** Stream-stream inner join: clicks joined to same-user purchases that
@@ -989,20 +904,13 @@ object StreamingOps {
         .withWatermark("c_ts", "1 hour")
       val purchases = side("p").filter(col("p_type") === "purchase")
         .withWatermark("p_ts", "1 hour")
-      spark.catalog.dropTempView(sinkName)
-      val q = clicks.join(purchases,
+      memoryDrain(clicks.join(purchases,
           col("c_uid") === col("p_uid") &&
             col("p_ts") >= col("c_ts") &&
             col("p_ts") <= col("c_ts") + expr("INTERVAL 6 HOURS"))
-        .select(col("c_id").as("click_id"), col("p_id").as("purchase_id"))
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sinkName).orderBy("click_id", "purchase_id")
+        .select(col("c_id").as("click_id"), col("p_id").as("purchase_id")),
+        sinkName, OutputMode.Append())
+        .orderBy("click_id", "purchase_id")
     }
 
   /** Stream-stream LEFT OUTER interval join — x56's inner join plus the
@@ -1081,33 +989,25 @@ object StreamingOps {
         .filter(col("c_type").isin("click", "sentinel"))
       val purchases = side("p").withWatermark("p_ts", "1 hour")
         .filter(col("p_type").isin("purchase", "sentinel"))
-      spark.catalog.dropTempView(sinkName)
-      val q = clicks.join(purchases,
+      val outer = clicks.join(purchases,
           col("c_uid") === col("p_uid") &&
             col("p_ts") >= col("c_ts") &&
             col("p_ts") <= col("c_ts") + expr("INTERVAL 6 HOURS"),
           "leftOuter")
         .select(col("c_id").as("click_id"), col("p_id").as("purchase_id"))
         .filter(col("click_id") >= 0)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
       // The sentinel's watermark jump is APPLIED by a no-data microbatch
-      // that runs after processAllAvailable returns — the batch that
+      // that runs after the drain's quiescence point — the batch that
       // emits the final outer rows. Wait for the sink to quiesce (count
       // stable across 3 polls) instead of racing it with stop().
-      var prev = -1L; var same = 0; var iters = 0
-      while (same < 2 && iters < 100) {
-        val c = spark.table(sinkName).count()
-        if (c == prev) same += 1 else { same = 0; prev = c }
-        Thread.sleep(150); iters += 1
-      }
-      q.stop()
-      spark.table(sinkName)
-        .orderBy(asc_nulls_first("click_id"), asc_nulls_first("purchase_id"))
+      memoryDrain(outer, sinkName, OutputMode.Append(), _ => {
+        var prev = -1L; var same = 0; var iters = 0
+        while (same < 2 && iters < 100) {
+          val c = spark.table(sinkName).count()
+          if (c == prev) same += 1 else { same = 0; prev = c }
+          Thread.sleep(150); iters += 1
+        }
+      }).orderBy(asc_nulls_first("click_id"), asc_nulls_first("purchase_id"))
       } finally spark.conf.set(
         "spark.sql.streaming.multipleWatermarkPolicy", prevPolicy)
     }
@@ -1156,8 +1056,7 @@ object StreamingOps {
           ()
         }
         .start()
-      q.processAllAvailable()
-      q.stop()
+      drain(q)
       spark.read.parquet(cur.getOrElse(sys.error("no microbatch ran")))
         .select(col("user_id"), col("event_type"), col("n"),
           col("s").cast("double").as("s"))
@@ -1193,7 +1092,7 @@ object StreamingOps {
         .option("checkpointLocation", checkpointDir)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      // No processAllAvailable/stop: AvailableNow terminates on its own
+      // No drain: AvailableNow terminates on its own
       // once the start-time backlog is drained.
       q.awaitTermination()
       spark.read.parquet(outDir)
@@ -1213,21 +1112,13 @@ object StreamingOps {
       val dim = Tables.events(spark, dir).groupBy("event_type")
         .agg((graft.QueryDef.dsum(col("value")).cast("double") /
           count(lit(1))).as("avg_v"))
-      spark.catalog.dropTempView(sinkName)
-      val q = stagedEventsStream(spark, dir)
+      memoryDrain(stagedEventsStream(spark, dir)
         .select("event_id", "event_type", "value")
         .join(broadcast(dim), "event_type")
         .select(col("event_type"), (col("value") > col("avg_v")).as("above"))
         .groupBy("event_type", "above")
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(sinkName).orderBy("event_type", "above")
+        .agg(count(lit(1)).as("n")), sinkName, OutputMode.Complete())
+        .orderBy("event_type", "above")
     }
 
   /** Per-key running sum as a custom stateful stage (the reference's
@@ -1376,10 +1267,6 @@ object StreamingOps {
       .toDF("user_id", "session_id", "n_events", "first_event", "dur_us")
   }
 
-  /** Staged documents stream: the documents parquet split into 4 files so
-    * `maxFilesPerTrigger=1` yields genuinely incremental microbatches
-    * (the events stager's idiom, doc-shaped).
-    */
   /** Materializes every staged stream fixture this object's queries read
     * (content-keyed; a no-op once staged) WITHOUT draining any stream —
     * [[graft.Prebuild]]'s setup phase, so one-time staging writes never
@@ -1396,27 +1283,21 @@ object StreamingOps {
     ()
   }
 
+  /** Staged documents stream: the documents parquet split into 4 files so
+    * `maxFilesPerTrigger=1` yields genuinely incremental microbatches
+    * (the events stager's idiom, doc-shaped).
+    */
   private def stagedDocsStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
-    val srcPath = Paths.get(dir, "documents.parquet")
-    val stageKey = java.lang.Long.toHexString(
-      java.util.Objects.hash("docs", dir, Files.size(srcPath),
-        Files.getLastModifiedTime(srcPath).toMillis).toLong & 0xffffffffL)
-    val staged = Paths.get(sys.props("java.io.tmpdir"), s"graft_docstream_$stageKey")
-    if (!Files.isDirectory(staged)) {
-      graft.operators.Staging.sweepStale("graft_docstream_",
-        _ == staged.getFileName.toString)
-      val tmp = Paths.get(
-        staged.toString + s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-      spark.read.schema(docSchema).parquet(srcPath.toString)
+    val staged = Staging.stage("graft_docstream_", dir, Seq("documents.parquet"), "") { tmp =>
+      spark.read.schema(docSchema)
+        .parquet(java.nio.file.Paths.get(dir, "documents.parquet").toString)
         .repartition(4).write.mode("overwrite").parquet(tmp.toString)
-      graft.operators.Staging.publish(tmp, staged)
     }
     spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).parquet(staged.toString)
@@ -1478,17 +1359,9 @@ object StreamingOps {
             out.iterator
         }
         .toDF("a", "b")
-      spark.catalog.dropTempView(sinkName)
-      val q = pairs.writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(sinkName)
-        .start()
-      q.processAllAvailable()
-      q.stop()
       // Reduce the drained pair set to the declared order-free output:
       // per doc, the minimum id among {self} ∪ {lev<=1 neighbors}.
-      val p = spark.table(sinkName).distinct()
+      val p = memoryDrain(pairs, sinkName, OutputMode.Append()).distinct()
       val und = p.unionByName(
         p.select(col("b").as("a"), col("a").as("b")))
       Tables.documents(spark, dir).select(col("doc_id"))
@@ -1509,23 +1382,8 @@ object StreamingOps {
       : DataFrame = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val srcPath = Paths.get(dir, "events.parquet")
-    val stageKey = java.lang.Long.toHexString(
-      java.util.Objects.hash("disorder_us2", dir, Files.size(srcPath),
-        Files.getLastModifiedTime(srcPath).toMillis).toLong & 0xffffffffL)
-    val rawSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-    val staged = Paths.get(sys.props("java.io.tmpdir"), s"graft_disstream_$stageKey")
-    if (!Files.isDirectory(staged)) {
-      graft.operators.Staging.sweepStale("graft_disstream_",
-        _ == staged.getFileName.toString)
-      val tmp = Paths.get(
-        staged.toString + s"_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
+    val staged = Staging.stage("graft_disstream_", dir, Seq("events.parquet"),
+        "", "disorder_us2") { tmp =>
       Files.createDirectories(tmp)
       // Unit-aware source read, normalized to raw epoch-MICROS longs —
       // the stagedEventsStream convention (watermarks need TimestampType,
@@ -1545,16 +1403,13 @@ object StreamingOps {
         val dst = Paths.get(tmp.toString, f"b$k%02d.parquet")
         Files.move(f, dst)
         Files.setLastModifiedTime(dst,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + k * 1000L))
+          java.nio.file.attribute.FileTime.fromMillis(pinnedMtime0 + k * 1000L))
         // drop the helper dir so only the bucket files remain
-        val s1 = Files.walk(part)
-        try s1.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally s1.close()
+        Staging.deleteTree(part)
       }
-      graft.operators.Staging.publish(tmp, staged)
     }
     spark.readStream
-      .schema(rawSchema)
+      .schema(Tables.rawEventsSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged.toString)
   }
@@ -1610,8 +1465,7 @@ object StreamingOps {
           ()
         }
         .start()
-      q.processAllAvailable()
-      q.stop()
+      drain(q)
       spark.read.parquet(cur.getOrElse(sys.error("no microbatch ran")))
         .orderBy("w_start", "event_type")
     }
@@ -1633,20 +1487,17 @@ object StreamingOps {
   def streamingDlq(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) {
       import java.nio.file.{Files, Paths}
-      // Sink paths keyed by input dir (the stagedDocsStream stageKey idiom):
+      // Sink paths keyed by input dir:
       // concurrent runs at different scale factors must not share — and so
       // corrupt — each other's append sinks.
       val stageKey = java.lang.Long.toHexString(
         java.util.Objects.hash("dlq", dir).toLong & 0xffffffffL)
       val base = Paths.get(sys.props("java.io.tmpdir"), s"graft_x154_dlq_$stageKey")
-      def rm(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        val s = Files.walk(p)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally s.close()
-      }
       val vDir = base.resolve("valid")
       val dDir = base.resolve("dlq")
-      rm(vDir); rm(dDir) // bench may invoke twice: appends must start clean
+      // Bench may invoke twice: appends must start clean (a failed delete
+      // throws rather than appending into a half-deleted sink).
+      Staging.deleteTree(vDir); Staging.deleteTree(dDir)
       // Pre-create both sinks: a fixture with zero quarantined (or zero
       // valid) rows would otherwise leave a path nonexistent and fail the
       // read-back below.
@@ -1669,8 +1520,7 @@ object StreamingOps {
           ()
         }
         .start()
-      q.processAllAvailable()
-      q.stop()
+      drain(q)
       // Declared read-back schema: an all-clean (or all-corrupt) drain
       // leaves one sink as an empty directory, which schema inference
       // cannot read.
@@ -1714,7 +1564,6 @@ object StreamingOps {
   def streamingBoilerplate(spark: SparkSession, dir: String): DataFrame =
     withStreamPartitions(spark) {
       import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
       // Per-run UNIQUE sink (UUID suffix), deleted in the finally after the
       // result is eagerly localCheckpointed off it: the previous keyed
       // delete-then-repopulate store let two concurrent invocations on the
@@ -1733,8 +1582,7 @@ object StreamingOps {
             ()
           }
           .start()
-        q.processAllAvailable()
-        q.stop()
+        drain(q)
         val linedSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
@@ -1744,10 +1592,7 @@ object StreamingOps {
         graft.operators.LineOps.boilerplateRemovalFromLined(
           spark.read.schema(linedSchema).parquet(sink.toString))
           .localCheckpoint(true)
-      } finally {
-        val s = Files.walk(sink)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally s.close()
-      }
+      } finally Staging.deleteTree(sink)
     }
 
   /** x131's oracle, shared verbatim: the hash gate proves the streaming
@@ -2056,20 +1901,11 @@ object StreamingOps {
     */
   def streamingDistinctHll(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = withStreamPartitions(spark) {
-    spark.catalog.dropTempView(sinkName)
     val events = stagedEventsStream(spark, dir)
       .withColumn("ts", expr("timestamp_micros(ts)"))
-    val q = events
+    val est = memoryDrain(events
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"))
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val est = spark.table(sinkName)
+      .agg(hll_sketch_agg(col("user_id")).as("sk")), sinkName, OutputMode.Complete())
       .select(expr("unix_micros(window.start)").as("h_us"),
         col("event_type"), hll_sketch_estimate(col("sk")).as("nd_est"))
     val exact = Tables.events(spark, dir)
@@ -2101,42 +1937,19 @@ object StreamingOps {
   def streamingTopK(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = withStreamPartitions(spark) {
     import spark.implicits._
-    spark.catalog.dropTempView(sinkName)
-    val q = stagedEventsStream(spark, dir)
+    memoryDrain(stagedEventsStream(spark, dir)
       .select(col("event_type"), col("value"), col("event_id"))
       .as[(String, Double, Long)]
       .groupByKey(_._1)
       .agg(new graft.functions.TopKAggregator[(String, Double, Long)](
         3, t => (t._2, t._3)).toColumn.name("top"))
-      .toDF("event_type", "top")
-      .writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+      .toDF("event_type", "top"), sinkName, OutputMode.Complete())
       .select(col("event_type"), posexplode(col("top")).as(Seq("i", "p")))
       .select(col("event_type"), (col("i") + 1).cast("long").as("rnk"),
         col("p._1").as("value"), col("p._2").as("event_id"))
       .orderBy("event_type", "rnk")
   }
 
-  /** Streaming twin of x30: `session_window` aggregation in APPEND mode —
-    * sessions emit only once the watermark proves no more members can
-    * arrive, which is the production contract (a session row is final when
-    * written). The far-future sentinel pair flushes the watermark past
-    * every real session on drain, so the drained sink equals the batch
-    * x30 computation and shares its oracle; the sentinel's own session
-    * (negative user ids) is filtered from the sink read.
-    *
-    * Scale: state is one row per OPEN session per user — the watermark
-    * closes and evicts sessions 1 h behind the max event time, so state is
-    * bounded by concurrently-active users, not history. Session merging is
-    * the state-store's native session-window merge (no per-event shuffle
-    * beyond the user_id hash partitioning).
-    */
   /** One LEG of a checkpoint-resumable sessionization job — the
     * production recovery story the in-process drains (x176/x183) do not
     * exercise (r9 verdict #6): the same stateful query run → KILLED →
@@ -2165,7 +1978,7 @@ object StreamingOps {
   def sessionizeLeg(spark: SparkSession, srcDir: String, ckptDir: String,
       outDir: String, failAtBatch: Option[Long]): Unit =
     withStreamPartitions(spark) {
-      val events = spark.readStream.schema(eventsFileSchema)
+      val events = spark.readStream.schema(Tables.rawEventsSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
         .withColumn("ts", expr("timestamp_micros(ts)"))
@@ -2193,16 +2006,7 @@ object StreamingOps {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if failAtBatch.isDefined &&
-              Iterator.iterate(e: Throwable)(_.getCause)
-                .takeWhile(_ != null).take(10)
-                .exists(t => String.valueOf(t.getMessage)
-                  .contains("injected mid-drain crash")) =>
-          () // the leg was SUPPOSED to die here
-      }
+      awaitLeg(q, failAtBatch, "injected mid-drain crash")
     }
 
   /** The x203 quota as a restartable leg (r11 verdict #7): the same
@@ -2218,7 +2022,7 @@ object StreamingOps {
       outDir: String, failAtBatch: Option[Long], perDay: Int = 3): Unit =
     withStreamPartitions(spark) {
       import spark.implicits._
-      val events = spark.readStream.schema(eventsFileSchema)
+      val events = spark.readStream.schema(Tables.rawEventsSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
       val q = events
@@ -2244,16 +2048,7 @@ object StreamingOps {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if failAtBatch.isDefined &&
-              Iterator.iterate(e: Throwable)(_.getCause)
-                .takeWhile(_ != null).take(10)
-                .exists(t => String.valueOf(t.getMessage)
-                  .contains("injected mid-drain crash")) =>
-          () // the leg was SUPPOSED to die here
-      }
+      awaitLeg(q, failAtBatch, "injected mid-drain crash")
     }
 
   // ---- x119's crash-atomic generation swap (r12 verdict #6) --------------
@@ -2324,7 +2119,7 @@ object StreamingOps {
       stateDir: String, failAtBatch: Option[Long],
       failAfterSwap: Boolean): Unit =
     withStreamPartitions(spark) {
-      val q = spark.readStream.schema(eventsFileSchema)
+      val q = spark.readStream.schema(Tables.rawEventsSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir)
         .select(col("user_id"), col("event_type"), col("value"))
@@ -2360,38 +2155,34 @@ object StreamingOps {
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      try q.awaitTermination()
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException
-            if failAtBatch.isDefined &&
-              Iterator.iterate(e: Throwable)(_.getCause)
-                .takeWhile(_ != null).take(10)
-                .exists(t => String.valueOf(t.getMessage)
-                  .contains("injected crash")) =>
-          () // the leg was SUPPOSED to die here
-      }
+      awaitLeg(q, failAtBatch, "injected crash")
     }
 
+  /** Streaming twin of x30: `session_window` aggregation in APPEND mode —
+    * sessions emit only once the watermark proves no more members can
+    * arrive, which is the production contract (a session row is final when
+    * written). The far-future sentinel pair flushes the watermark past
+    * every real session on drain, so the drained sink equals the batch
+    * x30 computation and shares its oracle; the sentinel's own session
+    * (negative user ids) is filtered from the sink read.
+    *
+    * Scale: state is one row per OPEN session per user — the watermark
+    * closes and evicts sessions 1 h behind the max event time, so state is
+    * bounded by concurrently-active users, not history. Session merging is
+    * the state-store's native session-window merge (no per-event shuffle
+    * beyond the user_id hash partitioning).
+    */
   def streamingSessionize(spark: SparkSession, dir: String,
       sinkName: String): DataFrame = withStreamPartitions(spark) {
-    spark.catalog.dropTempView(sinkName)
     // byTime staging: chronological file arrival keeps every real event
     // ahead of the 1 h watermark (append mode DROPS late rows — unordered
     // staging would silently lose sessions, the x155 late-drop semantics).
     val events = stagedEventsStream(spark, dir, byTime = true, sentinel = true)
       .withColumn("ts", expr("timestamp_micros(ts)"))
-    val q = events
+    memoryDrain(events
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(sinkName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(sinkName)
+      .agg(count(lit(1)).as("n_events")), sinkName, OutputMode.Append())
       .filter(col("user_id") >= 0)
       .select(col("user_id"),
         expr("unix_micros(sw.start)").as("start_us"),

@@ -235,4 +235,50 @@ class StreamingSpec extends SparkSuite {
       case None => spark.conf.unset(key)
     }
   }
+
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+
+  test("memory drain: a failing stream rethrows and leaves no query running") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, udf}
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val boom = udf((v: Long) => {
+      if (v > 0) throw new IllegalStateException("drain spec failure"); v })
+    val src = MemoryStream[Long]
+    src.addData(1L, 2L, 3L)
+    val before = spark.streams.active.map(_.id).toSet
+    val e = intercept[Exception] {
+      StreamingOps.memoryDrain(src.toDF().select(boom(col("value")).as("v")),
+        "drain_fail_sink", org.apache.spark.sql.streaming.OutputMode.Append())
+    }
+    assert(causes(e).exists(m => m != null && m.contains("drain spec failure")),
+      s"unexpected failure: $e")
+    assert(spark.streams.active.filterNot(q => before(q.id)).isEmpty,
+      "the failed drain left its query registered")
+  }
+
+  test("recovery leg: only an expected injected crash is swallowed") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def leg(message: String, failAtBatch: Option[Long]): Unit = {
+      def crash(): Unit = throw new RuntimeException(message)
+      val src = MemoryStream[Long]
+      src.addData(1L)
+      val q = src.toDF().writeStream
+        .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            _: Long) => crash() }
+        .start()
+      StreamingOps.awaitLeg(q, failAtBatch, "injected mid-drain crash")
+    }
+    // A leg run without failAtBatch is not supposed to die: rethrow.
+    intercept[StreamingQueryException](leg("injected mid-drain crash at batch 0", None))
+    // An expected leg that dies of something else: rethrow.
+    intercept[StreamingQueryException](leg("unrelated batch failure", Some(0L)))
+    // The expected injected crash: swallowed.
+    leg("injected mid-drain crash at batch 0", Some(0L))
+  }
 }
