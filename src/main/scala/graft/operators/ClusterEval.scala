@@ -31,8 +31,6 @@ object ClusterEval {
 
   def silhouette(spark: SparkSession, emb: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("graft_dot", a, b)
     // Materialized (r17): vecs feeds the init TakeOrdered and both
     // assignment passes — each re-ran the parquet scan + cast.
     val vecs = KMeansLite.vectors(emb).localCheckpoint()
@@ -44,8 +42,7 @@ object ClusterEval {
     val c1 = KMeansLite.recompute(a1).localCheckpoint()
     val a2 = KMeansLite.assign(vecs, c1) // (vec_id, cid, v)
 
-    val d2 = dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), col("cv")) +
-      dot(col("cv"), col("cv"))
+    val d2 = KMeansLite.d2(col("v"), col("cv"))
     val dMicro = (round(sqrt(greatest(d2, lit(0.0))), 6) * 1000000)
       .cast("long")
     val ab = a2

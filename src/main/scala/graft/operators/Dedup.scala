@@ -790,11 +790,9 @@ object Dedup {
 
   // (defined before `queries` — object vals initialize in declaration order)
   private val embeddingNearDupSql =
-    """SELECT a, b, cos_sim FROM (
+    s"""SELECT a, b, cos_sim FROM (
       |  SELECT x.vec_id AS a, y.vec_id AS b,
-      |         round(list_dot_product(CAST(x.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[]))
-      |           / (sqrt(list_dot_product(CAST(x.embedding AS DOUBLE[]), CAST(x.embedding AS DOUBLE[])))
-      |            * sqrt(list_dot_product(CAST(y.embedding AS DOUBLE[]), CAST(y.embedding AS DOUBLE[])))), 6) AS cos_sim
+      |         ${VectorOps.cos6Sql("CAST(x.embedding AS DOUBLE[])", "CAST(y.embedding AS DOUBLE[])")} AS cos_sim
       |  FROM embeddings x JOIN embeddings y ON x.vec_id < y.vec_id) p
       |WHERE cos_sim >= 0.45 ORDER BY a, b""".stripMargin
 

@@ -100,8 +100,7 @@ object HybridRetrieval {
     emb.select(col("vec_id").as("doc_id"), toD(col("embedding")).as("e"))
       .crossJoin(broadcast(probes))
       .select(col("pid"), col("doc_id"),
-        round(call_function("graft_cosine", col("e"), col("q")), 6)
-          .as("cos_sim"))
+        VectorOps.cos6(col("e"), col("q")).as("cos_sim"))
       .withColumn("dense_rank", row_number().over(w).cast("long"))
       .filter(col("dense_rank") <= ListK)
       .select("pid", "doc_id", "dense_rank")

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import ProductQuant.{PQ, d2, sub, subSql, d2Sql, subspaceCtesSql, trainSubspace}
+import KMeansLite.d2
+import ProductQuant.{PQ, sub, subSql, d2Sql, subspaceCtesSql, trainSubspace}
 
 /** IVF-PQ (Jégou et al. 2011, the FAISS IVFPQ shape) — the composition
   * that actually runs at billion-vector scale: a coarse k-means quantizer

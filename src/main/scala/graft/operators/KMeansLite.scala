@@ -32,8 +32,16 @@ import org.apache.spark.sql.functions._
   */
 object KMeansLite {
 
+  /** Native `graft_dot`, bitwise-equal to DuckDB's list_dot_product. */
   private def dot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
+
+  /** Squared L2 ‖a-b‖² through the dot identity above: the ONE Spark
+    * rendering every centroid distance (Lloyd assignment, IVF cell
+    * ranking, PQ subspace codes, silhouette) goes through.
+    */
+  private[operators] def d2(a: Column, b: Column): Column =
+    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
   /** Embeddings with the float vector cast elementwise to double (exact;
     * both engines widen float32 identically).
@@ -73,10 +81,8 @@ object KMeansLite {
     */
   def assign(vecs: DataFrame, cents: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(vecs.sparkSession)
-    val d2 = dot(col("v"), col("v")) - lit(2.0) * dot(col("v"), col("cv")) +
-      dot(col("cv"), col("cv"))
     vecs.crossJoin(broadcast(cents))
-      .withColumn("d2", d2)
+      .withColumn("d2", d2(col("v"), col("cv")))
       .groupBy("vec_id")
       .agg(min(struct(col("d2"), col("cid"), col("v"))).as("mn"))
       .select(col("vec_id"), col("mn.cid").as("cid"), col("mn.v").as("v"))
@@ -185,7 +191,7 @@ object KMeansLite {
           col("v").as("vb"))
         a.join(b, Seq("cid")).filter(col("a") < col("b"))
           .withColumn("cos_sim",
-            round(call_function("graft_cosine", col("va"), col("vb")), 6))
+            VectorOps.cos6(col("va"), col("vb")))
           .filter(col("cos_sim") >= 0.45)
           .select("cid", "a", "b", "cos_sim")
           .orderBy("a", "b")
@@ -193,9 +199,7 @@ object KMeansLite {
       Some(s"""${kmeansCtesSql(k = 4, dim = 64)}
               |SELECT cid, a, b, cos_sim FROM (
               |  SELECT ax.cid, ax.vec_id AS a, ay.vec_id AS b,
-              |         round(list_dot_product(x.v, y.v)
-              |           / (sqrt(list_dot_product(x.v, x.v))
-              |            * sqrt(list_dot_product(y.v, y.v))), 6) AS cos_sim
+              |         ${VectorOps.cos6Sql("x.v", "y.v")} AS cos_sim
               |  FROM a2 ax JOIN a2 ay
               |    ON ax.cid = ay.cid AND ax.vec_id < ay.vec_id
               |  JOIN e x ON x.vec_id = ax.vec_id

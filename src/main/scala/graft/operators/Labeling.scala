@@ -51,8 +51,7 @@ object Labeling {
         toDouble(col("embedding")).as("e"))
       .crossJoin(broadcast(probes))
       .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
-        round(call_function("graft_cosine", col("e"), col("q")), 6)
-          .as("cos_sim"))
+        VectorOps.cos6(col("e"), col("q")).as("cos_sim"))
   }
 
   /** x173: kNN label vote — majority label among the k nearest labeled
@@ -144,9 +143,7 @@ object Labeling {
 
   private val scoredSql: String =
     s"""SELECT p.qid, p.qlabel, e.vec_id, CAST(e.label AS BIGINT) AS label,
-       |       round(list_dot_product(CAST(e.embedding AS DOUBLE[]), p.q)
-       |         / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-       |          * sqrt(list_dot_product(p.q, p.q))), 6) AS cos_sim
+       |       ${VectorOps.cos6Sql("CAST(e.embedding AS DOUBLE[])", "p.q")} AS cos_sim
        |FROM embeddings e, (SELECT vec_id AS qid, CAST(label AS BIGINT) AS qlabel,
        |                           CAST(embedding AS DOUBLE[]) AS q
        |                    FROM embeddings WHERE vec_id < $MaxProbeId) p

@@ -31,8 +31,7 @@ import org.apache.spark.sql.types.DecimalType
 object MmrDiversify {
 
   private def simU(a: Column, b: Column): Column =
-    (round(call_function("graft_cosine", a, b), 6)
-      .cast(DecimalType(18, 6)) * 1000000).cast("long")
+    (VectorOps.cos6(a, b).cast(DecimalType(18, 6)) * 1000000).cast("long")
 
   /** Greedy MMR top-k against query vector `queryId`; returns
     * (step, vec_id, score) for the k picks in pick order.
@@ -76,9 +75,7 @@ object MmrDiversify {
 
   private def selectSql(queryId: Long, k: Int, lam: Long): String = {
     def sim(a: String, b: String): String =
-      s"""CAST(CAST(round(list_dot_product($a, $b)
-         |  / (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))), 6)
-         |  AS DECIMAL(18,6)) * 1000000 AS BIGINT)""".stripMargin
+      s"CAST(CAST(${VectorOps.cos6Sql(a, b)} AS DECIMAL(18,6)) * 1000000 AS BIGINT)"
     val steps = (1 to k).map { t =>
       if (t == 1)
         s"""s1 AS (SELECT vec_id, CAST($lam * rel_u AS BIGINT) AS score

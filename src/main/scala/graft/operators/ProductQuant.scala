@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import KMeansLite.d2
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,15 +39,6 @@ object ProductQuant {
     val probeSet = 8     // certification queries: vec_id < 8
     val topK = 10
   }
-
-  private def dot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
-
-  /** Squared L2 via the dot expansion — same identity KMeansLite proves
-    * engine-exact.
-    */
-  private[operators] def d2(a: Column, b: Column): Column =
-    dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
   /** Subvector slice of subspace `s` (1-based slice, matching DuckDB's
     * inclusive list slicing).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Naming and lifecycle for PERSISTED index tables (x252/x253/x254/x255).
   *
@@ -23,8 +23,55 @@ import org.apache.spark.sql.SparkSession
   *    before a build, so the metastore holds at most ONE live version per
   *    index family — growth bounded at "current corpus", the compaction a
   *    table format would do for us.
+  *
+  * [[getOrBuild]] is the one build/adopt lifecycle every stored index
+  * goes through.
   */
 private[graft] object StoredTables {
+
+  /** saveAsTable bucket layout: (buckets, bucket-by columns, sort columns). */
+  type Buckets = (Int, Seq[String], Seq[String])
+
+  /** Runs `body` under the one build lock when any of `names` is missing
+    * from this JVM's catalog: one unlocked `tableExists` per table (the
+    * serving fast path), re-checked under the lock so concurrent callers
+    * build once.
+    */
+  def whenMissing(spark: SparkSession, names: Seq[String])(body: => Unit): Unit =
+    if (!names.forall(spark.catalog.tableExists)) synchronized {
+      if (!names.forall(spark.catalog.tableExists)) body
+    }
+
+  /** The stored-index lifecycle: returns the names (`prefix + key`, in
+    * order) of a group of tables that are then in this JVM's catalog.
+    * When one is missing, under the build lock: other-key versions of
+    * each family are swept, a committed build on disk is adopted for the
+    * WHOLE group or for none of it (a group member must never serve next
+    * to a member from a different build), and otherwise every member is
+    * dropped and `build` runs once with the names.
+    */
+  def getOrBuild(spark: SparkSession, key: String, tables: (String, Option[Buckets])*)(
+      build: Seq[String] => Unit): Seq[String] = {
+    val names = tables.map { case (prefix, _) => prefix + key }
+    whenMissing(spark, names) {
+      tables.foreach { case (prefix, _) => sweepStale(spark, prefix, _ == prefix + key) }
+      if (!tables.forall { case (prefix, b) => adoptFromDisk(spark, prefix + key, b) }) {
+        names.foreach(dropTable(spark, _)) // also unregisters a half-adopted member
+        build(names)
+      }
+    }
+    names
+  }
+
+  /** Writes `df` as table `name` with the layout [[adoptFromDisk]] later
+    * re-registers it under.
+    */
+  def save(df: DataFrame, name: String, buckets: Option[Buckets]): Unit = {
+    val w = df.write.mode("overwrite")
+    buckets.fold(w) { case (n, by, sort) =>
+      w.bucketBy(n, by.head, by.tail: _*).sortBy(sort.head, sort.tail: _*)
+    }.saveAsTable(name)
+  }
 
   /** 64-bit content key over the key tuple (corpus path, size, mtime,
     * params...), hex-encoded. NUL join: no field can contain NUL (paths,
@@ -74,7 +121,7 @@ private[graft] object StoredTables {
     * SelectedBucketsCount on adopted tables too).
     */
   def adoptFromDisk(spark: SparkSession, name: String,
-      buckets: Option[(Int, Seq[String], Seq[String])] = None): Boolean = {
+      buckets: Option[Buckets] = None): Boolean = {
     if (spark.catalog.tableExists(name)) return true
     val dir = warehousePath(spark).resolve(name)
     if (!java.nio.file.Files.isRegularFile(dir.resolve("_SUCCESS")))

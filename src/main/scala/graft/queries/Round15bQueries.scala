@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.Dedup
+import graft.operators.{Dedup, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,8 +47,7 @@ object Round15bQueries {
     val fr = side("fr", "fr_id", "fv")
     val scored = en.crossJoin(broadcast(fr))
       .select(col("en_id"), col("fr_id"),
-        round(call_function("graft_cosine", col("ev"), col("fv")), 6)
-          .as("cos"))
+        VectorOps.cos6(col("ev"), col("fv")).as("cos"))
     // (r16 note: checkpointing `scored` would halve the block-pair pass —
     // mutualBestPairs consumes both directions — but it hides the
     // broadcast block join from x235's plan audit, which certifies the
@@ -58,7 +57,7 @@ object Round15bQueries {
   }
 
   private[graft] val bitextMineSql: String =
-    """WITH en AS (
+    s"""WITH en AS (
       |   SELECT d.doc_id AS en_id, CAST(e.embedding AS DOUBLE[]) AS ev
       |   FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
       |   WHERE d.lang = 'en'),
@@ -68,9 +67,7 @@ object Round15bQueries {
       |   WHERE d.lang = 'fr'),
       | scored AS (
       |   SELECT en_id, fr_id,
-      |          round(list_dot_product(ev, fv)
-      |            / (sqrt(list_dot_product(ev, ev))
-      |             * sqrt(list_dot_product(fv, fv))), 6) AS cos
+      |          ${VectorOps.cos6Sql("ev", "fv")} AS cos
       |   FROM en, fr),
       | fwd AS (SELECT en_id, fr_id, cos FROM (
       |     SELECT en_id, fr_id, cos, row_number() OVER (PARTITION BY en_id
