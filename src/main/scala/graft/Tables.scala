@@ -12,8 +12,69 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   * partition pruning applies unchanged. Nothing here collects to the driver.
   */
 object Tables {
+  /** `dir/name.parquet`, its schema inferred at most once per content
+    * key: the path, every file's `path:size:mtime` and the session's
+    * parquet-inference confs (see [[parquet]]). A warm read runs no job.
+    */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The session confs that change what parquet schema inference returns. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schemas by content key, least recently used evicted past
+    * 256 entries.
+    */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean = size() > 256
+    })
+
+  /** Reads the parquet file or directory at `path`, inferring its schema
+    * at most once per content. Schema inference is a Spark job, which a
+    * serving path otherwise pays on every request.
+    *
+    * The cache key is the path, the `path:size:mtime` of every file under
+    * it (one recursive listing), and the session's values of the
+    * inference confs above (`nanosAsLong` reads a TIMESTAMP(NANOS) column
+    * as a long, so the same file has two schemas). A hit returns
+    * `spark.read.schema(cached).parquet(path)`, which runs no job; a miss
+    * returns the plain `spark.read.parquet(path)` and records its schema,
+    * so the cold path reads nothing twice. Rewriting the files changes
+    * the key, so a rewritten table is inferred again; a path that cannot
+    * be listed (or has no files) is read without the cache.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val files = scala.util.Try {
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val it = fs.listFiles(root, true)
+      val b = Seq.newBuilder[String]
+      while (it.hasNext) {
+        val f = it.next()
+        b += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      b.result().sorted
+    }.getOrElse(Nil)
+    if (files.isEmpty) spark.read.parquet(path)
+    else {
+      val key = graft.operators.StoredTables.contentKey((Seq(path) ++ files ++
+        inferenceConfs.map(c => s"$c=${spark.conf.getOption(c).getOrElse("")}")): _*)
+      Option(schemas.get(key)) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          schemas.put(key, df.schema)
+          df
+      }
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")
@@ -44,16 +105,18 @@ object Tables {
     *     nanos ~1.7e18 exceed double's 2^53 exact range, so `/ 1000` would
     *     corrupt low bits).
     * The probe reads only the parquet footer (no data scan), so its cost is
-    * negligible even at cluster scale. `FixtureSchemaSpec` guards this
+    * negligible even at cluster scale, and it goes through [[parquet]]'s
+    * schema cache: the branch reuses the probe's DataFrame, so an events
+    * read infers at most once per content key. `FixtureSchemaSpec` guards this
     * loader against future fixture regenerations by comparing Spark's
     * min/max(ts) to the parquet footer statistics.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val inferred = scala.util.Try(spark.read.parquet(path).schema("ts").dataType)
-    inferred match {
+    val read = scala.util.Try(parquet(spark, path))
+    read.map(_.schema("ts").dataType) match {
       case scala.util.Success(TimestampNTZType) =>
-        spark.read.parquet(path)
+        read.get
       case scala.util.Success(TimestampType) =>
         // Instant-typed column (isAdjustedToUTC=true, or NTZ inference
         // disabled) → UTC wall clock, SESSION-INDEPENDENTLY: the NTZ cast
@@ -61,7 +124,7 @@ object Tables {
         // re-interprets from the session tz to UTC — the two session-tz
         // uses cancel, so a non-UTC driver session reads the same NTZ
         // values DuckDB does.
-        spark.read.parquet(path).withColumn("ts",
+        read.get.withColumn("ts",
           expr("convert_timezone('UTC', CAST(ts AS TIMESTAMP_NTZ))"))
       case scala.util.Success(LongType) =>
         // nanosAsLong inference: legacy TIMESTAMP(NANOS) surfaced as raw longs.

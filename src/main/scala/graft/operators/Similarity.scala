@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *
   * Two paths:
   *  - [[cosineTopK]]: exact brute-force — the correctness baseline. One
-  *    broadcast of the query vector, one codegen'd map over all rows, one
-  *    TakeOrdered. Linear scan, embarrassingly parallel: this *is* the
-  *    right plan even at scale when k is small and no index exists.
+  *    small job fetches the query vector, which the plan then carries as
+  *    a literal: one codegen'd map over all rows, one TakeOrdered, no
+  *    join. Linear scan, embarrassingly parallel: this *is* the right plan
+  *    even at scale when k is small and no index exists.
   *  - [[annTopK]]: random-hyperplane LSH pruning — signature computation is
   *    a narrow map; candidate filtering happens before any full-width dot
   *    product. The scale path when the corpus no longer fits a full scan.
@@ -45,23 +46,54 @@ object Similarity {
     * [[VectorOps.cos6]] of `e` against `q` over the candidate `rows`,
     * best first, ties to the lowest vec_id, `k` kept. Registers
     * [[graft.functions.GraftFunctions]] on the rows' session.
+    *
+    * `copies` > 1 admits rows holding one vec_id up to `copies` times
+    * (same `e`, so same score): the duplicates of one vector sort next to
+    * each other, so the top k·copies rows hold every copy of the best k
+    * vectors, and deduplicating those few rows before the final top-k
+    * gives the same answer as deduplicating every candidate first — with
+    * no shuffle of the candidates.
     */
-  private def rerank(rows: DataFrame, e: Column, q: Column, k: Int): DataFrame = {
+  private def rerank(rows: DataFrame, e: Column, q: Column, k: Int,
+      copies: Int = 1): DataFrame = {
     graft.functions.GraftFunctions.register(rows.sparkSession)
-    rows.select(col("vec_id"), cos6(e, q).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-      .limit(k)
+    def top(scored: DataFrame, n: Int): DataFrame =
+      scored.orderBy(col("cos_sim").desc, col("vec_id").asc).limit(n)
+    val scored = rows.select(col("vec_id"), cos6(e, q).as("cos_sim"))
+    if (copies == 1) top(scored, k)
+    else top(top(scored, k * copies).dropDuplicates("vec_id"), k)
   }
 
-  /** Exact top-k by cosine against the embedding of `queryId`: one
-    * broadcast of the query vector, all rows scored against it.
+  /** The embedding of `queryId` on the driver, fetched with one small
+    * filtered job: the raw float array and its [[toDouble]] cast, the
+    * cast every route scores with. None for an absent id. Each serving
+    * route builds its plan around this value as a literal
+    * ([[rerankLit]]) instead of joining a query row: an array literal is
+    * a reference object in generated code, not inlined text, so the
+    * stage code does not vary with the query.
     */
-  def cosineTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    val query = emb.filter(col("vec_id") === queryId)
-      .select(toDouble(col("embedding")).as("q"))
-    rerank(emb.select(col("vec_id"), toDouble(col("embedding")).as("e"))
-      .crossJoin(broadcast(query)), col("e"), col("q"), k)
-  }
+  private def fetchQuery(emb: DataFrame, queryId: Long): Option[(Array[Float], Array[Double])] =
+    emb.filter(col("vec_id") === queryId)
+      .select(col("embedding"), toDouble(col("embedding")))
+      .collect().headOption
+      .map(r => (r.getSeq[Float](0).toArray, r.getSeq[Double](1).toArray))
+
+  /** [[rerank]] against a fetched query vector `q` as a literal. An
+    * absent query (None) keeps the two output columns and yields zero
+    * rows.
+    */
+  private def rerankLit(rows: DataFrame, e: Column, q: Option[Array[Double]],
+      k: Int, copies: Int = 1): DataFrame =
+    rerank(if (q.isDefined) rows else rows.limit(0), e,
+      typedLit(q.getOrElse(Array.emptyDoubleArray)), k, copies)
+
+  /** Exact top-k by cosine against the embedding of `queryId`: the query
+    * vector is fetched once and every row is scored against it as a
+    * literal, with no join.
+    */
+  def cosineTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame =
+    rerankLit(emb.select(col("vec_id"), toDouble(col("embedding")).as("e")),
+      col("e"), fetchQuery(emb, queryId).map(_._2), k)
 
   /** Hyperplane component (p, d): a 3-round multiply/xor-shift integer
     * hash of i = p·64 + d, mapped into [-0.5, 0.5). Every step stays
@@ -104,6 +136,28 @@ object Similarity {
        |                       THEN 1 << pl.p ELSE 0 END) AS INT) AS sig
        |  FROM e CROSS JOIN pl GROUP BY 1)""".stripMargin
 
+  /** The `planes` × 64 hyperplane matrix of [[planeComponent]]. */
+  private def hyperplanes(planes: Int): Array[Array[Double]] =
+    Array.tabulate(planes, 64)((p, d) => planeComponent(p.toLong * 64 + d))
+
+  /** The hyperplane signature of one double vector `e`: bit p is set when
+    * the dot product with plane p, accumulated ascending over d, is
+    * positive. The one body of [[hyperplaneSigs]]'s UDF and of the stored
+    * probe's driver-side signature.
+    */
+  private def signature(h: Array[Array[Double]], e: Seq[Double]): Int = {
+    var sig = 0
+    var p = 0
+    while (p < h.length) {
+      var s = 0.0
+      var d = 0
+      while (d < h(p).length && d < e.length) { s += h(p)(d) * e(d); d += 1 }
+      if (s > 0) sig |= (1 << p)
+      p += 1
+    }
+    sig
+  }
+
   /** (vec_id, e, sig): double-cast embeddings plus the `planes`-bit
     * hyperplane signature — a narrow map (one UDF pass, no shuffle).
     * The per-plane dot product accumulates ascending over d, matching
@@ -112,23 +166,8 @@ object Similarity {
     */
   private def hyperplaneSigs(spark: SparkSession, emb: DataFrame,
       planes: Int): DataFrame = {
-    val dim = 64
-    val hp = Array.tabulate(planes, dim)((p, d) =>
-      planeComponent(p.toLong * dim + d))
-    val hpB = spark.sparkContext.broadcast(hp)
-    val sigUdf = udf { (e: Seq[Double]) =>
-      val h = hpB.value
-      var sig = 0
-      var p = 0
-      while (p < planes) {
-        var s = 0.0
-        var d = 0
-        while (d < dim && d < e.length) { s += h(p)(d) * e(d); d += 1 }
-        if (s > 0) sig |= (1 << p)
-        p += 1
-      }
-      sig
-    }
+    val hpB = spark.sparkContext.broadcast(hyperplanes(planes))
+    val sigUdf = udf((e: Seq[Double]) => signature(hpB.value, e))
     emb.select(col("vec_id"), toDouble(col("embedding")).as("e"))
       .withColumn("sig", sigUdf(col("e")))
   }
@@ -175,6 +214,19 @@ object Similarity {
     if (flips == 0) col("bv")
     else explode(array(col("bv") +:
       (0 until flips).map(i => col("bv").bitwiseXOR(lit(1 << i))): _*)).as("bv")
+
+  /** The driver-side twin of [[bandedSigs]] plus [[probeBv]] for one
+    * signature: each band with its own bucket value and that value's
+    * first `flips` 1-bit flips.
+    */
+  private def probeBands(sig: Int, planes: Int, bands: Int,
+      flips: Int): Seq[(Int, Seq[Int])] = {
+    val bandBits = planes / bands
+    (0 until bands).map { b =>
+      val bv = (sig >> (b * bandBits)) & ((1 << bandBits) - 1)
+      b -> (bv +: (0 until flips).map(i => bv ^ (1 << i)))
+    }
+  }
 
   /** Banded-bucket ANN — the 100 TB *routing* path. [[annTopK]] prunes by
     * hamming distance but still evaluates the filter against every row;
@@ -238,32 +290,33 @@ object Similarity {
         planes, bands), tbls.head, sigBuckets)
     }.head
 
-  private val probeSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("band INT, bv INT, q ARRAY<DOUBLE>")
-
-  /** The shared stored-index probe plan: the query's band rows, widened
-    * by [[probeBv]], collected; per signature TABLE, a bucket-PRUNED scan
-    * (bv In-filter) equi-joined with the broadcast probe rows; segments
-    * union AFTER their pruned scans (x255's LSM shape — each segment is
-    * bucket-pruned independently, the index side is never shuffled). A
-    * vector lives in exactly one segment, so the per-vec dedup and
-    * re-rank semantics equal the single-table route.
+  /** The shared stored-index probe plan. The query vector is fetched
+    * once; its signature is computed on the driver with [[signature]]
+    * and split into (band, bv) probe pairs by [[probeBands]]. Per
+    * signature TABLE, a bucket-PRUNED scan keeps the rows matching a
+    * probe pair: a pushed `bv IN (…)` (the bucket pruning) plus the
+    * (band, bv) predicate, with no join. Segments union AFTER their
+    * pruned scans (x255's LSM shape — each segment is bucket-pruned
+    * independently, the index side is never shuffled). A vector lives in
+    * exactly one segment, so the per-vec dedup and re-rank semantics
+    * equal the single-table route. The dedup runs on the re-rank's top
+    * k·bands rows ([[rerank]]'s `copies`), so no candidate is shuffled
+    * and the bucketed scan keeps its bucket pruning (with no exchange
+    * below the dedup, the planner does not switch it to the plain
+    * reader).
     */
   private def annProbeStored(spark: SparkSession, emb: DataFrame,
       tbls: Seq[String], queryId: Long, k: Int, planes: Int,
       bands: Int, flips: Int = 0): DataFrame = {
-    val probe = bandedSigs(hyperplaneSigs(spark,
-        emb.filter(col("vec_id") === queryId), planes), planes, bands)
-      .select(col("band"), probeBv(flips), col("e").as("q"))
-      .collect()
-    val probeDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(probe.toSeq, 1), probeSchema)
-    val bvs = probe.map(_.getInt(1)).distinct.toSeq
-    rerank(tbls.map(t => spark.table(t).filter(col("bv").isin(bvs: _*)))
-      .reduce(_.unionByName(_))
-      .join(broadcast(probeDf), Seq("band", "bv"))
-      .select(col("vec_id"), col("e"), col("q"))
-      .dropDuplicates("vec_id"), col("e"), col("q"), k)
+    val q = fetchQuery(emb, queryId).map(_._2)
+    val probes = q.toSeq.flatMap(v =>
+      probeBands(signature(hyperplanes(planes), v.toSeq), planes, bands, flips))
+    val bvs = probes.flatMap(_._2).distinct
+    val hit = probes.map { case (b, vs) => col("band") === b && col("bv").isin(vs: _*) }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    // A vector can match on several bands: up to `bands` copies.
+    rerankLit(tbls.map(t => spark.table(t).filter(col("bv").isin(bvs: _*) && hit))
+      .reduce(_.unionByName(_)), col("e"), q, k, copies = bands)
   }
 
   /** x252: [[annTopKBanded]]'s probe served from a PERSISTED bucketed
@@ -273,17 +326,17 @@ object Similarity {
     * a table bucketed by `bv` (the BucketingSpec precedent), so a probe
     * is: bucket-PRUNED scan (only the ≤ `bands` files whose bucket holds
     * a probed band value are read — `SelectedBucketsCount` in the plan,
-    * PlanAudit-asserted) → equi-join with the broadcast probe rows → the
+    * PlanAudit-asserted) → the (band, bv) probe predicate, no join → the
     * same exact-cosine re-rank. No shuffle ever touches the index side,
     * and at 100 TB the scan cost is ~bands/2^bandBits of the index
     * instead of all of it. Identical candidate semantics and arithmetic
     * to the in-memory route → SHARES x81's oracle verbatim.
     *
-    * The one driver-side step is collecting the single probe row's
-    * `bands` (band, bv) values to build the pruning predicate — the
-    * bounded serving-path collect every ANN system performs (you cannot
-    * route to buckets you haven't looked at), same class as x89's probe
-    * set.
+    * The one driver-side step is fetching the query vector (one small
+    * filtered job); its `bands` (band, bv) values and the pruning
+    * predicate are computed from it on the driver — the bounded
+    * serving-path round-trip every ANN system makes (you cannot route to
+    * buckets you haven't looked at).
     */
   def annTopKBandedStored(spark: SparkSession, emb: DataFrame, dir: String,
       queryId: Long, k: Int, planes: Int = 16, bands: Int = 4): DataFrame = {
@@ -305,8 +358,8 @@ object Similarity {
     * 2-phase, so a crashed half-built set is swept and re-streamed
     * instead of silently served.
     *
-    * A probe is x252's plan PER SEGMENT — bucket-pruned scan + broadcast
-    * probe join — unioned after pruning; at 100 TB the probe touches
+    * A probe is x252's plan PER SEGMENT — bucket-pruned scan + (band, bv)
+    * probe predicate — unioned after pruning; at 100 TB the probe touches
     * ~bands/2^bandBits of EACH segment and the arrival path touches only
     * the new batch. Signatures are per-row deterministic, so
     * union-of-segments ≡ the batch-built index and the probe SHARES
@@ -812,7 +865,8 @@ object Similarity {
     // global assignment of EVERY vector to its final cell
     val assigned = KMeansLite.assign(vecs, cents)
     val qv = vecs.filter(col("vec_id") === queryId).select(col("v").as("qv"))
-    rerank(assigned.join(broadcast(nearestCells(cents, qv, nprobe)), "cid")
+    rerank(assigned.join(broadcast(nearestCells(cents.crossJoin(broadcast(qv)),
+        col("qv"), nprobe)), "cid")
       .crossJoin(broadcast(qv)), col("v"), col("qv"), k)
   }
 
@@ -852,14 +906,14 @@ object Similarity {
     (vecs, cents, () => Seq(vecs, trained, cents).foreach(QueryDef.dropCheckpoint))
   }
 
-  /** The `nprobe` cells whose centroid is nearest the query vector `qv`
-    * (squared L2, cid tiebreak; the centroid table is nlist rows, so the
-    * sort is driver-trivial). The query's own cell has minimal d2, so
-    * rank-1 self-recall holds structurally.
+  /** The `nprobe` cells whose centroid `cv` is nearest the query vector
+    * `qv` (a column of `cents`, or a literal; squared L2, cid tiebreak;
+    * the centroid table is nlist rows, so the sort is driver-trivial).
+    * The query's own cell has minimal d2, so rank-1 self-recall holds
+    * structurally.
     */
-  private def nearestCells(cents: DataFrame, qv: DataFrame, nprobe: Int): DataFrame =
-    cents.crossJoin(broadcast(qv))
-      .select(col("cid"), KMeansLite.d2(col("qv"), col("cv")).as("d2"))
+  private def nearestCells(cents: DataFrame, qv: Column, nprobe: Int): DataFrame =
+    cents.select(col("cid"), KMeansLite.d2(qv, col("cv")).as("d2"))
       .orderBy(col("d2"), col("cid")).limit(nprobe)
       .select("cid")
 
@@ -869,10 +923,11 @@ object Similarity {
     * the trained centroid table (nlist rows) and the global cell
     * assignment (bucketed by `cid` — the IVF partition key) are written
     * once per (corpus, params); a probe then TRAINS NOTHING — it reads
-    * the 16-row centroid table, ranks cells against the query
-    * (driver-bounded nprobe collect, the bucket-routing collect every
-    * IVF serving system performs), bucket-PRUNES the cell table scan to
-    * the nprobe cells, and exact-re-ranks inside them. Identical
+    * the 16-row centroid table, ranks cells against the fetched query
+    * vector as a literal (driver-bounded nprobe collect, the
+    * bucket-routing collect every IVF serving system performs),
+    * bucket-PRUNES the cell table scan to the nprobe cells, and
+    * exact-re-ranks inside them against the same literal. Identical
     * trajectory and arithmetic to x23 (same deterministic trainer
     * builds the tables) → shares x23's oracle VERBATIM.
     */
@@ -891,10 +946,10 @@ object Similarity {
       StoredTables.save(KMeansLite.assign(vecs, cents), tbls(1), cellBuckets)
       release()
     }
-    val qv = KMeansLite.vectors(emb).filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"))
-    val probedCids = nearestCells(spark.table(centTbl), qv, nprobe)
-      .collect().map(_.getLong(0)).toSeq
+    val q = fetchQuery(emb, queryId).map(_._2)
+    val probedCids = q.toSeq.flatMap(v =>
+      nearestCells(spark.table(centTbl), typedLit(v), nprobe)
+        .collect().map(_.getLong(0)))
     // Pruning mechanics, honestly: the In(cid, …) literal pushes to the
     // scan either way. With bucketed reading active it prunes whole
     // BUCKETS (SelectedBucketsCount — Round19Spec proves it under
@@ -906,8 +961,8 @@ object Similarity {
     // row groups are cid-clustered and non-probed cells' IO is skipped
     // (PlanAudit asserts the pushed filter). Identical bytes-touched
     // asymptotics (~nprobe/nlist of the index) by either mechanism.
-    rerank(spark.table(cellTbl).filter(col("cid").isin(probedCids: _*))
-      .crossJoin(broadcast(qv)), col("v"), col("qv"), k)
+    rerankLit(spark.table(cellTbl).filter(col("cid").isin(probedCids: _*)),
+      col("v"), q, k)
   }
 
   /** DuckDB replay of [[ivfTopK]] — sampling, two Lloyd iterations on the
@@ -954,10 +1009,23 @@ object Similarity {
        |ORDER BY cos_sim DESC, vec_id ASC LIMIT $k""".stripMargin
   }
 
+  /** The int8 code of one vector: a per-vector scale (max-abs / 127) and
+    * each component rounded into [-127, 127]. The one body of the
+    * executor-side corpus map and the driver-side query quantization.
+    */
+  private def quantize(v: Array[Float]): (Array[Byte], Double) = {
+    val scale = math.max(v.map(x => math.abs(x.toDouble)).max, 1e-30) / 127.0
+    (v.map(x => math.max(-127, math.min(127, math.round(x / scale))).toByte), scale)
+  }
+
   /** Int8 scalar-quantized top-k: each vector is quantized to bytes with a
     * per-vector scale (max-abs / 127); candidate scoring runs on the int8
     * codes (4× less memory traffic than float32, 8× less than the double
     * path), then the top `rerank` candidates are re-scored exactly.
+    *
+    * The query vector is fetched once and quantized on the driver with
+    * [[quantize]]; the ≤ `rerank` candidate ids are collected, and the
+    * exact re-rank scores `vec_id IN (…)` against the query as a literal.
     *
     * This is the standard memory-bound-scan trick at 100 TB: the quantized
     * codes fit where floats don't, and the exact re-rank bounds the
@@ -968,31 +1036,31 @@ object Similarity {
     import spark.implicits._
     val quantized = emb.select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])]
-      .map { case (id, v) =>
-        val scale = math.max(v.map(x => math.abs(x.toDouble)).max, 1e-30) / 127.0
-        (id, v.map(x => math.max(-127, math.min(127, math.round(x / scale))).toByte), scale)
-      }
+      .map { case (id, v) => val (code, scale) = quantize(v); (id, code, scale) }
       .toDF("vec_id", "code", "scale")
-    val q = quantized.filter(col("vec_id") === queryId)
-      .select(col("code").as("qcode"), col("scale").as("qscale"))
-    val approxDot = udf { (a: Array[Byte], b: Array[Byte], sa: Double, sb: Double) =>
-      var s = 0L
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i).toLong * b(i).toLong; i += 1 }
-      s * sa * sb
+    val q = fetchQuery(emb, queryId)
+    val candidates = q.toSeq.flatMap { case (raw, _) =>
+      val (qcode, qscale) = quantize(raw)
+      // The quantized query rides in the UDF's closure, a reference
+      // object in generated code: the stage code does not vary with the
+      // query (an inlined double literal would).
+      val approxDot = udf { (a: Array[Byte], sa: Double) =>
+        var s = 0L
+        var i = 0
+        val n = math.min(a.length, qcode.length)
+        while (i < n) { s += a(i).toLong * qcode(i).toLong; i += 1 }
+        s * sa * qscale
+      }
+      quantized
+        .select(col("vec_id"), approxDot(col("code"), col("scale")).as("adot"))
+        .orderBy(col("adot").desc, col("vec_id").asc)
+        .limit(rerank)
+        .select("vec_id").collect().map(_.getLong(0))
     }
-    val candidates = quantized.crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        approxDot(col("code"), col("qcode"), col("scale"), col("qscale")).as("adot"))
-      .orderBy(col("adot").desc, col("vec_id").asc)
-      .limit(rerank)
     // exact re-rank of the candidate set (same arithmetic as q18)
-    val exact = emb.select(col("vec_id"), toDouble(col("embedding")).as("e"))
-    val query = exact.filter(col("vec_id") === queryId).select(col("e").as("q"))
-    this.rerank(candidates.select("vec_id") // the param `rerank` shadows it
-      .join(exact, "vec_id")
-      .crossJoin(broadcast(query)), col("e"), col("q"), k)
+    rerankLit(emb.filter(col("vec_id").isin(candidates: _*))
+      .select(col("vec_id"), toDouble(col("embedding")).as("e")),
+      col("e"), q.map(_._2), k)
   }
 
   // ---- declared queries -------------------------------------------------
@@ -1220,7 +1288,7 @@ object Similarity {
       Some(annAnswerSql(bandEq))),
 
     // x81 served from the PERSISTED bucketed signature index (bucket-
-    // pruned scan + broadcast probe join) — x81's oracle VERBATIM: the
+    // pruned scan + (band, bv) probe predicate) — x81's oracle VERBATIM: the
     // stored route must answer exactly what the in-memory route answers.
     QueryDef(
       "x252_ann_stored_index",

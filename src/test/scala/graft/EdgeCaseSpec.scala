@@ -45,9 +45,13 @@ class EdgeCaseSpec extends SparkSuite {
 
   test("similarity top-k on a missing query id yields zero rows, not an exception") {
     val emb = Tables.embeddings(spark, sfDir)
-    // query id far outside the corpus: the cross join against an empty
-    // query side yields an empty result (not an exception) for the
-    // brute-force path — callers see zero rows, the composable outcome.
-    assert(Similarity.cosineTopK(emb, 999999999L, 10).isEmpty)
+    // query id far outside the corpus: no query vector is found, and
+    // every serving route — brute force, stored LSH, stored IVF, int8 —
+    // answers with zero rows (not an exception), the composable outcome.
+    val q = 999999999L
+    assert(Similarity.cosineTopK(emb, q, 10).isEmpty)
+    assert(Similarity.annTopKBandedStored(spark, emb, sfDir, q, 10).isEmpty)
+    assert(Similarity.ivfTopKStored(spark, emb, sfDir, q, 10).isEmpty)
+    assert(Similarity.quantizedTopK(spark, emb, q, 10).isEmpty)
   }
 }
