@@ -27,20 +27,13 @@ import org.apache.spark.sql.functions._
 object ClusterEval {
 
   private val K = 4
-  private val Iters = 2
 
   def silhouette(spark: SparkSession, emb: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     // Materialized (r17): vecs feeds the init TakeOrdered and both
     // assignment passes — each re-ran the parquet scan + cast.
     val vecs = KMeansLite.vectors(emb).localCheckpoint()
-    val c0 = KMeansLite.initCentroids(vecs, K)
-    val a1 = KMeansLite.assign(vecs, c0)
-    // Materialized (r16): c1 feeds the second assignment AND the
-    // silhouette distance grid — lazily each broadcast re-ran the whole
-    // first k-means iteration (7 parquet scans in one plan). K rows.
-    val c1 = KMeansLite.recompute(a1).localCheckpoint()
-    val a2 = KMeansLite.assign(vecs, c1) // (vec_id, cid, v)
+    val (a2, c1) = KMeansLite.lloyd2(vecs, K) // a2: (vec_id, cid, v)
 
     val d2 = KMeansLite.d2(col("v"), col("cv"))
     val dMicro = (round(sqrt(greatest(d2, lit(0.0))), 6) * 1000000)

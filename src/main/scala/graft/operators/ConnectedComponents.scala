@@ -44,18 +44,24 @@ object ConnectedComponents {
     */
   private[graft] def alternatingStarWithRounds(pairs: DataFrame)
       : (DataFrame, Int) = {
+    // Exact fixpoint check on the two checkpointed iterates: multiset
+    // tally per canonical edge — ±1 cancels iff the sets are equal.
+    // Runs on materialized blocks (no recompute); rounds are O(log n).
+    val same = (prev: DataFrame, next: DataFrame, _: Int) =>
+      next.select(col("a"), col("b"), lit(1L).as("s"))
+        .unionByName(prev.select(col("a"), col("b"), lit(-1L).as("s")))
+        .groupBy("a", "b").agg(sum(col("s")).as("s"))
+        .filter(col("s") =!= 0L)
+        .isEmpty
     // Canonical undirected edges (a < b), deduped; self-loops dropped.
-    var edges = pairs
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-
-    var rounds = 0
-    var converged = false
-    while (!converged) {
-      rounds += 1
+    val (edges, rounds) = GraphLoops.fixpoint(
+        pairs
+          .select(least(col("a"), col("b")).as("a"),
+            greatest(col("a"), col("b")).as("b"))
+          .filter(col("a") =!= col("b"))
+          .distinct()
+          .localCheckpoint(),
+        Int.MaxValue, Some(same)) { (edges, _) =>
       // Large-star: symmetrize; per node u with neighborhood N(u),
       // m = min(N(u) ∪ {u}); emit (v, m) for every v ∈ N(u), v > u.
       val sym = edges.select(col("a").as("u"), col("b").as("v"))
@@ -76,26 +82,12 @@ object ConnectedComponents {
       // repeats per neighbor) — a two-branch union would re-run the
       // large-star window per branch.
       val sm = ls.select(col("b").as("u"), col("a").as("v"))
-      val ss = sm.withColumn("m", min(col("v")).over(wU))
+      GraphLoops.Iterate(sm.withColumn("m", min(col("v")).over(wU))
         .select(col("m").as("a"), explode(
           when(col("v") =!= col("m"), array(col("v"), col("u")))
             .otherwise(array(col("u")))).as("b"))
         .filter(col("a") =!= col("b"))
-        .distinct()
-        .localCheckpoint()
-
-      // Exact fixpoint check on the two checkpointed iterates: multiset
-      // tally per canonical edge — ±1 cancels iff the sets are equal.
-      // Runs on materialized blocks (no recompute); rounds are O(log n).
-      converged = ss.select(col("a"), col("b"), lit(1L).as("s"))
-        .unionByName(edges.select(col("a"), col("b"), lit(-1L).as("s")))
-        .groupBy("a", "b").agg(sum(col("s")).as("s"))
-        .filter(col("s") =!= 0L)
-        .isEmpty
-      // The convergence check above was the old iterate's last consumer —
-      // drop its blocks now or they accumulate one store per round.
-      graft.QueryDef.dropCheckpoint(edges)
-      edges = ss
+        .distinct())
     }
 
     // Star forest: every edge is (center=min, leaf); centers label

@@ -43,10 +43,7 @@ object IvfPq {
 
     // Coarse quantizer: the x101 trajectory (init → assign → decimal
     // recompute → assign) on the full 64-d vectors.
-    val cc0 = KMeansLite.initCentroids(vecs, coarseK)
-    val ca1 = KMeansLite.assign(vecs, cc0)
-    val cc1 = KMeansLite.recompute(ca1).localCheckpoint()
-    val ca2 = KMeansLite.assign(vecs, cc1)
+    val (ca2, cc1) = KMeansLite.lloyd2(vecs, coarseK)
 
     // Residuals — feed four subspace trainers plus the code join, so
     // materialize once (the orientByDegree lesson).

@@ -101,6 +101,19 @@ object KMeansLite {
       .agg(transform(array_sort(collect_list(struct(col("idx"), col("cv_el")))),
         _.getField("cv_el")).as("cv"))
 
+  /** The two-iteration Lloyd trajectory the x101 oracle replays — init
+    * → assign → recompute → assign — with the recomputed centroids
+    * checkpointed (k rows): they feed the second assignment AND the
+    * caller's own consumers (silhouette grid, residuals, codebook LUTs),
+    * and lazily each consumer would re-run the first iteration from the
+    * scan up. Returns the final assignment (vec_id, cid, v) and those
+    * centroids (cid, cv).
+    */
+  private[operators] def lloyd2(vecs: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    val c1 = recompute(assign(vecs, initCentroids(vecs, k))).localCheckpoint()
+    (assign(vecs, c1), c1)
+  }
+
   /** Fixed-iteration Lloyd's: returns the final assignment. */
   def kmeans(emb: DataFrame, k: Int, iters: Int): DataFrame = {
     // Materialized (r17): vecs feeds the init TakeOrdered plus one

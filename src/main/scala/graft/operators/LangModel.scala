@@ -74,9 +74,8 @@ object LangModel {
       .select((col("n") * 16L + col("chars")).as("bytes"))
       .head().getLong(0)
     val bar = Dedup.effectiveBroadcastBar(spark, "graft.lm.broadcastMaxBytes")
-    val small = bar > 0 && modelBytes <= bar
     def gated(model: DataFrame): DataFrame =
-      if (small) broadcast(model) else model
+      Dedup.gatedBroadcast(model, modelBytes, bar)
 
     bi.join(gated(c2), Seq("w1", "w2"))
       .join(gated(c1), Seq("w1"))

@@ -96,8 +96,8 @@ object NaiveBayes {
       .select((col("n") * 16L + col("chars")).as("bytes"))
       .head().getLong(0)
     val nbBar = Dedup.effectiveBroadcastBar(spark, "graft.nb.broadcastMaxBytes")
-    val small = nbBar > 0 && modelBytes <= nbBar
-    def gated(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    def gated(df: DataFrame): DataFrame =
+      Dedup.gatedBroadcast(df, modelBytes, nbBar)
 
     // Score the test token-TYPE table against every class: left join the
     // model so unseen words take the add-one floor (cwc = 0).

@@ -53,16 +53,13 @@ object ProductQuant {
     */
   private[operators] def trainSubspace(vecs: DataFrame, s: Int): (DataFrame, DataFrame) = {
     val vs = vecs.select(col("vec_id"), sub(col("v"), s).as("v"))
-    val c0 = KMeansLite.initCentroids(vs, PQ.k)
-    val a1 = KMeansLite.assign(vs, c0)
-    // Materialized (r16): the centroid table feeds the second assignment
-    // AND every downstream LUT build, and the code table feeds the M-way
+    // Materialized (r16): the centroids (checkpointed by lloyd2) feed
+    // every downstream LUT build, and the code table feeds the M-way
     // code join plus the ADC — lazily each reference re-ran the whole
     // train trajectory from the parquet scan up (x166's pre-r16 plan
     // re-scanned the embeddings 35 times across its 4 subspaces). Both
     // frames are tiny: k rows of centroids, |corpus| id+code rows.
-    val c1 = KMeansLite.recompute(a1).localCheckpoint()
-    val a2 = KMeansLite.assign(vs, c1)
+    val (a2, c1) = KMeansLite.lloyd2(vs, PQ.k)
     (a2.select(col("vec_id"), col("cid").as(s"code_$s")).localCheckpoint(),
       c1)
   }

@@ -254,10 +254,9 @@ object Similarity {
     val banded = bandedSigs(hyperplaneSigs(spark, emb, planes), planes, bands)
     val probes = banded.filter(col("vec_id") === queryId)
       .select(col("band"), probeBv(flips), col("e").as("q"))
-    rerank(banded.join(broadcast(probes), Seq("band", "bv"))
-      .select(col("vec_id"), col("e"), col("q"))
-      .dropDuplicates("vec_id"), // a row can match on several bands
-      col("e"), col("q"), k)
+    // A vector can match on several bands (once per band at most).
+    rerank(banded.join(broadcast(probes), Seq("band", "bv")),
+      col("e"), col("q"), k, copies = bands)
   }
 
   /** Content key of a stored index over `dir`'s embeddings: the index
@@ -796,8 +795,6 @@ object Similarity {
     val probeBytes = nFr * bands.toLong * masks.size * 32L
     val vecBytes = nFr * (24L + dim.toLong * 8L)
     val bar = Dedup.effectiveBroadcastBar(spark, "graft.ann.broadcastMaxBytes")
-    def gated(df: DataFrame, bytes: Long): DataFrame =
-      if (bar > 0 && bytes <= bar) broadcast(df) else df
     // Candidates are deduped as BARE ID PAIRS before any vector travels:
     // the bucket join fans each pair out once per matching (band, mask),
     // and carrying the two 64-double arrays through that fanout into the
@@ -810,15 +807,16 @@ object Similarity {
       .select(col("vec_id").as("fr_id"), col("band"),
         explode(array(masks.map(m => col("bv").bitwiseXOR(lit(m))): _*))
           .as("bv"))
-    val cand = enB.join(gated(frB, probeBytes), Seq("band", "bv"))
+    val cand = enB
+      .join(Dedup.gatedBroadcast(frB, probeBytes, bar), Seq("band", "bv"))
       .select("en_id", "fr_id").distinct()
     // Vectors rejoin once per surviving pair: the en side co-partitions on
     // en_id (corpus-scale safe — a plain equi-join), the fr block
     // broadcasts only under the byte gate.
     cand.join(side("en").select(col("vec_id").as("en_id"),
         col("e").as("ev")), "en_id")
-      .join(gated(side("fr").select(col("vec_id").as("fr_id"),
-        col("e").as("fv")), vecBytes), "fr_id")
+      .join(Dedup.gatedBroadcast(side("fr").select(col("vec_id").as("fr_id"),
+        col("e").as("fv")), vecBytes, bar), "fr_id")
       .select(col("en_id"), col("fr_id"), cos6(col("ev"), col("fv")).as("cos"))
   }
 

@@ -95,8 +95,6 @@ object Round10Queries {
     // back to the exact shuffle plan this replaced.
     val bar = Dedup.effectiveBroadcastBar(s, "graft.graph.broadcastMaxBytes")
     val nodeBytes = deg.count() * 16L
-    def gated(d: DataFrame, estBytes: Long) =
-      if (bar > 0 && estBytes <= bar) broadcast(d) else d
     var removed: List[DataFrame] = Nil
     var rounds = 0
     var converged = false
@@ -111,13 +109,14 @@ object Round10Queries {
         graft.QueryDef.dropCheckpoint(doomed)
       } else {
         removed ::= doomed
-        val dx = gated(doomed.select(col("x").as("dx")), nDoomed * 8L)
+        val dx = Dedup.gatedBroadcast(doomed.select(col("x").as("dx")),
+          nDoomed * 8L, bar)
         // per-survivor removal counts: one scan of the materialized
         // adjacency against the (small) doomed set — edges never rewritten
         val delta = adj.join(dx, col("y") === col("dx"))
           .groupBy(col("nb").as("x")).agg(count(lit(1)).as("rm"))
         val next = deg.join(dx, col("x") === col("dx"), "left_anti")
-          .join(gated(delta, nodeBytes), Seq("x"), "left")
+          .join(Dedup.gatedBroadcast(delta, nodeBytes, bar), Seq("x"), "left")
           .select(col("x"),
             (col("d") - coalesce(col("rm"), lit(0L))).as("d"))
           .localCheckpoint()

@@ -173,64 +173,29 @@ object Round11bQueries {
     * of one connected component.
     *
     * Determinism (LPA is famously order-sensitive — asynchronous update
-    * + random tie-breaks in the paper): synchronous rounds, fixed count
-    * (3, unrolled into the plan like x144 — no data-dependent loop), and
+    * + random tie-breaks in the paper): synchronous rounds, a fixed
+    * budget of 3 with no data-dependent stopping probe (like x144), and
     * the plurality argmax rendered as the exact two-step — max count,
     * then MIN label among the tied — so every engine, partitioning, and
     * run produces identical labels. The oracle replays the identical
     * trajectory round for round.
     *
-    * Scale: each round = one equi-join (edges ⋈ labels on dst) + two
-    * label-keyed hash aggregates; the edge table checkpoints once and is
-    * consumed by all rounds (the x144 materialization decision). Output
-    * is community-sized, not node-sized.
+    * Graph: association-strength pruned (edges co-purchased in >= 2
+    * distinct orders). On the raw graph (every pair sharing ANY order)
+    * min-tie LPA floods to ONE label in 3 rounds — density, not a bug;
+    * the weighted prune is both the standard community-graph
+    * construction and a 4× edge-set cut.
+    *
+    * The round is [[graft.operators.GraphLoops.lpa]]'s (plurality
+    * checkpoint and broadcast gate documented there), shared with the
+    * convergence twin `GraphLoops.lpaConverged` and run under the
+    * fixpoint loop, which frees each prior label iterate and plurality
+    * table. The final labels stay checkpointed: the returned report
+    * reads their blocks, and nothing in the query frees them.
     */
-  private def lpaCommunities(s: SparkSession, dir: String): DataFrame = {
-    // Association-strength prune: keep edges co-purchased in >= 2 distinct
-    // orders. On the raw graph (every pair sharing ANY order) min-tie LPA
-    // floods to ONE label in 3 rounds — density, not a bug; the weighted
-    // prune is both the standard community-graph construction and a 4×
-    // edge-set cut (a real scale lever: the w>=2 tail is Zipf-thin).
-    // Served from the per-run shared co-purchase table (r11 verdict #4) —
-    // every round scans the shared checkpointed blocks through the w>=2
-    // filter instead of re-deriving the lineitem self-join.
-    val edges = graft.operators.CoPurchaseGraph.strong(s, dir)
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      // Materialized (r16): |V| rows; also the byte-gate measurement.
-      .localCheckpoint()
-    // r16 (guide §2.4/§3.1): `cnt` was referenced twice per round (mx +
-    // the tie-break join), so the lazy 3-round plan held 2³ copies of
-    // round 1 — 58 Exchanges / 21 SortMergeJoins in one plan. Each round
-    // now materializes its plurality table once, and the |V|-sized sides
-    // (labels, mx) broadcast under the measured node-count gate so the
-    // edge list streams from the shared checkpointed blocks. Past the
-    // bar every join falls back to the former shuffle plan.
-    val nodeBytes = labels.count() * 16L
-    val bar = graft.operators.Dedup.effectiveBroadcastBar(
-      s, "graft.graph.broadcastMaxBytes")
-    def gated(d: DataFrame) =
-      if (bar > 0 && nodeBytes <= bar) broadcast(d) else d
-    for (_ <- 1 to 3) {
-      val cnt = edges
-        .join(gated(labels.withColumnRenamed("node", "dst")), "dst")
-        .groupBy(col("src").as("node"), col("lbl")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
-      val mx = cnt.groupBy("node").agg(max(col("c")).as("mc"))
-      val next = cnt.join(gated(mx), "node").filter(col("c") === col("mc"))
-        .groupBy("node").agg(min(col("lbl")).as("lbl"))
-        .localCheckpoint()
-      graft.QueryDef.dropCheckpoint(labels)
-      graft.QueryDef.dropCheckpoint(cnt)
-      labels = next
-    }
-    // The final iterate is checkpointed; the aggregate below reads its
-    // blocks. The per-query bench sweep reclaims them.
-    labels.groupBy("lbl")
-      .agg(count(lit(1)).as("n_members"), min(col("node")).as("first_member"))
-      .select(col("lbl").as("community"), col("n_members"), col("first_member"))
-      .orderBy("community")
-  }
+  private def lpaCommunities(s: SparkSession, dir: String): DataFrame =
+    graft.operators.GraphLoops.lpa(s, dir, maxRounds = 3,
+      untilFixpoint = false)._1
 
   private def lpaStep(prev: String, i: Int): String =
     s"""c$i AS (SELECT e.src AS node, l.lbl, count(*) AS c

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Round-13 batch 2: graph distance layers. */
 object Round13Queries {
@@ -18,18 +17,20 @@ object Round13Queries {
     * Frontier-relational rendering: round r joins the (r−1)-frontier to
     * the edge list and anti-joins the already-reached set — each round is
     * one equi-join + one anti-join, the frontier never re-expands settled
-    * nodes (label-correcting BFS, not Bellman-Ford re-relaxation). Four
-    * rounds are UNROLLED into the plan (the x144/x201 fixed-unroll
-    * decision: a data-dependent loop can't be replayed by a plain
-    * oracle); the residual bucket (dist = −1) is emitted rather than
-    * hidden, and it holds BOTH the unreachable nodes and anything deeper
-    * than the budget — measured: at sf0.001 the graph settles in ≤4
-    * hops so −1 is purely unreachable, while at sf0.01 layers 5–9 exist
-    * and fold into −1 here. The convergence-loop twin x227
+    * nodes (label-correcting BFS, not Bellman-Ford re-relaxation). The
+    * round is [[graft.operators.GraphLoops.bfs]]'s, run under the
+    * fixpoint loop with a FIXED budget of 4 and no stopping probe (the
+    * x144/x201 fixed-budget decision: a data-dependent stop can't be
+    * replayed by a plain oracle), each iterate checkpointed and the
+    * prior one dropped; the residual bucket (dist = −1) is emitted rather
+    * than hidden, and it holds BOTH the unreachable nodes and anything
+    * deeper than the budget — measured: at sf0.001 the graph settles in
+    * ≤4 hops so −1 is purely unreachable, while at sf0.01 layers 5–9
+    * exist and fold into −1 here. The convergence-loop twin x227
     * ([[graft.operators.GraphLoops.bfsConverged]], its own
-    * recursive-CTE oracle) runs the same body to frontier exhaustion
-    * with dropCheckpoint'd iterates; the difference between the two −1
-    * buckets is exactly the budget-vs-diameter gap.
+    * recursive-CTE oracle) runs the same round with the frontier probe;
+    * the difference between the two −1 buckets is exactly the
+    * budget-vs-diameter gap.
     *
     * Determinism: pure set algebra on integers — no scores, no ties.
     * Source = the MAX-DEGREE node (exact two-step argmax: max degree,
@@ -38,33 +39,8 @@ object Round13Queries {
     * the min-id source sits in a 2-node island at sf0.1 and the walk
     * explores nothing; the hub source keeps every layer live at every SF.
     */
-  private def graphBfs(s: SparkSession, dir: String): DataFrame = {
-    // Shared per-run co-purchase graph, w>=2 prune (r11 verdict #4).
-    val edges = graft.operators.CoPurchaseGraph.strong(s, dir)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val maxd = deg.agg(max(col("d")).as("md"))
-    val source = deg.join(broadcast(maxd), col("d") === col("md"))
-      .agg(min(col("src")).as("node"))
-    var reached = source.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    for (r <- 1 to 4) {
-      val frontier = reached.filter(col("dist") === (r - 1).toLong)
-        .select(col("node").as("src"))
-      val next = edges.join(frontier, "src")
-        .select(col("dst").as("node")).distinct()
-        .join(reached.select("node"), Seq("node"), "left_anti")
-        .withColumn("dist", lit(r.toLong))
-      val prev = reached
-      reached = prev.unionByName(next).localCheckpoint()
-      graft.QueryDef.dropCheckpoint(prev) // consumed by the union above
-    }
-    edges.select(col("src").as("node")).distinct()
-      .join(reached, Seq("node"), "left")
-      .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
-      .groupBy("dist")
-      .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"))
-      .orderBy("dist")
-  }
+  private def graphBfs(s: SparkSession, dir: String): DataFrame =
+    graft.operators.GraphLoops.bfs(s, dir, maxRounds = 4, exhaust = false)._1
 
   private def bfsStep(i: Int): String = {
     val p = s"r${i - 1}"

@@ -70,8 +70,7 @@ object Round19Queries {
     // BroadcastHashJoin; past it, the former shuffle plan.
     val keptBytes = kept1.count() * 8L
     val bar = Dedup.effectiveBroadcastBar(s, "graft.dedup.broadcastMaxBytes")
-    def gatedKeep(d: DataFrame) =
-      if (bar > 0 && keptBytes <= bar) broadcast(d) else d
+    def gatedKeep(d: DataFrame) = Dedup.gatedBroadcast(d, keptBytes, bar)
     val docs1 = docs.join(gatedKeep(kept1), "doc_id")
 
     // Stage 2: quality-canonical near-dup retention over survivors.

@@ -75,6 +75,12 @@ object Round6bQueries {
     * step (contrast x43's convergence loop, which needs one 1-row probe
     * per round because its stopping rule is data-dependent).
     *
+    * The round is [[graft.operators.GraphLoops.pagerankRound]] (graph,
+    * checkpoints and broadcast gate documented there), the one body its
+    * tolerance-driven twin `GraphLoops.pagerankConverged` runs under the
+    * fixpoint loop; here the three rounds compose lazily into ONE plan,
+    * so no iterate is checkpointed.
+    *
     * Determinism: ranks are 10^6-scaled integers; per-edge contributions
     * use integer division (`div` truncation = DuckDB `//` floor on
     * non-negatives), so every engine computes identical ranks — the same
@@ -84,47 +90,9 @@ object Round6bQueries {
     */
   private def pagerank(s: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    // The graph is consumed 5× (3 iteration joins + deg + nodes) and by
-    // three sibling queries (x201/x226/x152 — same lineitem self-join):
-    // served from the per-run shared co-purchase table (r11 verdict #4;
-    // iterate-over-snapshot, not over lineage — production persists the
-    // edge table as infrastructure). Before sharing: 6.3 s in-suite /
-    // 3.8 s isolated at sf0.1 with a per-query checkpoint.
-    val edges = graft.operators.CoPurchaseGraph.directed(s, dir)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .localCheckpoint()
-    // Every per-iteration join partner (deg, the rank iterate, the
-    // contribution aggregate) is |V|-sized while `edges` is |E|-sized —
-    // but the checkpointed inputs carry no stats, so Catalyst planned
-    // all 9 joins as SortMergeJoins that exchanged the EDGE list three
-    // times per iteration (14 Exchanges total, measured r16). Byte-gate
-    // a broadcast of the |V|-sized sides on the measured node count:
-    // below the bar the edge list streams straight from its checkpoint
-    // blocks and the only per-iteration exchange left is the map-side-
-    // combined contribution aggregate. Past the bar (graph whose rank
-    // vector outgrows an executor) every join falls back to the exact
-    // shuffle plan this replaced — the 100 TB shape is unchanged.
-    val nodeBytes = nodes.count() * 16L
-    val bar = graft.operators.Dedup.effectiveBroadcastBar(
-      s, "graft.graph.broadcastMaxBytes")
-    def gated(d: org.apache.spark.sql.DataFrame) =
-      if (bar > 0 && nodeBytes <= bar) broadcast(d) else d
-    var r = nodes.withColumn("r", lit(1000000L))
-    for (_ <- 1 to 3) {
-      val contrib = edges
-        .join(gated(r.withColumnRenamed("node", "src")), "src")
-        .join(gated(deg), "src")
-        .select(col("dst").as("node"), expr("r div outdeg").as("contrib"))
-      r = nodes
-        .join(gated(contrib.groupBy("node").agg(sum("contrib").as("sc"))),
-          Seq("node"), "left")
-        .select(col("node"),
-          expr("150000 + (850000 * coalesce(sc, 0)) div 1000000").as("r"))
-    }
-    r.select(col("node").as("part_id"), col("r").cast("long").as("rank_scaled"))
-      .orderBy(col("rank_scaled").desc, col("part_id")).limit(20)
+    val (r0, round) = graft.operators.GraphLoops.pagerankRound(s, dir)
+    graft.operators.GraphLoops.pagerankTop20(
+      (1 to 3).foldLeft(r0)((r, _) => round(r)))
   }
 
   private def prStep(prev: String, cur: String): String =
@@ -473,7 +441,7 @@ object Round6bQueries {
       s, "graft.triangles.broadcastMaxBytes")
     def degSide(k: String, d: String) = {
       val side = deg.select(col("x").as(k), col("d").as(d))
-      if (bar > 0 && degBytes <= bar) broadcast(side) else side
+      graft.operators.Dedup.gatedBroadcast(side, degBytes, bar)
     }
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
@@ -559,7 +527,7 @@ object Round6bQueries {
     val bar = graft.operators.Dedup.effectiveBroadcastBar(
       s, "graft.triangles.broadcastMaxBytes")
     def gated(d: org.apache.spark.sql.DataFrame) =
-      if (bar > 0 && edgeBytes <= bar) broadcast(d) else d
+      graft.operators.Dedup.gatedBroadcast(d, edgeBytes, bar)
     def pk(u: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
       shiftleft(u, 32).bitwiseOR(v)
     val wedges = e.as("e1")
