@@ -44,9 +44,11 @@ object QueryDef {
     * the convergence check has consumed it (r9 advice; masked in Bench by
     * its post-query `getPersistentRDDs` sweep but not in Verify or
     * library use). Non-blocking; a no-op on non-checkpointed frames.
+    * Each distinct RDD is unpersisted once, however often the plan holds
+    * it (a self-join of one checkpoint holds it twice).
     */
   def dropCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(false))
+    }.distinct.foreach(_.unpersist(false))
 }

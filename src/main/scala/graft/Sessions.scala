@@ -19,6 +19,10 @@ object Sessions {
     *    [[Tables.events]] itself probes the footer encoding and reads
     *    session-independently — its instant-typed branch converts through
     *    convert_timezone so even a non-UTC session gets UTC wall time.)
+    *  - inSetSwitchThreshold 0: an integral `InSet` compiles to a hash-set
+    *    lookup, never to a `switch` over its values written into the Java
+    *    source, so a plan that tests per-request values
+    *    (`GraftFunctions.inSet`) compiles once, not once per value set.
     */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -28,6 +32,7 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.optimizer.inSetSwitchThreshold", "0")
       .config("spark.ui.enabled", "false")
 
   def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {

@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   * partition pruning applies unchanged. Nothing here collects to the driver.
   */
 object Tables {
-  /** `dir/name.parquet`, its schema inferred at most once per content
+  /** `dir/name.parquet` as one resolved relation per session and content
     * key: the path, every file's `path:size:mtime` and the session's
-    * parquet-inference confs (see [[parquet]]). A warm read runs no job.
+    * parquet-inference confs (see [[parquet]]). A warm read runs no job
+    * and resolves no data source.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
@@ -27,28 +28,43 @@ object Tables {
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.mergeSchema")
 
-  /** Inferred schemas by content key, least recently used evicted past
-    * 256 entries.
+  /** A synchronized map that evicts its least recently used entry past
+    * `max` entries.
     */
-  private val schemas = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, StructType]): Boolean = size() > 256
-    })
+  private[graft] def lru[K, V](max: Int): java.util.Map[K, V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+          size() > max
+      })
 
-  /** Reads the parquet file or directory at `path`, inferring its schema
-    * at most once per content. Schema inference is a Spark job, which a
-    * serving path otherwise pays on every request.
+  /** Inferred schemas by content key: shared by every session. */
+  private val schemas = lru[String, StructType](256)
+
+  /** Resolved relations by (session, content key). A frame is bound to
+    * the session that analyzed it, so the session is part of the key
+    * (by identity) and no frame is served to another session; the bound
+    * keeps at most 64 frames, and their sessions, reachable.
+    */
+  private val frames = lru[(SparkSession, String), DataFrame](64)
+
+  /** Reads the parquet file or directory at `path`, resolving it at most
+    * once per session and content, and inferring its schema at most once
+    * per content. Schema inference is a Spark job and resolving the data
+    * source walks the source registry and lists the files; a serving path
+    * would otherwise pay both on every request.
     *
-    * The cache key is the path, the `path:size:mtime` of every file under
-    * it (one recursive listing), and the session's values of the
+    * The content key is the path, the `path:size:mtime` of every file
+    * under it (one recursive listing) and the session's values of the
     * inference confs above (`nanosAsLong` reads a TIMESTAMP(NANOS) column
-    * as a long, so the same file has two schemas). A hit returns
-    * `spark.read.schema(cached).parquet(path)`, which runs no job; a miss
-    * returns the plain `spark.read.parquet(path)` and records its schema,
-    * so the cold path reads nothing twice. Rewriting the files changes
-    * the key, so a rewritten table is inferred again; a path that cannot
-    * be listed (or has no files) is read without the cache.
+    * as a long, so the same file has two schemas). A warm call returns
+    * the same `DataFrame`. A cold call in a session returns
+    * `spark.read.schema(cached).parquet(path)` when another session
+    * already inferred this content, and otherwise the plain
+    * `spark.read.parquet(path)`, whose schema it records, so the cold
+    * path reads nothing twice. Rewriting the files changes the key, so a
+    * rewritten table is resolved and inferred again; a path that cannot
+    * be listed (or has no files) is read without either cache.
     */
   private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -66,12 +82,16 @@ object Tables {
     else {
       val key = graft.operators.StoredTables.contentKey((Seq(path) ++ files ++
         inferenceConfs.map(c => s"$c=${spark.conf.getOption(c).getOrElse("")}")): _*)
-      Option(schemas.get(key)) match {
-        case Some(schema) => spark.read.schema(schema).parquet(path)
-        case None =>
-          val df = spark.read.parquet(path)
-          schemas.put(key, df.schema)
-          df
+      Option(frames.get((spark, key))).getOrElse {
+        val df = Option(schemas.get(key)) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            schemas.put(key, df.schema)
+            df
+        }
+        frames.put((spark, key), df)
+        df
       }
     }
   }
@@ -106,8 +126,8 @@ object Tables {
     *     corrupt low bits).
     * The probe reads only the parquet footer (no data scan), so its cost is
     * negligible even at cluster scale, and it goes through [[parquet]]'s
-    * schema cache: the branch reuses the probe's DataFrame, so an events
-    * read infers at most once per content key. `FixtureSchemaSpec` guards this
+    * caches: the branch reuses the probe's DataFrame, so an events read
+    * infers at most once per content key. `FixtureSchemaSpec` guards this
     * loader against future fixture regenerations by comparing Spark's
     * min/max(ts) to the parquet footer statistics.
     */

@@ -3,10 +3,14 @@ package graft.functions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, ExpressionInfo, InSet}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{call_function, typedLit}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import scala.collection.immutable.HashSet
+import scala.reflect.runtime.universe.TypeTag
 
 /** Native codegen'd dot product over two ArrayType(Double) columns.
   *
@@ -130,7 +134,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object GraftFunctions {
-  private val fns: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private[functions] val fns: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
       (es: Seq[Expression]) => DotProduct(es.head, es(1))),
@@ -139,7 +143,36 @@ object GraftFunctions {
       (es: Seq[Expression]) => CosineSimilarity(es.head, es(1))),
     (new FunctionIdentifier("graft_lev_leq"),
       new ExpressionInfo(classOf[BoundedLevenshtein].getName, "graft_lev_leq"),
-      (es: Seq[Expression]) => BoundedLevenshtein(es.head, es(1), es(2))))
+      (es: Seq[Expression]) => BoundedLevenshtein(es.head, es(1), es(2))),
+    (new FunctionIdentifier("graft_in_set"),
+      new ExpressionInfo(classOf[InSet].getName, "graft_in_set"),
+      (es: Seq[Expression]) => inSetOf(es.head, es(1))))
+
+  /** `graft_in_set(c, values)`: Catalyst's `InSet` of `c` over a constant
+    * array, its elements cast to `c`'s type. Generated code reads the
+    * values from a referenced hash set, where `=` and a short `IN` list
+    * write each value into the Java source, so a plan that tests a
+    * per-request value this way compiles one class for all values. That
+    * needs `spark.sql.optimizer.inSetSwitchThreshold` at 0, as
+    * [[graft.Sessions.builder]] sets it: an integral set no larger than
+    * it compiles to a `switch` over its values. The `InSet` still pushes
+    * to a file scan as `In(c, […])` and prunes buckets like an `IN` list.
+    */
+  private def inSetOf(c: Expression, values: Expression): Expression = {
+    require(values.foldable, s"graft_in_set needs a constant array, got ${values.sql}")
+    val cast = Cast(values, ArrayType(c.dataType), Some(SQLConf.get.sessionLocalTimeZone))
+    val data = cast.eval()
+    // Always a HashSet: generated code casts the referenced set to its
+    // runtime class, and a plain Set of up to 4 items is Set1..Set4.
+    InSet(c, if (data == null) HashSet.empty
+      else HashSet.from(data.asInstanceOf[ArrayData].toSeq[Any](c.dataType)))
+  }
+
+  /** `c` in `values` as [[inSetOf]]'s `InSet`: the set is referenced by
+    * the generated code, not written into it.
+    */
+  private[graft] def inSet[T: TypeTag](c: Column, values: Seq[T]): Column =
+    call_function("graft_in_set", c, typedLit(values))
 
   /** Idempotent per-session registration — works on any session, including
     * ones created without the extensions config.
@@ -152,7 +185,7 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` injection (the standard deployment path on a
   * shared cluster: every session gets the full graft surface without code
-  * changes) — the function, the as-of optimizer rule, and the as-of
+  * changes) — the functions, the as-of optimizer rule, and the as-of
   * planner strategy. `AsofJoin.apply` also injects the latter two
   * idempotently at call time via `spark.experimental`, so ad-hoc local
   * sessions work without this config; a cluster sets
@@ -160,18 +193,7 @@ object GraftFunctions {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (new FunctionIdentifier("graft_dot"),
-        new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-        (es: Seq[Expression]) => DotProduct(es.head, es(1))))
-    ext.injectFunction(
-      (new FunctionIdentifier("graft_cosine"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-        (es: Seq[Expression]) => CosineSimilarity(es.head, es(1))))
-    ext.injectFunction(
-      (new FunctionIdentifier("graft_lev_leq"),
-        new ExpressionInfo(classOf[BoundedLevenshtein].getName, "graft_lev_leq"),
-        (es: Seq[Expression]) => BoundedLevenshtein(es.head, es(1), es(2))))
+    GraftFunctions.fns.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
     ext.injectOptimizerRule(_ => RewriteLevenshteinBound)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)

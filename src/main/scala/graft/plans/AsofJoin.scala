@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   And, Ascending, Attribute, AttributeReference, AttributeSet,
   GenericInternalRow, JoinedRow, PredicateHelper, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
@@ -211,8 +211,13 @@ object AsofJoin {
       key: String, time: String, tie: String,
       value: String, outName: String): DataFrame = {
     val spark = left.sparkSession
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
+    // Both sides as the analyzer resolves a join of them: when they read
+    // the same relation (one cached `Tables` frame), the right side gets
+    // fresh attributes, as the right side of a self-join does.
+    val (lPlan, rPlan) = left.crossJoin(right).queryExecution.analyzed match {
+      case j: Join => (j.left, j.right)
+      case p => throw new IllegalStateException(s"asof join: unexpected analyzed join $p")
+    }
     def attr(p: LogicalPlan, n: String): Attribute =
       p.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(

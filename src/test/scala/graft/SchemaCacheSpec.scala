@@ -3,9 +3,10 @@ package graft
 import graft.operators.Staging
 import java.nio.file.Files
 
-/** `Tables.table`'s content-keyed schema cache: a warm read of unchanged
-  * files runs no job, a rewrite is inferred again, and the inference
-  * confs are part of the key.
+/** `Tables.table`'s content-keyed caches: a warm read of unchanged files
+  * returns the same resolved relation and runs no job, a rewrite is
+  * resolved and inferred again, the inference confs are part of the key,
+  * and no session is served another session's relation.
   */
 class SchemaCacheSpec extends SparkSuite {
 
@@ -26,6 +27,30 @@ class SchemaCacheSpec extends SparkSuite {
         s"a rewritten table served its old schema: ${fresh.schema}")
       assert(inferred >= 1, "a rewritten table was not inferred again")
       assert(fresh.collect().map(_.getString(0)).sorted.toSeq == Seq("0", "1", "2"))
+    } finally Staging.deleteTree(dir)
+  }
+
+  test("a warm read returns the cached relation; a rewrite or another session gets its own") {
+    val dir = Files.createTempDirectory("graft_schema_cache_")
+    try {
+      val path = dir.resolve("t.parquet").toString
+      spark.range(3).toDF("a").write.parquet(path)
+      val first = Tables.table(spark, dir.toString, "t")
+      val (warm, jobs) = jobsOf(Tables.table(spark, dir.toString, "t"))
+      assert(warm eq first, "a warm read resolved the data source again")
+      assert(jobs == 0, s"a warm read ran $jobs jobs")
+
+      val other = spark.newSession()
+      val theirs = Tables.table(other, dir.toString, "t")
+      assert(theirs ne first, "another session was served this session's relation")
+      assert(theirs.sparkSession eq other)
+      assert(Tables.table(other, dir.toString, "t") eq theirs)
+      assert(Tables.table(spark, dir.toString, "t") eq first)
+
+      spark.range(4).toDF("a").write.mode("overwrite").parquet(path)
+      val fresh = Tables.table(spark, dir.toString, "t")
+      assert(fresh ne first, "a rewritten table served its old relation")
+      assert(fresh.count() == 4)
     } finally Staging.deleteTree(dir)
   }
 
