@@ -35,6 +35,31 @@ object PlanAudit {
       if (!ok) failed += 1
       println(f"$name%-22s $label%-40s ${if (ok) "OK" else "MISSING"}")
     }
+    // A byte gate past its bar must drop its FORCED broadcast hint. A
+    // 1-byte autoBroadcastJoinThreshold scales every gate's bar down to 6
+    // bytes (Dedup.effectiveBroadcastBar). AQE may legitimately
+    // re-introduce a broadcast at runtime from measured shuffle sizes, so
+    // inspect the optimized logical plan — no collect(): analysis and
+    // optimization force the plan without executing the (deliberately
+    // slow) fallback branch. Hints with no join condition (1-row
+    // cross-join hints) are not gated and may remain.
+    def pastTheBar(name: String, label: String): Unit = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "1")
+      try {
+        val forced = SparkEntry.queries(name)(spark, dir)
+          .queryExecution.optimizedPlan.collect {
+            case j: org.apache.spark.sql.catalyst.plans.logical.Join
+                if (j.hint.leftHint.exists(_.strategy.nonEmpty) ||
+                  j.hint.rightHint.exists(_.strategy.nonEmpty)) &&
+                  j.condition.nonEmpty => j
+          }
+        val ok = forced.isEmpty
+        if (!ok) failed += 1
+        println(f"$name%-22s ${"past the bar: " + label}%-40s ${if (ok) "OK" else "MISSING"}")
+      } finally spark.conf.set(key, prev)
+    }
 
     check("q01_scan_project", "ReadSchema pruned to referenced cols",
       _.contains("ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_linenumber:int,l_quantity:double>"))
@@ -229,31 +254,11 @@ object PlanAudit {
       _.contains("BroadcastHashJoin"))
     check("x163_triangles_skew_degree", "closing-edge probe broadcast (gated)",
       _.contains("BroadcastHashJoin"))
+    // The fixture hub broadcast (x162/x163's 1-row hub id and edge-count
+    // tail) is not the closing probe and carries no join condition.
     for (q <- Seq("x152_triangles", "x162_triangles_skew_id",
-        "x163_triangles_skew_degree")) {
-      spark.conf.set("graft.triangles.broadcastMaxBytes", "64")
-      try {
-        // AQE may legitimately re-introduce a broadcast at runtime from
-        // measured shuffle sizes; the gate's contract is only that the
-        // FORCED hint is gone, so inspect the optimized logical plan —
-        // no collect(): analysis/optimization forces the plan without
-        // executing the (deliberately slow) fallback branch. The fixture
-        // hub broadcast (x162/x163's 1-row hub id and edge-count tail)
-        // is not the closing probe — restrict the scan to hinted joins
-        // whose both children are multi-column (the edge relation),
-        // i.e. simply count hinted joins minus the known 1-row hints.
-        val df = SparkEntry.queries(q)(spark, dir)
-        val forced = df.queryExecution.optimizedPlan.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join
-              if (j.hint.leftHint.exists(_.strategy.nonEmpty) ||
-                j.hint.rightHint.exists(_.strategy.nonEmpty)) &&
-                j.condition.nonEmpty => j
-        }
-        val ok = forced.isEmpty
-        if (!ok) failed += 1
-        println(f"$q%-22s ${"past the bar: no forced broadcast hint"}%-40s ${if (ok) "OK" else "MISSING"}")
-      } finally spark.conf.unset("graft.triangles.broadcastMaxBytes")
-    }
+        "x163_triangles_skew_degree"))
+      pastTheBar(q, "no forced broadcast hint")
     check("x153_source_drift", "vocabulary broadcast to the per-source grid",
       p => p.contains("BroadcastExchange"))
 
@@ -292,23 +297,8 @@ object PlanAudit {
       p => "HashAggregate".r.findAllIn(p).length >= 2)
     // r9 verdict #1: the model broadcasts are byte-gated. Past the bar the
     // forced hints must be gone (only the 1-row vocab cross-join hint,
-    // which carries no condition, may remain) — inspect the optimized
-    // logical plan, no collect(), same contract as the triangles gate.
-    locally {
-      spark.conf.set("graft.lm.broadcastMaxBytes", "64")
-      try {
-        val df = SparkEntry.queries("x171_lm_perplexity")(spark, dir)
-        val forced = df.queryExecution.optimizedPlan.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join
-              if (j.hint.leftHint.exists(_.strategy.nonEmpty) ||
-                j.hint.rightHint.exists(_.strategy.nonEmpty)) &&
-                j.condition.nonEmpty => j
-        }
-        val ok = forced.isEmpty
-        if (!ok) failed += 1
-        println(f"${"x171_lm_perplexity"}%-22s ${"past the bar: no forced model broadcast"}%-40s ${if (ok) "OK" else "MISSING"}")
-      } finally spark.conf.unset("graft.lm.broadcastMaxBytes")
-    }
+    // which carries no condition, may remain).
+    pastTheBar("x171_lm_perplexity", "no forced model broadcast")
     check("x173_knn_classify", "probe block broadcast (one corpus pass)",
       p => p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"))
     check("x173_knn_classify", "per-probe top-k pushed down as WindowGroupLimit",

@@ -44,9 +44,13 @@ object Tables {
   /** Resolved relations by (session, content key). A frame is bound to
     * the session that analyzed it, so the session is part of the key
     * (by identity) and no frame is served to another session; the bound
-    * keeps at most 64 frames, and their sessions, reachable.
+    * keeps at most 64 frames, and their sessions, reachable. Each cold
+    * insert first drops the frames whose `SparkContext` is stopped.
     */
   private val frames = lru[(SparkSession, String), DataFrame](64)
+
+  /** How many resolved frames the cache holds. */
+  private[graft] def retainedFrames: Int = frames.size
 
   /** Reads the parquet file or directory at `path`, resolving it at most
     * once per session and content, and inferring its schema at most once
@@ -90,6 +94,7 @@ object Tables {
             schemas.put(key, df.schema)
             df
         }
+        frames.keySet.removeIf(_._1.sparkContext.isStopped)
         frames.put((spark, key), df)
         df
       }

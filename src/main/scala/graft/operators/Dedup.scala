@@ -248,8 +248,7 @@ object Dedup {
     // to meet a pair-sized list. Past the gate: the former shuffle plan.
     val candidates = candidates0.localCheckpoint()
     val pairBytes = candidates.count() * 16L
-    val bar = effectiveBroadcastBar(docs.sparkSession,
-      "graft.dedup.broadcastMaxBytes")
+    val bar = effectiveBroadcastBar(docs.sparkSession)
     def gated(d: DataFrame) = gatedBroadcast(d, pairBytes, bar)
     val ids = candidates.select(col("a").as("doc_id"))
       .union(candidates.select(col("b").as("doc_id"))).distinct()
@@ -659,19 +658,16 @@ object Dedup {
     else embeddingNearDupPairsDist(emb, threshold)
   }
 
-  /** Size-conf parse shared by every byte-bar gate in the library: accepts
-    * both size strings ("10MB") and plain byte counts incl. the -1 disable
-    * sentinel, which byteStringAsBytes rejects.
-    */
-  private[graft] def parseBytesConf(raw: String): Long =
-    raw.toLongOption.getOrElse(
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
-
   /** `spark.sql.autoBroadcastJoinThreshold` in bytes — the bar every
     * "collect/broadcast one side" decision in this library is gated on.
+    * Accepts both size strings ("10MB") and plain byte counts incl. the
+    * -1 disable sentinel, which byteStringAsBytes rejects.
     */
-  private[graft] def broadcastLimitBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    parseBytesConf(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
+  private[graft] def broadcastLimitBytes(spark: org.apache.spark.sql.SparkSession): Long = {
+    val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    raw.toLongOption.getOrElse(
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
+  }
 
   /** A broadcast hash relation occupies ~2-4x its raw key/value bytes
     * once UnsafeRow framing and the hash table are built (ADVICE r16);
@@ -681,40 +677,27 @@ object Dedup {
 
   private val DefaultAutoBar = 10L << 20 // Spark's autoBroadcastJoinThreshold default
 
-  /** Effective RAW-bytes bar for a forced-broadcast byte gate (every
-    * `graft.*.broadcastMaxBytes` site routes through here since r17).
-    * Two ADVICE-r16 corrections fold in:
-    *  - the configured bar (default 256 MB) is divided by
-    *    [[RelationOverhead]] before comparing against raw-byte estimates,
-    *    so the bar bounds the BUILT relation's memory (~256 MB), not
-    *    ~1 GB of driver+executor footprint;
-    *  - a session that LOWERS `spark.sql.autoBroadcastJoinThreshold`
-    *    below its 10 MB default is asking for smaller broadcasts, so the
-    *    bar scales down proportionally instead of only consulting the
-    *    sign (raising it above the default does NOT raise graft bars).
-    * Returns 0 when auto-broadcast is disabled (<= 0) or the key itself
-    * is set to <= 0: every gate ([[gatedBroadcast]]) then takes its exact
+  /** Raw-bytes bar of every byte gate ([[gatedBroadcast]]): a built
+    * relation of at most 256 MB, charged at [[RelationOverhead]]× its raw
+    * bytes, so 64 MB of raw bytes at Spark's default threshold. A session
+    * that LOWERS `spark.sql.autoBroadcastJoinThreshold` below its 10 MB
+    * default is asking for smaller broadcasts, so the bar scales down in
+    * proportion (raising the threshold does not raise it). Returns 0 when
+    * auto-broadcast is disabled (<= 0): every gate then takes its exact
     * fallback shuffle plan.
     */
   private[graft] def effectiveBroadcastBar(
-      spark: org.apache.spark.sql.SparkSession, confKey: String): Long = {
+      spark: org.apache.spark.sql.SparkSession): Long = {
     val autoBar = broadcastLimitBytes(spark)
-    lazy val conf = parseBytesConf(spark.conf.get(confKey, "256MB"))
-    if (autoBar <= 0 || conf <= 0) 0L
-    else {
-      val scaled =
-        if (autoBar < DefaultAutoBar)
-          math.max(1L, (conf.toDouble * autoBar / DefaultAutoBar).toLong)
-        else conf
-      math.max(1L, scaled / RelationOverhead)
-    }
+    if (autoBar <= 0) 0L
+    else math.max(1L, ((256L << 20) / RelationOverhead) *
+      math.min(autoBar, DefaultAutoBar) / DefaultAutoBar)
   }
 
-  /** The byte gate every `graft.*.broadcastMaxBytes` site applies: `d`
-    * broadcast when its measured `bytes` fit under `bar` (from
-    * [[effectiveBroadcastBar]]), else `d` unchanged — the exact shuffle
-    * plan. A bar of 0 (broadcasting disabled) never broadcasts, not even
-    * a 0-byte estimate.
+  /** The byte gate of every forced broadcast: `d` broadcast when its
+    * measured `bytes` fit under `bar` (from [[effectiveBroadcastBar]]),
+    * else `d` unchanged — the exact shuffle plan. A bar of 0
+    * (broadcasting disabled) never broadcasts, not even a 0-byte estimate.
     */
   private[graft] def gatedBroadcast(d: DataFrame, bytes: Long, bar: Long): DataFrame =
     if (bar > 0 && bytes <= bar) broadcast(d) else d

@@ -133,7 +133,7 @@ object GraphLoops {
       .withColumn("lbl", col("node"))
       .localCheckpoint()
     val nodeBytes = labels0.count() * 16L
-    val bar = Dedup.effectiveBroadcastBar(s, "graft.graph.broadcastMaxBytes")
+    val bar = Dedup.effectiveBroadcastBar(s)
     def gated(d: DataFrame) = Dedup.gatedBroadcast(d, nodeBytes, bar)
     // Node sets of two iterates are identical by construction (every
     // node has >= 1 neighbor), so an inner join compares every label.
@@ -198,7 +198,7 @@ object GraphLoops {
     val nodes = edges.select(col("src").as("node")).distinct()
       .localCheckpoint()
     val nodeBytes = nodes.count() * 16L
-    val bar = Dedup.effectiveBroadcastBar(s, "graft.graph.broadcastMaxBytes")
+    val bar = Dedup.effectiveBroadcastBar(s)
     def gated(d: DataFrame) = Dedup.gatedBroadcast(d, nodeBytes, bar)
     (nodes.withColumn("r", lit(1000000L)), r => {
       val contrib = edges

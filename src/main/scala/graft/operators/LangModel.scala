@@ -20,16 +20,15 @@ import org.apache.spark.sql.types.DecimalType
   * than shuffling the corpus. Per-doc averaging partitions by doc_id.
   * With a web-scale vocab the model outgrows a broadcast, so the hints are
   * BYTE-GATED (the x05/x152 switch idiom): measured model bytes vs
-  * `graft.lm.broadcastMaxBytes` (default 256 MB of built relation; raw
-  * model bytes are gated at a quarter of the key, and a key <= 0 disables
-  * the hint — `Dedup.effectiveBroadcastBar`) with
-  * `autoBroadcastJoinThreshold=-1` respected absolutely; past the bar the
-  * same plan becomes a shuffle join on uniformly-distributed bigram keys —
-  * nothing else changes and both branches share the oracle. The decision
-  * statistic is one aggregate over the bigram-TYPE table (rows + character
-  * mass — aggregate-sized, never the corpus stream); `c1` rides `c2`'s
-  * verdict because it is a strictly coarser aggregate of the same stream
-  * (|c1| ≤ |c2|, shorter keys).
+  * `Dedup.effectiveBroadcastBar` (64 MB of raw bytes at Spark's default
+  * threshold) with `autoBroadcastJoinThreshold=-1` respected absolutely;
+  * past the bar the same plan becomes a shuffle join on
+  * uniformly-distributed bigram keys — nothing else changes and both
+  * branches share the oracle. The decision statistic is one aggregate
+  * over the bigram-TYPE table (rows + character mass — aggregate-sized,
+  * never the corpus stream); `c1` rides `c2`'s verdict because it is a
+  * strictly coarser aggregate of the same stream (|c1| ≤ |c2|, shorter
+  * keys).
   *
   * Determinism: p = (c2+1)/(c1+V) is an exactly-rounded IEEE division of
   * integers; only `ln` can differ by an ulp between engines, so the
@@ -73,7 +72,7 @@ object LangModel {
           .as("chars"))
       .select((col("n") * 16L + col("chars")).as("bytes"))
       .head().getLong(0)
-    val bar = Dedup.effectiveBroadcastBar(spark, "graft.lm.broadcastMaxBytes")
+    val bar = Dedup.effectiveBroadcastBar(spark)
     def gated(model: DataFrame): DataFrame =
       Dedup.gatedBroadcast(model, modelBytes, bar)
 

@@ -27,9 +27,7 @@ import org.apache.spark.sql.types.DecimalType
   * Scale shape (100 TB): the MODEL is aggregate-sized — per-class token
   * counts are hash aggregates bounded by vocab × classes, independent of
   * corpus rows — and is byte-gated for broadcast exactly like x171
-  * (`graft.nb.broadcastMaxBytes`, default 256 MB of built relation:
-  * raw model bytes are gated at a quarter of the key, and a key <= 0
-  * disables the hint — `Dedup.effectiveBroadcastBar`; shuffle join on the
+  * (`Dedup.effectiveBroadcastBar`; shuffle join on the
   * uniformly-distributed (class, word) keys past the bar). Scoring is one
   * pass over the test token-TYPE table (doc × distinct-word, smaller than
   * the token stream) fanned out × classes (a 5-row broadcast). The
@@ -86,7 +84,7 @@ object NaiveBayes {
         unat(-log(col("dc").cast("double") / col("dt"))).as("prior_unat"))
 
     // Byte-gate the vocab×classes model broadcast (the x171/x05 switch
-    // idiom): measured bytes vs the configured bar, absolute respect for
+    // idiom): measured bytes vs the derived bar, absolute respect for
     // a disabled autoBroadcastJoinThreshold; past the bar the same plan
     // shuffle-joins on uniform (c, w) keys.
     val modelBytes = cwc
@@ -95,7 +93,7 @@ object NaiveBayes {
           .as("chars"))
       .select((col("n") * 16L + col("chars")).as("bytes"))
       .head().getLong(0)
-    val nbBar = Dedup.effectiveBroadcastBar(spark, "graft.nb.broadcastMaxBytes")
+    val nbBar = Dedup.effectiveBroadcastBar(spark)
     def gated(df: DataFrame): DataFrame =
       Dedup.gatedBroadcast(df, modelBytes, nbBar)
 

@@ -762,14 +762,12 @@ object Similarity {
     * banded-index pass over the two language blocks, the fr block's probe
     * fanout (11 masks per band at radius 2, bandBits = 4) and its vector
     * block each BYTE-GATED: broadcast only while their measured bytes
-    * stay under `graft.ann.broadcastMaxBytes` (default 256 MB of built
-    * relation, so a quarter of it in raw bytes; <= 0 disables — see
-    * `Dedup.effectiveBroadcastBar`) and
-    * `spark.sql.autoBroadcastJoinThreshold` is enabled, otherwise a plain
-    * co-partitioned equi-join (the x05 / `graft.lm.broadcastMaxBytes`
-    * idiom — at corpus scale a "smaller language block" is still billions
-    * of rows, so an unconditional broadcast is a driver OOM). ONE bucket
-    * equi-join either way; the score matrix is never materialized for
+    * stay under `Dedup.effectiveBroadcastBar` (0 when
+    * `spark.sql.autoBroadcastJoinThreshold` is disabled), otherwise a
+    * plain co-partitioned equi-join (the x05 / x171 idiom — at corpus
+    * scale a "smaller language block" is still billions of rows, so an
+    * unconditional broadcast is a driver OOM). ONE bucket equi-join
+    * either way; the score matrix is never materialized for
     * non-candidate pairs.
     *
     * Honesty about THIS fixture: its embeddings are near-uniform (the
@@ -816,7 +814,7 @@ object Similarity {
     val (nFr, dim) = (frStats.getLong(0), frStats.getInt(1))
     val probeBytes = nFr * bands.toLong * masks.size * 32L
     val vecBytes = nFr * (24L + dim.toLong * 8L)
-    val bar = Dedup.effectiveBroadcastBar(spark, "graft.ann.broadcastMaxBytes")
+    val bar = Dedup.effectiveBroadcastBar(spark)
     // Candidates are deduped as BARE ID PAIRS before any vector travels:
     // the bucket join fans each pair out once per matching (band, mask),
     // and carrying the two 64-double arrays through that fanout into the

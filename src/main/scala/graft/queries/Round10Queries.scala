@@ -93,7 +93,7 @@ object Round10Queries {
     // shared projection so ReuseExchange builds the relation once per
     // round for all three consuming joins. Past the bar each join falls
     // back to the exact shuffle plan this replaced.
-    val bar = Dedup.effectiveBroadcastBar(s, "graft.graph.broadcastMaxBytes")
+    val bar = Dedup.effectiveBroadcastBar(s)
     val nodeBytes = deg.count() * 16L
     var removed: List[DataFrame] = Nil
     var rounds = 0

@@ -69,7 +69,7 @@ object Round19Queries {
     // Below the bar each consumer now streams the parquet scan through a
     // BroadcastHashJoin; past it, the former shuffle plan.
     val keptBytes = kept1.count() * 8L
-    val bar = Dedup.effectiveBroadcastBar(s, "graft.dedup.broadcastMaxBytes")
+    val bar = Dedup.effectiveBroadcastBar(s)
     def gatedKeep(d: DataFrame) = Dedup.gatedBroadcast(d, keptBytes, bar)
     val docs1 = docs.join(gatedKeep(kept1), "doc_id")
 

@@ -425,7 +425,7 @@ object Round6bQueries {
     // deg is |V| rows: materialize it once (its two join arms would each
     // re-run the aggregate — checkpointed inputs carry no stats, so
     // Catalyst can neither share nor size the subtree) and byte-gate a
-    // broadcast under the SAME knob as the closing probe (r16 guide §3.1:
+    // broadcast under the SAME bar as the closing probe (r16 guide §3.1:
     // both orientation joins were SortMergeJoins that exchanged the FULL
     // edge list twice to meet a |V|-sized side; |V| ≤ 2|E|, so whenever
     // the edge list itself is broadcastable the degree table certainly
@@ -437,8 +437,7 @@ object Round6bQueries {
       .localCheckpoint()
     val s = und.sparkSession
     val degBytes = deg.count() * 16L
-    val bar = graft.operators.Dedup.effectiveBroadcastBar(
-      s, "graft.triangles.broadcastMaxBytes")
+    val bar = graft.operators.Dedup.effectiveBroadcastBar(s)
     def degSide(k: String, d: String) = {
       val side = deg.select(col("x").as(k), col("d").as(d))
       graft.operators.Dedup.gatedBroadcast(side, degBytes, bar)
@@ -471,11 +470,9 @@ object Round6bQueries {
     * switch idiom). The bar is NOT the 10 MB auto-join default: that
     * bar prices an arbitrary unknown-width plan, while this side is a
     * known 16 B/edge packed relation whose alternative is shuffling
-    * the far larger wedge set — so a dedicated knob is the bar
-    * (graft.triangles.broadcastMaxBytes, default 256 MB of built
-    * relation; raw edge bytes are gated at a quarter of the key, i.e.
-    * 64 MB ≈ 4 M edges, and a key <= 0 disables the hint — see
-    * `Dedup.effectiveBroadcastBar`), while
+    * the far larger wedge set — so the bar is
+    * `Dedup.effectiveBroadcastBar` (64 MB of raw edge bytes ≈ 4 M edges
+    * at Spark's default threshold), while
     * autoBroadcastJoinThreshold=-1 (broadcast disabled session-wide)
     * is respected absolutely. Past the bar, the closing probe becomes
     * a plain shuffle join on (u, v), co-partitioned with the wedge
@@ -524,8 +521,7 @@ object Round6bQueries {
     val fitsPacked = !st.isNullAt(1) && st.getLong(1) >= 0L &&
       st.getLong(3) >= 0L && st.getLong(2) < (1L << 32) &&
       st.getLong(4) < (1L << 32)
-    val bar = graft.operators.Dedup.effectiveBroadcastBar(
-      s, "graft.triangles.broadcastMaxBytes")
+    val bar = graft.operators.Dedup.effectiveBroadcastBar(s)
     def gated(d: org.apache.spark.sql.DataFrame) =
       graft.operators.Dedup.gatedBroadcast(d, edgeBytes, bar)
     def pk(u: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =

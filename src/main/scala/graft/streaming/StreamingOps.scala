@@ -26,18 +26,14 @@ object StreamingOps {
     * drain in this file (the r8 verdict flagged the former per-site
     * literal 8s as local-tuning residue posing as library defaults).
     * Each stateful operator keeps one state store PER shuffle partition
-    * PER microbatch, so this knob should track state cardinality and
-    * session parallelism, not a fixed constant: default is
-    * defaultParallelism/4 clamped to ≥ 2 (8 on the local[32] bench
-    * harness — the measured sweet spot for the staged fixtures, PERF.md
-    * "Round-9" — and proportionally larger on a real cluster, where
-    * parallelism is executors×cores). Override per session with
-    * `graft.streaming.shufflePartitions` when the state keyspace is
-    * known to be tiny or huge.
+    * PER microbatch, so the count tracks session parallelism, not a
+    * fixed constant: defaultParallelism/4 clamped to ≥ 2 (8 on the
+    * local[32] bench harness — the measured sweet spot for the staged
+    * fixtures, PERF.md "Round-9" — and proportionally larger on a real
+    * cluster, where parallelism is executors×cores).
     */
   private[streaming] def streamShufflePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("graft.streaming.shufflePartitions").map(_.toInt)
-      .getOrElse(math.max(2, spark.sparkContext.defaultParallelism / 4))
+    math.max(2, spark.sparkContext.defaultParallelism / 4)
 
   /** Run `body` with spark.sql.shuffle.partitions temporarily set for
     * streaming state ([[streamShufflePartitions]], or `scale`× it),

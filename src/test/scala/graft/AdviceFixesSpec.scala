@@ -133,20 +133,22 @@ class AdviceFixesSpec extends SparkSuite {
     assert(a.checksum == b.checksum && a.rows == b.rows && a.rows > 0)
   }
 
-  // --- effectiveBroadcastBar: a non-positive key disables the gate -------
+  // --- effectiveBroadcastBar: derived from Spark's threshold alone -------
 
-  test("graft.*.broadcastMaxBytes <= 0 disables graft broadcasts (bar 0)") {
-    val key = "graft.dedup.broadcastMaxBytes"
+  test("effectiveBroadcastBar: 64 MB at the default threshold, scaled below it, 0 when disabled") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
     try {
-      assert(Dedup.effectiveBroadcastBar(spark, key) ==
-        (256L << 20) / Dedup.RelationOverhead) // default: 256MB / 4
+      spark.conf.unset(key)
+      assert(Dedup.effectiveBroadcastBar(spark) == 64L << 20)
+      // 1 MB is a tenth of the 10 MB default: a tenth of 64 MB, floored.
+      spark.conf.set(key, "1MB")
+      assert(Dedup.effectiveBroadcastBar(spark) == 6710886L)
       for (v <- Seq("0", "-1")) {
         spark.conf.set(key, v)
-        assert(Dedup.effectiveBroadcastBar(spark, key) == 0L, s"at $v")
+        assert(Dedup.effectiveBroadcastBar(spark) == 0L, s"at $v")
       }
-      spark.conf.set(key, "8")
-      assert(Dedup.effectiveBroadcastBar(spark, key) == 2L)
-    } finally spark.conf.unset(key)
+    } finally spark.conf.set(key, prev)
   }
 }
 

@@ -8,12 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-side iteration is written once: every checkpointed loop runs
   * in `GraphLoops.fixpoint` (checkpoint each iterate, probe, drop the
-  * prior one), and every `graft.*.broadcastMaxBytes` byte gate goes
-  * through `Dedup.gatedBroadcast`. A hand-written loop counter grows its
-  * own story for when its iterates are freed, and a hand-written gate
-  * can lose the `bar > 0` guard that keeps a disabled bar from
-  * broadcasting a 0-byte estimate, so this spec fails on either by file,
-  * line and enclosing def. Comment lines are not code and are skipped.
+  * prior one), and every forced-broadcast byte gate goes through
+  * `Dedup.gatedBroadcast`. A hand-written loop counter grows its own
+  * story for when its iterates are freed, and a hand-written gate can
+  * lose the `bar > 0` guard that keeps a disabled bar from broadcasting a
+  * 0-byte estimate, so this spec fails on either by file, line and
+  * enclosing def. The bar itself derives from Spark's own
+  * `spark.sql.autoBroadcastJoinThreshold`: the library has no conf keys
+  * of its own, and a second test fails on any code line that reads or
+  * writes a `graft.`-prefixed key. Comment lines are not code and are
+  * skipped.
   */
 class IterationLintSpec extends AnyFunSuite {
 
@@ -75,12 +79,28 @@ class IterationLintSpec extends AnyFunSuite {
       val inHome = hits.count { case (f, _, d, _) => (f, d) == r.home }
       if (inHome == 1 && hits.size == 1) None
       else Some(s"${r.what}: ${hits.size} lines (expected 1, in ${r.home._1} " +
-        s"`${r.home._2}`); call ${r.helper}:\n    " + hits.map { case (f, n, d, line) =>
-          s"$f:$n (def $d): $line" }.mkString("\n    "))
+        s"`${r.home._2}`); call ${r.helper}:" + listing(hits))
     }
     if (report.nonEmpty)
       fail(s"\n${report.mkString("\n")}")
   }
+
+  test("no code line reads or writes a graft.-prefixed conf key") {
+    // A conf call on a "graft. literal, or a key-shaped literal
+    // ("graft.<family>.<camelCaseKey>") handed to a helper that reads it.
+    // Class names (`format("graft.sources.CollectorSink")`) end in an
+    // upper-case segment and are not conf calls, so they do not match.
+    val confKey =
+      """\b(?:get|getOption|set|unset)\(\s*"graft\.|"graft\.[a-z]+\.[a-z]\w*"""".r
+    val hits = codeLines.filter { case (_, _, _, line) =>
+      confKey.findFirstIn(line).nonEmpty }
+    if (hits.nonEmpty)
+      fail(s"\n${hits.size} graft conf key lines (derive the value from " +
+        "Spark's own settings instead):" + listing(hits))
+  }
+
+  private def listing(hits: Seq[(String, Int, String, String)]): String =
+    hits.map { case (f, n, d, line) => s"\n    $f:$n (def $d): $line" }.mkString
 
   private def isComment(line: String): Boolean = {
     val t = line.trim

@@ -118,12 +118,14 @@ class Round10Spec extends SparkSuite {
     // this pins the VALUE: the gate switches plans, never answers.
     val below = SparkEntry.queries("x171_lm_perplexity")(spark, sfDir)
       .collect().toSeq
-    spark.conf.set("graft.lm.broadcastMaxBytes", "64")
+    // A 1-byte threshold scales the bar down to 6 bytes: past any model.
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try {
       val above = SparkEntry.queries("x171_lm_perplexity")(spark, sfDir)
         .collect().toSeq
       assert(below == above, "x171 gate changed the answer, not just the plan")
-    } finally spark.conf.unset("graft.lm.broadcastMaxBytes")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("x170's df table is query-sized by construction") {

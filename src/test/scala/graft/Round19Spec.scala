@@ -363,12 +363,14 @@ class Round19Spec extends SparkSuite {
   test("x245 byte gate: over-the-bar fr side falls back to plain equi-joins, same result") {
     val docs = Tables.documents(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val gatedOut =
       try {
-        spark.conf.set("graft.ann.broadcastMaxBytes", "1") // force fallback
+        // force fallback: a 1-byte threshold scales the bar down to 6 bytes
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
         graft.operators.Similarity.bitextMineAnn(spark, docs, emb)
           .collect().map(_.toSeq).toSeq
-      } finally spark.conf.unset("graft.ann.broadcastMaxBytes")
+      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     val broadcastOut = graft.operators.Similarity.bitextMineAnn(spark, docs, emb)
       .collect().map(_.toSeq).toSeq
     assert(gatedOut.nonEmpty, "fallback path mined no pairs")

@@ -6,11 +6,12 @@ class Round8Spec extends SparkSuite {
   test("x152: the broadcast gate changes the plan, never the answer") {
     val q = SparkEntry.queries("x152_triangles")
     val base = q(spark, sfDir).collect().toSeq
-    // 64 bytes: below any real edge list, so the gate must take the
-    // fallback branch — no FORCED broadcast hint in the plan. (AQE may
-    // still convert the join to a broadcast at runtime from measured
-    // shuffle sizes; that is the desired behavior — runtime stats refuse
-    // a GB-scale side where the static hint could not.)
+    // A 1-byte threshold scales the bar down to 6 bytes, below any real
+    // edge list, so the gate must take the fallback branch — no FORCED
+    // broadcast hint in the plan. (AQE may still convert the join to a
+    // broadcast at runtime from measured shuffle sizes; that is the
+    // desired behavior — runtime stats refuse a GB-scale side where the
+    // static hint could not.)
     def forcedBroadcasts(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join
@@ -23,19 +24,18 @@ class Round8Spec extends SparkSuite {
     assert(forcedBroadcasts(q(spark, sfDir)) == 2,
       "below the bar the wedge build side and the closing probe must " +
         "both carry the broadcast hint")
-    spark.conf.set("graft.triangles.broadcastMaxBytes", "64")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try {
       val df = q(spark, sfDir)
       assert(df.collect().toSeq == base)
       assert(forcedBroadcasts(df) == 0,
         "edge list broadcast-hinted despite being past the broadcast bar")
-    } finally spark.conf.unset("graft.triangles.broadcastMaxBytes")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
     // broadcast disabled session-wide (threshold -1) is respected
-    // absolutely, dedicated knob notwithstanding: no hint, and (with
-    // adaptive conversion inheriting the -1) no broadcast in the final
-    // plan either.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    // absolutely: no hint, and (with adaptive conversion inheriting the
+    // -1) no broadcast in the final plan either.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val df = q(spark, sfDir)

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * at sf0.001" from "would run at 100 TB where partitions WILL spill".
   *
   * r14 verdict #7 adds a GATED-FALLBACK target: x245 with
-  * `graft.ann.broadcastMaxBytes=1` — the co-partitioned equi-join plan
+  * `spark.sql.autoBroadcastJoinThreshold=1`, which scales every byte
+  * gate's bar down to 6 bytes — the co-partitioned equi-join plan
   * that replaces the broadcasts when the build side is over the byte gate
   * (exactly the plan a 100 TB run would take) gets the same forced-spill
   * parity proof as the graph queries, instead of only the
@@ -23,7 +24,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.memory.fraction` and the force-spill threshold are static
   * context configs — and stops it mid-test to build the comparison
   * session (the Bench isolated-phase idiom: stop, then a fresh context
-  * in the same JVM).
+  * in the same JVM). The second test uses the same stop-then-rebuild
+  * shape to check that `Tables` lets go of a stopped context's frames.
   */
 class SpillSpec extends AnyFunSuite {
 
@@ -35,21 +37,22 @@ class SpillSpec extends AnyFunSuite {
   // gated ≡ ungated; here the question is whether the fallback plan
   // itself survives spilling).
   private val gatedTargets = Seq("x245_bitext_mine_ann")
-  private val gateConfs = Seq("graft.ann.broadcastMaxBytes")
+  private val threshold = "spark.sql.autoBroadcastJoinThreshold"
 
   private def runAll(spark: org.apache.spark.sql.SparkSession)
       : Map[String, Seq[Seq[Any]]] = {
     val plain = targets.map { n =>
       n -> SparkEntry.queries(n)(spark, sfDir).collect().map(_.toSeq).toSeq
     }
+    val prev = spark.conf.get(threshold)
     val gated =
       try {
-        gateConfs.foreach(spark.conf.set(_, "1"))
+        spark.conf.set(threshold, "1")
         gatedTargets.map { n =>
           n -> SparkEntry.queries(n)(spark, sfDir)
             .collect().map(_.toSeq).toSeq
         }
-      } finally gateConfs.foreach(spark.conf.unset)
+      } finally spark.conf.set(threshold, prev)
     (plain ++ gated).toMap
   }
 
@@ -97,5 +100,17 @@ class SpillSpec extends AnyFunSuite {
           s"${ref(n).size} rows) — a spill path is dropping or reordering " +
           "data")
     }
+  }
+
+  test("Tables drops a stopped context's frames on the next cold insert") {
+    val old = Sessions.local(8)
+    Tables.documents(old, sfDir)
+    Tables.embeddings(old, sfDir)
+    assert(Tables.retainedFrames >= 2)
+    old.stop()
+    val fresh = Sessions.local(8)
+    Tables.documents(fresh, sfDir)
+    assert(Tables.retainedFrames == 1,
+      "frames bound to the stopped context are still retained")
   }
 }
