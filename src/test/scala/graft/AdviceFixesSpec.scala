@@ -150,6 +150,26 @@ class AdviceFixesSpec extends SparkSuite {
       }
     } finally spark.conf.set(key, prev)
   }
+
+  // The name predates the removal of the graft.*.broadcastMaxBytes keys;
+  // a Spark threshold <= 0 is now the one way to reach bar 0.
+  test("graft.*.broadcastMaxBytes <= 0 disables graft broadcasts (bar 0)") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val d = spark.range(4).toDF("id")
+    try {
+      spark.conf.unset(key)
+      val on = Dedup.effectiveBroadcastBar(spark)
+      assert(on > 0 && !(Dedup.gatedBroadcast(d, 0L, on) eq d))
+      for (v <- Seq("0", "-1")) {
+        spark.conf.set(key, v)
+        val bar = Dedup.effectiveBroadcastBar(spark)
+        assert(bar == 0L, s"at $v")
+        // Not even a 0-byte estimate is broadcast under bar 0.
+        assert(Dedup.gatedBroadcast(d, 0L, bar) eq d, s"at $v")
+      }
+    } finally spark.conf.set(key, prev)
+  }
 }
 
 /** Tiny reference Levenshtein for the spec's own oracle (full DP, no bound). */
