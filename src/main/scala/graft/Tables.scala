@@ -59,7 +59,7 @@ object Tables {
     * would otherwise pay both on every request.
     *
     * The content key is the path, the `path:size:mtime` of every file
-    * under it (one recursive listing) and the session's values of the
+    * under it (one walk of the tree) and the session's values of the
     * inference confs above (`nanosAsLong` reads a TIMESTAMP(NANOS) column
     * as a long, so the same file has two schemas). A warm call returns
     * the same `DataFrame`. A cold call in a session returns
@@ -74,13 +74,12 @@ object Tables {
     val root = new org.apache.hadoop.fs.Path(path)
     val files = scala.util.Try {
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(root, true)
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        b += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
-      }
-      b.result().sorted
+      // listStatus, not listFiles: listFiles builds a LocatedFileStatus per
+      // file, whose permission lookup forks `ls -ld` on a local file system
+      // without native IO.
+      def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s))
+      walk(root).map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted
     }.getOrElse(Nil)
     if (files.isEmpty) spark.read.parquet(path)
     else {

@@ -19,13 +19,14 @@ import org.apache.spark.sql.functions._
   *
   * The serving routes ([[cosineTopK]], [[annTopKBandedStored]] and its
   * stored siblings, [[ivfTopKStored]], [[quantizedTopK]]) answer a warm
-  * request in two Spark jobs: [[fetchQuery]]'s small filtered job, then
-  * the answer. Every per-request value — the query id, the query vector,
-  * the probed (band, bv) pairs and cells — enters the plan as a
-  * referenced object (an array literal, a UDF closure, a
+  * request over a `Tables` frame in one Spark job, the answer:
+  * [[fetchQuery]] reads the query vector on the driver from the
+  * embeddings table's own parquet files. Every per-request value — the
+  * query vector, the probed (band, bv) pairs and cells — enters the plan
+  * as a referenced object (an array literal, a UDF closure, a
   * `GraftFunctions.inSet`), never as Java source text, so the generated
-  * classes of both jobs are the same for every query and a warm request
-  * compiles nothing. IVF ranks its cells on the driver against centroids
+  * classes are the same for every query and a warm request compiles
+  * nothing. IVF ranks its cells on the driver against centroids
   * collected once per stored table.
   *
   * All dot products run as native `graft_dot`/`graft_cosine` expressions
@@ -75,23 +76,24 @@ object Similarity {
     else top(top(scored, k * copies).dropDuplicates("vec_id"), k)
   }
 
-  /** The embedding of `queryId` on the driver, fetched with one small
-    * filtered job: the raw float array and its [[toDouble]] cast, the
-    * cast every route scores with. None for an absent id. Each serving
-    * route builds its plan around this value as a literal
-    * ([[rerankLit]]) instead of joining a query row. The id is tested
-    * with a one-element `GraftFunctions.inSet` rather than `=`: both an
-    * array literal and an `InSet`'s values are reference objects in
-    * generated code, where `vec_id = 5` writes `5L` into the source, so
-    * neither this job nor the answer compiles a class per query.
+  /** The embedding of `queryId` on the driver: the raw float array and
+    * its exact widening to double, the vector every route scores with.
+    * None for an absent id. Each serving route builds its plan around
+    * this value as a literal ([[rerankLit]]) instead of joining a query
+    * row. A bare parquet relation (what `Tables.parquet` returns) is read
+    * on the driver by [[EmbeddingFiles.lookup]], with no Spark job; any
+    * other frame (in-memory, checkpointed, projected or filtered) answers
+    * with one small filtered collect. Its id is tested with a one-element
+    * `GraftFunctions.inSet` rather than `=`: an `InSet`'s values are a
+    * reference object in generated code, where `vec_id = 5` writes `5L`
+    * into the source, so that job compiles no class per query.
     */
-  private def fetchQuery(emb: DataFrame, queryId: Long): Option[(Array[Float], Array[Double])] = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
-    emb.filter(inSet(col("vec_id"), Seq(queryId)))
-      .select(col("embedding"), toDouble(col("embedding")))
-      .collect().headOption
-      .map(r => (r.getSeq[Float](0).toArray, r.getSeq[Double](1).toArray))
-  }
+  private[graft] def fetchQuery(emb: DataFrame, queryId: Long): Option[(Array[Float], Array[Double])] =
+    EmbeddingFiles.lookup(emb, queryId).getOrElse {
+      graft.functions.GraftFunctions.register(emb.sparkSession)
+      emb.filter(inSet(col("vec_id"), Seq(queryId))).select(col("embedding"))
+        .collect().headOption.map(_.getSeq[Float](0).toArray)
+    }.map(v => (v, v.map(_.toDouble)))
 
   /** [[rerank]] against a fetched query vector `q` as a literal. An
     * absent query (None) keeps the two output columns and yields zero
@@ -160,7 +162,7 @@ object Similarity {
     * positive. The one body of [[hyperplaneSigs]]'s UDF and of the stored
     * probe's driver-side signature.
     */
-  private def signature(h: Array[Array[Double]], e: Seq[Double]): Int = {
+  private def signature(h: Array[Array[Double]], e: Array[Double]): Int = {
     var sig = 0
     var p = 0
     while (p < h.length) {
@@ -182,7 +184,9 @@ object Similarity {
   private def hyperplaneSigs(spark: SparkSession, emb: DataFrame,
       planes: Int): DataFrame = {
     val hpB = spark.sparkContext.broadcast(hyperplanes(planes))
-    val sigUdf = udf((e: Seq[Double]) => signature(hpB.value, e))
+    // Spark passes the array as a List, whose length and e(d) are linear:
+    // copy it once so the loop indexes in constant time.
+    val sigUdf = udf((e: Seq[Double]) => signature(hpB.value, e.toArray))
     emb.select(col("vec_id"), toDouble(col("embedding")).as("e"))
       .withColumn("sig", sigUdf(col("e")))
   }
@@ -326,9 +330,10 @@ object Similarity {
   private def annProbeStored(spark: SparkSession, emb: DataFrame,
       tbls: Seq[String], queryId: Long, k: Int, planes: Int,
       bands: Int, flips: Int = 0): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     val q = fetchQuery(emb, queryId).map(_._2)
     val probes = q.toSeq.flatMap(v =>
-      probeBands(signature(hyperplanes(planes), v.toSeq), planes, bands, flips))
+      probeBands(signature(hyperplanes(planes), v), planes, bands, flips))
     val bvs = probes.flatMap(_._2).distinct
     // Each band's set also holds ~b, a value no bucket holds, so no two
     // band terms are equal: Catalyst factors equal conjuncts out of an OR,
@@ -353,11 +358,12 @@ object Similarity {
     * instead of all of it. Identical candidate semantics and arithmetic
     * to the in-memory route → SHARES x81's oracle verbatim.
     *
-    * The one driver-side step is fetching the query vector (one small
-    * filtered job); its `bands` (band, bv) values and the pruning
-    * predicate are computed from it on the driver — the bounded
-    * serving-path round-trip every ANN system makes (you cannot route to
-    * buckets you haven't looked at).
+    * The one driver-side step is fetching the query vector
+    * ([[fetchQuery]]: a driver read of the embeddings files, no job);
+    * its `bands` (band, bv) values and the pruning predicate are
+    * computed from it on the driver — the bounded serving-path round-trip
+    * every ANN system makes (you cannot route to buckets you haven't
+    * looked at).
     */
   def annTopKBandedStored(spark: SparkSession, emb: DataFrame, dir: String,
       queryId: Long, k: Int, planes: Int = 16, bands: Int = 4): DataFrame = {
@@ -976,11 +982,11 @@ object Similarity {
     * written once as a bucketed table in a real deployment"), shipped:
     * the trained centroid table (nlist rows) and the global cell
     * assignment (bucketed by `cid` — the IVF partition key) are written
-    * once per (corpus, params); a probe then TRAINS NOTHING and runs no
-    * job of its own — it ranks the nlist centroids, collected once per
-    * stored table, against the fetched query vector on the driver
-    * ([[nearestCellIds]], the bucket routing every IVF serving system
-    * performs), bucket-PRUNES the cell table scan to the nprobe cells
+    * once per (corpus, params); a probe then TRAINS NOTHING and runs one
+    * job, the answer — it ranks the nlist centroids, collected once per
+    * stored table, against the query vector [[fetchQuery]] read on the
+    * driver ([[nearestCellIds]], the bucket routing every IVF serving
+    * system performs), bucket-PRUNES the cell table scan to the nprobe cells
     * through a `GraftFunctions.inSet` on cid, and exact-re-ranks inside
     * them against the query as a literal. Identical trajectory and
     * arithmetic to x23 (same deterministic trainer builds the tables) →
@@ -1083,12 +1089,13 @@ object Similarity {
     * on clustered vectors the true top-k often falls outside its top 50
     * (`QuantizedRecallSpec`).
     *
-    * One plan, two jobs: the query vector is fetched once and quantized
-    * on the driver with [[quantize]], the quantized code rides in the
-    * scoring UDF's closure (a reference object in generated code, so the
-    * stage code does not vary with the query), and the quantize map
-    * carries each row's embedding, so the top `rerank` rows feed the
-    * exact re-rank against the query as a literal with no second scan.
+    * One plan, one job over a `Tables` frame: the query vector is read
+    * on the driver ([[fetchQuery]]) and quantized there with
+    * [[quantize]], the quantized code rides in the scoring UDF's closure
+    * (a reference object in generated code, so the stage code does not
+    * vary with the query), and the quantize map carries each row's
+    * embedding, so the top `rerank` rows feed the exact re-rank against
+    * the query as a literal with no second scan.
     *
     * This is the standard memory-bound-scan trick at 100 TB: the quantized
     * codes fit where floats don't, and the exact re-rank bounds the

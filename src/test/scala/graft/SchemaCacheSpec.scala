@@ -54,6 +54,20 @@ class SchemaCacheSpec extends SparkSuite {
     } finally Staging.deleteTree(dir)
   }
 
+  test("rewriting a file in a nested directory changes the content key") {
+    val dir = Files.createTempDirectory("graft_schema_cache_")
+    try {
+      val path = dir.resolve("t.parquet").toString
+      spark.range(4).selectExpr("id AS a", "id % 2 AS p").write.partitionBy("p").parquet(path)
+      val first = Tables.table(spark, dir.toString, "t")
+      assert(Tables.table(spark, dir.toString, "t") eq first)
+      spark.range(5).toDF("a").write.mode("overwrite").parquet(s"$path/p=1")
+      val fresh = Tables.table(spark, dir.toString, "t")
+      assert(fresh ne first, "a rewrite under p=1/ served the old relation")
+      assert(fresh.count() == 7)
+    } finally Staging.deleteTree(dir)
+  }
+
   test("nanosAsLong true and false are separate cache entries") {
     val dir = Files.createTempDirectory("graft_schema_cache_")
     try {

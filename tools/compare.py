@@ -10,7 +10,10 @@ Usage: python3 tools/compare.py <sfdir> <outdir>
 """
 import json
 import math
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -93,11 +96,33 @@ def canon(df):
     return cols, out
 
 
-def _connect(sfdir):
+def spill_root(outdir):
+    """The disk-backed candidate directory with the most free space: the
+    output dir, the system temp dir or the working dir. DuckDB's default
+    spill dir is `.tmp` under the working dir, whose file system can be
+    too small for the largest oracles (x226 at sf0.1)."""
+    dirs = [d for d in (outdir, tempfile.gettempdir(), os.getcwd())
+            if os.path.isdir(d) and os.access(d, os.W_OK)]
+    return max(dirs, key=lambda d: shutil.disk_usage(d).free)
+
+
+THREADS = 4
+
+
+def _connect(sfdir, spill_dir):
     con = duckdb.connect()
     # Workers run concurrently — cap DuckDB's own intra-query threading so
     # N workers don't oversubscribe the box N*32-fold.
-    con.execute("PRAGMA threads=4")
+    con.execute(f"PRAGMA threads={THREADS}")
+    # Each connection spills into its own dir, at most half the free space
+    # there, so a runaway query fails with an out-of-memory error before
+    # the disk is full. Rows are compared sorted, so DuckDB need not keep
+    # insertion order (less memory, less spill).
+    os.makedirs(spill_dir, exist_ok=True)
+    con.execute(f"SET temp_directory = '{spill_dir}'")
+    con.execute(f"SET max_temp_directory_size = "
+                f"'{shutil.disk_usage(spill_dir).free // 2 ** 21}MiB'")
+    con.execute("SET preserve_insertion_order = false")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
@@ -108,9 +133,9 @@ _worker_con = None
 _worker_args = None
 
 
-def _init_worker(sfdir, outdir):
+def _init_worker(sfdir, outdir, spill):
     global _worker_con, _worker_args
-    _worker_con = _connect(sfdir)
+    _worker_con = _connect(sfdir, os.path.join(spill, str(os.getpid())))
     _worker_args = (sfdir, outdir)
 
 
@@ -123,6 +148,23 @@ def _check_worker(item):
         return name, False, [f"FAIL {name}: comparator error: {e}"]
 
 
+def _oracle_frame(con, sql):
+    """The oracle's result through .df(), the driver's pandas coercion —
+    NOT fetchall (see canon_value). DuckDB holds a partial hash table per
+    thread for every operator of a plan at once, so an oracle whose CTEs
+    are inlined dozens of times over (x226 at sf0.1 re-evaluates its edge
+    aggregate in every copy of r0..r3) can exhaust memory and spill space
+    with several threads; such a query runs once more single-threaded."""
+    try:
+        return con.execute(sql).df()
+    except duckdb.OutOfMemoryException:
+        con.execute("PRAGMA threads=1")
+        try:
+            return con.execute(sql).df()
+        finally:
+            con.execute(f"PRAGMA threads={THREADS}")
+
+
 def check_one(con, outdir, name, sql):
     """Returns (name, passed, output lines). Logic unchanged from the
     historical sequential loop — only factored out so a process pool can
@@ -133,9 +175,7 @@ def check_one(con, outdir, name, sql):
     out = []
     if True:  # keep the historical loop body's indentation
         try:
-            # .df(): the driver's pandas coercion — NOT fetchall (see
-            # canon_value).
-            odf = con.execute(sql).df()
+            odf = _oracle_frame(con, sql)
             ocols = list(odf.columns)
             otypes = dict(r[:2] for r in con.execute(f"DESCRIBE {sql}").fetchall())
         except Exception as e:
@@ -232,13 +272,22 @@ def main():
         oracle = json.load(f)
     items = [(n, oracle[n]) for n in sorted(oracle)]
 
-    import os
     procs = int(os.environ.get("GRAFT_COMPARE_PROCS",
                                str(min(8, os.cpu_count() or 1))))
     procs = max(1, min(procs, len(items) or 1))
+    spill = tempfile.mkdtemp(prefix="graft_compare_spill_", dir=spill_root(outdir))
+    try:
+        n_pass, n_fail = _check_all(sfdir, outdir, items, procs, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+    print(f"\n{n_pass} pass, {n_fail} fail")
+    sys.exit(1 if n_fail else 0)
+
+
+def _check_all(sfdir, outdir, items, procs, spill):
     n_pass = n_fail = 0
     if procs == 1:
-        con = _connect(sfdir)
+        con = _connect(sfdir, spill)
         results = (check_one(con, outdir, n, s) for n, s in items)
         for _, passed, lines in results:
             for ln in lines:
@@ -253,14 +302,13 @@ def main():
         import multiprocessing as mp
         ctx = mp.get_context("fork")
         with ctx.Pool(procs, initializer=_init_worker,
-                      initargs=(sfdir, outdir)) as pool:
+                      initargs=(sfdir, outdir, spill)) as pool:
             for _, passed, lines in pool.imap_unordered(_check_worker, items):
                 for ln in lines:
                     print(ln, flush=True)
                 n_pass += passed
                 n_fail += not passed
-    print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    return n_pass, n_fail
 
 
 if __name__ == "__main__":
