@@ -4,6 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.explode
 import org.apache.spark.storage.StorageLevel
 
+import java.util.concurrent.{Executors, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.immutable.SortedMap
 import scala.collection.mutable
 
 /** The reference's public API surface re-expressed over DataFrames:
@@ -22,7 +26,13 @@ import scala.collection.mutable
   * filtering is just... a filter); cycles (`README.md:56-108`) run as a
   * driver-side fixpoint loop with per-iteration localCheckpoint to cut
   * lineage — Spark DAGs are acyclic, so iteration is the only rendering
-  * (Pregel pattern).
+  * (Pregel pattern). The reference's concurrent tasks, each working once
+  * its pipe holds a value, become a dataflow on the driver: `run` starts
+  * each node (or whole cycle) on its own thread once every node writing
+  * a pipe it reads has finished, so independent branches and sinks
+  * submit their jobs at the same time. Concurrency within a node is
+  * Spark's (its partitions, the reference's `max_task_count`); between
+  * nodes it is the graph's own width, so there is no knob for it.
   *
   * Where the reference erases types to `BoxedAnySend` and downcast-panics
   * at runtime (`mod.rs:445-453`), each pipe here carries a concrete schema
@@ -43,6 +53,9 @@ import scala.collection.mutable
   */
 object PipeGraph {
   def builder: Builder = new Builder(Vector.empty)
+
+  /** Names the threads `run` starts. */
+  private val threadIds = new AtomicInteger
 
   /** R15 `WorkerOptions` analog: concurrency knobs per stage.
     * `ordered` ≈ `default_single_task()` (sequential FIFO);
@@ -66,10 +79,13 @@ object PipeGraph {
     def writes: Seq[String]
     def isProducer: Boolean = reads.isEmpty && writes.nonEmpty
   }
+  /** A source: `make` runs once per run and yields one DataFrame per
+    * output pipe, in order (the reference's one tuple per producer call).
+    */
   private[pipeline] final case class Producer(
-      out: String, make: SparkSession => DataFrame) extends Node {
+      outs: Seq[String], make: SparkSession => Seq[DataFrame]) extends Node {
     val reads: Option[String] = None
-    val writes: Seq[String] = Seq(out)
+    val writes: Seq[String] = outs
   }
   private[pipeline] final case class Transform(
       in: String, outs: Seq[String],
@@ -83,17 +99,24 @@ object PipeGraph {
     val writes: Seq[String] = Seq.empty
   }
 
+  /** A multi-output node's frames, checked against its pipe count. */
+  private def outputs(node: String, pipes: Seq[String])(dfs: Seq[DataFrame]): Seq[DataFrame] = {
+    require(dfs.length == pipes.length,
+      s"$node returned ${dfs.length} outputs for ${pipes.length} pipes")
+    dfs
+  }
+
   /** Immutable builder, mirroring `PipelineBuilder`'s `with_*` surface. */
   final class Builder private[pipeline] (nodes: Vector[Node]) {
     private def add(n: Node) = new Builder(nodes :+ n)
 
     /** R1 `with_inputs`: static literal source. */
     def inputs(pipe: String, make: SparkSession => DataFrame): Builder =
-      add(Producer(pipe, make))
+      add(Producer(Seq(pipe), s => Seq(make(s))))
 
     /** R3 `with_producer`: dynamic source (any DataFrame-yielding fn). */
     def producer(pipe: String)(make: SparkSession => DataFrame): Builder =
-      add(Producer(pipe, make))
+      add(Producer(Seq(pipe), s => Seq(make(s))))
 
     /** R2 `with_branching_inputs` / R14 `branch_inputs!`: static multi-
       * output source — the i-th DataFrame feeds the i-th pipe (the
@@ -109,14 +132,7 @@ object PipeGraph {
       */
     def branchingProducer(pipes: Seq[String])(
         make: SparkSession => Seq[DataFrame]): Builder =
-      pipes.zipWithIndex.foldLeft(this) { case (b, (pipe, i)) =>
-        b.add(Producer(pipe, s => {
-          val dfs = make(s)
-          require(dfs.length == pipes.length,
-            s"branching producer returned ${dfs.length} outputs for ${pipes.length} pipes")
-          dfs(i)
-        }))
-      }
+      add(Producer(pipes, s => outputs("branching producer", pipes)(make(s))))
 
     /** R5 `with_stage`: 1-in/1-out map+filter (Option-drop ≡ filter). */
     def stage(in: String, out: String)(op: DataFrame => DataFrame): Builder =
@@ -137,12 +153,7 @@ object PipeGraph {
       */
     def branchingStage(in: String, outs: Seq[String])(
         op: DataFrame => Seq[DataFrame]): Builder =
-      add(Transform(in, outs, df => {
-        val r = op(df)
-        require(r.length == outs.length,
-          s"branching stage returned ${r.length} outputs for ${outs.length} pipes")
-        r
-      }))
+      add(Transform(in, outs, df => outputs("branching stage", outs)(op(df))))
 
     /** R8 `with_flattener`: explode an array column. */
     def flattener(in: String, out: String, column: String): Builder =
@@ -228,8 +239,28 @@ final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
     out.toVector // reverse-topological order
   }
 
-  /** Runs every node in topological order; cyclic components iterate to
-    * a fixpoint (at most `maxIterations` rounds).
+  /** Runs the graph as a dataflow over its strongly connected components:
+    * a component starts as soon as every other component that writes a
+    * pipe it reads has finished, so independent branches and sinks run at
+    * the same time — the reference runs each stage as its own task, which
+    * works once its pipe holds a value. A component is one producer,
+    * transform or consumer, or a cycle that iterates to a fixpoint (at
+    * most `maxIterations` rounds).
+    *
+    * Threads: the components run on a pool this call creates and shuts
+    * down, with one thread per component at most — the graph's own width,
+    * so there is nothing to size. Every thread is started from the calling
+    * thread, so it inherits the caller's Spark local properties (job
+    * group, scheduler pool, any tag the caller set) and active session:
+    * each job of the run carries them.
+    *
+    * Failure: once a component throws, no further component starts, so
+    * none of its dependents does. The components already running finish,
+    * every pipe the run persisted is released, and then the first failure
+    * is rethrown; no job of the run starts after `run` returns.
+    *
+    * Fan-in: a pipe with several writers is the UNION ALL of their writes
+    * in topological order, whichever writer finished first.
     *
     * Each batch pipe is materialized once per run: it is persisted the
     * first time a stage or consumer reads it — before the node's op, so
@@ -245,42 +276,71 @@ final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
     * it from its sources.
     */
   def run(spark: SparkSession, maxIterations: Int = 100): Map[String, DataFrame] = {
-    // pipe -> accumulated content (union of all writes)
-    val pipes = mutable.Map[String, DataFrame]()
-    def write(pipe: String, df: DataFrame): Unit =
-      pipes(pipe) = pipes.get(pipe).map(_.union(df)).getOrElse(df)
-
-    // Batch pipes this run persisted; a pipe the caller already cached
-    // (or one whose plan equals an earlier pipe's) is used as is.
-    val persisted = mutable.ArrayBuffer[DataFrame]()
-    def read(pipe: String): Option[DataFrame] = pipes.get(pipe).map { df =>
-      if (!df.isStreaming && df.storageLevel == StorageLevel.NONE) {
-        persisted += df.persist()
-      }
-      df
+    val comps = sccs.reverse // topological order: a component's rank
+    val writers = comps.indices
+      .flatMap(c => comps(c).flatMap(nodes(_).writes).map(_ -> c))
+      .groupMap(_._1)(_._2)
+    val deps = comps.indices.map(c =>
+      comps(c).flatMap(nodes(_).reads).flatMap(writers.getOrElse(_, Nil)).toSet - c)
+    val waiting = deps.map(_.size).toArray
+    val state = new RunState
+    val pool = Executors.newFixedThreadPool(comps.length, (r: Runnable) => {
+      val t = new Thread(r, s"pipegraph-${threadIds.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    // Components report here when they end; only this thread starts one.
+    val ended = new LinkedBlockingQueue[(Int, Option[Throwable])]()
+    var running = 0
+    var failure = Option.empty[Throwable]
+    def start(c: Int): Unit = {
+      running += 1
+      pool.execute(() => ended.put(c -> (
+        try { runComponent(spark, c, comps(c), state, maxIterations); None }
+        catch { case t: Throwable => Some(t) })))
     }
-
-    val comps = sccs.reverse // topological order
-    try comps.foreach { comp =>
-      val isCycle = comp.length > 1 || {
-        val i = comp.head
-        nodes(i).writes.exists(nodes(i).reads.contains(_))
-      }
-      if (!isCycle) {
-        val node = nodes(comp.head)
-        node match {
-          case Producer(out, make) => write(out, make(spark))
-          case Transform(in, outs, op) =>
-            read(in).foreach { df =>
-              outs.zip(op(df)).foreach { case (p, o) => write(p, o) }
-            }
-          case Consumer(in, sink) => read(in).foreach(sink)
+    try {
+      comps.indices.filter(waiting(_) == 0).foreach(start)
+      while (running > 0) {
+        val (c, err) = ended.take()
+        running -= 1
+        if (failure.isEmpty) {
+          failure = err
+          if (err.isEmpty) comps.indices.filter(deps(_)(c)).foreach { d =>
+            waiting(d) -= 1
+            if (waiting(d) == 0) start(d)
+          }
         }
-      } else {
-        runCycle(spark, comp, pipes, write, maxIterations)
       }
-    } finally persisted.reverseIterator.foreach(_.unpersist(blocking = true))
-    pipes.toMap
+    } finally {
+      // Every started component ends before the pipes are released, also
+      // when this thread was interrupted while waiting.
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true }
+      state.release()
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+    failure.foreach(throw _)
+    state.pipes
+  }
+
+  private def runComponent(spark: SparkSession, rank: Int, comp: Vector[Int],
+      state: RunState, maxIterations: Int): Unit = {
+    val isCycle = comp.length > 1 || {
+      val i = comp.head
+      nodes(i).writes.exists(nodes(i).reads.contains(_))
+    }
+    def emit(outs: Seq[String], dfs: Seq[DataFrame]): Unit =
+      outs.zip(dfs).foreach { case (p, o) => state.write(p, rank, o) }
+    if (!isCycle) nodes(comp.head) match {
+      case Producer(outs, make) => emit(outs, make(spark))
+      case Transform(in, outs, op) => state.read(in).foreach(df => emit(outs, op(df)))
+      case Consumer(in, sink) => state.read(in).foreach(sink)
+    }
+    else runCycle(comp, rank, state, maxIterations)
   }
 
   /** Fixpoint execution of one cyclic component: seed each in-cycle pipe
@@ -290,45 +350,79 @@ final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
     * linearly with iteration count and the driver OOMs — SURVEY §7.4).
     * Emissions to pipes *outside* the cycle accumulate as ordinary writes.
     */
-  private def runCycle(
-      spark: SparkSession,
-      comp: Vector[Int],
-      pipes: mutable.Map[String, DataFrame],
-      write: (String, DataFrame) => Unit,
+  private def runCycle(comp: Vector[Int], rank: Int, state: RunState,
       maxIterations: Int): Unit = {
-    val inCycle = comp.toSet
     val cyclePipes = comp.flatMap(i => nodes(i).reads).toSet
     // frontier: per-pipe current batch (starts as the externally-seeded content)
     var frontier: Map[String, DataFrame] =
-      cyclePipes.iterator.flatMap(p => pipes.get(p).map(p -> _)).toMap
-    // record full accumulated content of cycle pipes as we go
-    frontier.foreach { case (p, df) => pipes(p) = df }
+      cyclePipes.iterator.flatMap(p => state.content(p).map(p -> _)).toMap
 
     var iter = 0
     while (frontier.nonEmpty && iter < maxIterations) {
       val next = mutable.Map[String, DataFrame]()
       comp.foreach { i =>
         nodes(i) match {
-          case Transform(in, outs, op) if inCycle(i) =>
+          case Transform(in, outs, op) =>
             frontier.get(in).foreach { df =>
               outs.zip(op(df)).foreach { case (p, o) =>
                 if (cyclePipes.contains(p)) {
                   val chk = o.localCheckpoint(true)
                   next(p) = next.get(p).map(_.union(chk)).getOrElse(chk)
-                } else write(p, o.localCheckpoint(true))
+                } else state.write(p, rank, o.localCheckpoint(true))
               }
             }
           case _ =>
         }
       }
       frontier = next.filter { case (_, df) => !df.isEmpty }.toMap
-      frontier.foreach { case (p, df) =>
-        pipes(p) = pipes.get(p).map(_.union(df)).getOrElse(df)
-      }
+      // record the full accumulated content of the cycle's pipes
+      frontier.foreach { case (p, df) => state.write(p, rank, df) }
       iter += 1
     }
     if (frontier.nonEmpty)
       throw new IllegalStateException(
         s"cycle did not converge within $maxIterations iterations")
+  }
+}
+
+/** One run's pipe contents and the pipes it persisted, shared by the
+  * threads of its components. A pipe's content is the UNION ALL of its
+  * writes in writer rank (topological) order; reading it collapses them
+  * into one frame, so every later read sees that same frame.
+  */
+private final class RunState {
+  private val writes = mutable.Map[String, SortedMap[Int, DataFrame]]()
+  private val persisted = mutable.ArrayBuffer[DataFrame]()
+
+  def write(pipe: String, rank: Int, df: DataFrame): Unit = synchronized {
+    val w = writes.getOrElse(pipe, SortedMap.empty[Int, DataFrame])
+    writes(pipe) = w.updated(rank, w.get(rank).map(_.union(df)).getOrElse(df))
+  }
+
+  def content(pipe: String): Option[DataFrame] = synchronized {
+    writes.get(pipe).map { w =>
+      val df = w.values.reduceLeft(_.union(_))
+      writes(pipe) = SortedMap(w.lastKey -> df)
+      df
+    }
+  }
+
+  /** A stage's or consumer's read: persists a batch pipe on its first read
+    * (a pipe the caller already cached, or one whose plan equals an
+    * earlier pipe's, is used as is).
+    */
+  def read(pipe: String): Option[DataFrame] = synchronized {
+    content(pipe).map { df =>
+      if (!df.isStreaming && df.storageLevel == StorageLevel.NONE) persisted += df.persist()
+      df
+    }
+  }
+
+  def release(): Unit = synchronized {
+    persisted.reverseIterator.foreach(_.unpersist(blocking = true))
+  }
+
+  def pipes: Map[String, DataFrame] = synchronized {
+    writes.keys.toSeq.flatMap(p => content(p).map(p -> _)).toMap
   }
 }

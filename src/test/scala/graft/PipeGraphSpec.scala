@@ -1,9 +1,16 @@
 package graft
 
+import java.util.Properties
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
 import graft.pipeline.PipeGraph
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftInternal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** Mirrors the reference's builder-validation and end-to-end pipeline tests
   * (`/root/reference/tests/pipeline_tests.rs`, `tests/stage_tests.rs`).
@@ -86,6 +93,23 @@ class PipeGraphSpec extends SparkSuite {
       .consumer("doubles")(df => s2 = df.agg(sum("v")).head().getLong(0))
       .build().toOption.get
     g.run(spark)
+    assert(s1 == 45 && s2 == 90)
+  }
+
+  test("a branching producer calls make once per run") {
+    val calls = new AtomicInteger
+    var s1, s2 = 0L
+    val g = PipeGraph.builder
+      .branchingProducer(Seq("ones", "doubles")) { s =>
+        calls.incrementAndGet()
+        import s.implicits._
+        Seq((1 to 9).toDF("v"), (1 to 9).map(_ * 2).toDF("v"))
+      }
+      .consumer("ones")(df => s1 = df.agg(sum("v")).head().getLong(0))
+      .consumer("doubles")(df => s2 = df.agg(sum("v")).head().getLong(0))
+      .build().toOption.get
+    g.run(spark)
+    assert(calls.get == 1, s"make ran ${calls.get} times")
     assert(s1 == 45 && s2 == 90)
   }
 
@@ -239,6 +263,156 @@ class PipeGraphSpec extends SparkSuite {
       assert(cached.storageLevel != StorageLevel.NONE)
       assert(cached.count() == 40 && evals.value == 40)
     } finally cached.unpersist(blocking = true)
+  }
+
+  // --- dataflow: a node starts once its input pipes are complete
+
+  /** Counts `latch` down and waits, bounded, for the others: only nodes
+    * running at the same time can all meet.
+    */
+  private def meet(latch: CountDownLatch, met: ConcurrentLinkedQueue[Boolean]): Unit = {
+    latch.countDown()
+    met.add(latch.await(60, TimeUnit.SECONDS))
+  }
+
+  private def allMet(met: ConcurrentLinkedQueue[Boolean], n: Int): Boolean =
+    met.asScala.toSeq == Seq.fill(n)(true)
+
+  test("independent consumers run at the same time") {
+    val latch = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]()
+    var odds, evens = 0L
+    val g = PipeGraph.builder
+      .inputs("nums", seq(1 to 10))
+      .branchingStage("nums", Seq("odds", "evens"))(df =>
+        Seq(df.filter(col("v") % 2 === 1), df.filter(col("v") % 2 === 0)))
+      .consumer("odds") { df => meet(latch, met); odds = df.count() }
+      .consumer("evens") { df => meet(latch, met); evens = df.count() }
+      .build().toOption.get
+    g.run(spark)
+    assert(allMet(met, 2), "the consumers did not run at the same time")
+    assert(odds == 5 && evens == 5)
+  }
+
+  test("a fan-in pipe's reader starts only after every writer finished") {
+    val latch = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]()
+    val finished = new AtomicInteger
+    var finishedAtRead = -1
+    var total = 0L
+    val g = PipeGraph.builder
+      .inputs("a", seq(1 to 4))
+      .inputs("b", seq(5 to 6))
+      .stage("a", "merged") { df => meet(latch, met); finished.incrementAndGet(); df }
+      .stage("b", "merged") { df =>
+        meet(latch, met)
+        Thread.sleep(300) // the later writer
+        finished.incrementAndGet()
+        df
+      }
+      .consumer("merged") { df =>
+        finishedAtRead = finished.get
+        total = df.agg(sum("v")).head().getLong(0)
+      }
+      .build().toOption.get
+    g.run(spark)
+    assert(allMet(met, 2), "the writers did not run at the same time")
+    assert(finishedAtRead == 2 && total == 21)
+  }
+
+  test("every job of a run carries the caller's job group and local properties") {
+    val sc = spark.sparkContext
+    val starts = new ConcurrentLinkedQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e.properties)
+    }
+    val latch = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]()
+    var odds, evens = 0L
+    val g = PipeGraph.builder
+      .producer("in")(range(100))
+      .branchingStage("in", Seq("odds", "evens"))(df =>
+        Seq(df.filter(col("v") % 2 === 1), df.filter(col("v") % 2 === 0)))
+      .consumer("odds") { df => meet(latch, met); odds = df.orderBy("v").collect().length }
+      .consumer("evens") { df => meet(latch, met); evens = df.count() }
+      .build().toOption.get
+    sc.setJobGroup("pipegraph-spec-group", "a dataflow run")
+    sc.setLocalProperty("pipegraph.spec.tag", "tagged")
+    sc.addSparkListener(listener)
+    try g.run(spark)
+    finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("pipegraph.spec.tag", null)
+      GraftInternal.flushListenerBus(spark)
+      sc.removeSparkListener(listener)
+    }
+    assert(allMet(met, 2), "the consumers did not run at the same time")
+    assert(odds == 50 && evens == 50)
+    val props = starts.asScala.toSeq
+    assert(props.nonEmpty)
+    assert(props.forall(p => p.getProperty("spark.jobGroup.id") == "pipegraph-spec-group" &&
+      p.getProperty("pipegraph.spec.tag") == "tagged"))
+  }
+
+  test("a cycle next to an independent branch converges to the same rows") {
+    val latch = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]()
+    var side = 0L
+    val g = PipeGraph.builder
+      .inputs("frontier", seq(Seq(1)))
+      .inputs("side", seq(1 to 5))
+      .branchingStage("frontier", Seq("frontier", "out")) { df =>
+        if (latch.getCount > 0) meet(latch, met) // first round only
+        Seq(df.filter(col("v") < 10).select((col("v") + 1).as("v")), df)
+      }
+      .consumer("out")(_ => ())
+      .consumer("side") { df => meet(latch, met); side = df.count() }
+      .build().toOption.get
+    val pipes = g.run(spark)
+    assert(allMet(met, 2), "the cycle and the branch did not run at the same time")
+    assert(pipes("out").collect().map(_.getInt(0)).sorted.toSeq == (1 to 10))
+    assert(side == 5)
+  }
+
+  test("a failing branch starts no dependent, its sibling finishes, nothing runs after run") {
+    val sc = spark.sparkContext
+    val before = persistentRddIds
+    val jobStarts = new ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobStarts.add(e.time)
+    }
+    val failed = new CountDownLatch(1)
+    var siblingSawFailure = false
+    val dependentStarted = new AtomicBoolean(false)
+    val boom = new RuntimeException("branch a failed")
+    val g = PipeGraph.builder
+      .producer("in")(range(100))
+      .branchingStage("in", Seq("a", "b"))(df =>
+        Seq(df.filter(col("v") < 50), df.filter(col("v") >= 50)))
+      .stage("a", "a2") { df => df.count(); failed.countDown(); throw boom }
+      .consumer("a2")(_ => dependentStarted.set(true))
+      .stage("b", "b2") { df =>
+        siblingSawFailure = failed.await(60, TimeUnit.SECONDS)
+        Thread.sleep(200)
+        df.count() // a job of the run, started after the failure
+        df
+      }
+      .consumer("b2")(df => { df.count(); () })
+      .build().toOption.get
+    sc.addSparkListener(listener)
+    val (e, returned) = try {
+      val e = intercept[RuntimeException](g.run(spark))
+      val returned = System.currentTimeMillis()
+      Thread.sleep(300) // time for a straggling job to start
+      GraftInternal.flushListenerBus(spark)
+      (e, returned)
+    } finally sc.removeSparkListener(listener)
+    assert(e eq boom)
+    assert(siblingSawFailure, "the sibling branch did not run while the failure happened")
+    assert(!dependentStarted.get, "a node that depends on the failed branch started")
+    assert(persistentRddIds.subsetOf(before))
+    assert(jobStarts.size >= 3)
+    assert(jobStarts.asScala.forall(_ <= returned), "a job of the run started after run returned")
   }
 
   test("cycle that never converges hits maxIterations") {
