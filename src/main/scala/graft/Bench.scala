@@ -50,25 +50,19 @@ object Bench {
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+      // One checkpoint scope per run: the checkpoints a query makes
+      // (shingle index, label propagation) are freed when it ends, so they
+      // cannot pile up across queries and passes into storage-memory
+      // pressure that slows LATER runs (x02: 2.0s isolated vs 5.5s
+      // in-suite in r3). The shared co-purchase table is made outside any
+      // scope and serves every graph query of the run (r11 verdict #4).
+      try Checkpoints.scope(SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save())
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Queries that localCheckpoint() intermediates (shingle index, label
-      // propagation) leave persisted RDD blocks behind; across 83 queries
-      // x 3 passes those accumulate into storage-memory pressure that slows
-      // LATER runs of the same queries (x02 measured 2.0s isolated vs 5.5s
-      // in-suite in r3). Dropping leftovers after each query makes every
-      // measurement start from the same clean block-manager state.
-      // EXCEPT the shared co-purchase table: it exists to be reused across
-      // the graph queries (r11 verdict #4 — per-run infrastructure, like a
-      // persisted edge table in production); sweeping it would force each
-      // graph query to re-derive it, which is exactly the waste it removes.
-      graft.operators.CoPurchaseGraph.sweepLeftovers(spark)
-      dt
+      (System.nanoTime() - t0) / 1e9
     }
 
     // --- host-noise calibration (r13 verdict #3): two fixed ~1 s probes

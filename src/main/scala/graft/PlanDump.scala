@@ -30,7 +30,9 @@ object PlanDump {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only(n))
     names.foreach { n =>
-      try {
+      // One checkpoint scope per query, as in Bench: one query's
+      // materialized lineage can't distort the next one's probes.
+      try Checkpoints.scope {
         val df = SparkEntry.queries(n)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -40,9 +42,6 @@ object PlanDump {
       } catch { case e: Throwable =>
         println(s"[plandump] $n FAILED: ${e.getMessage}")
       }
-      // Same hygiene as Bench: drop leftover checkpoint blocks so one
-      // query's materialized lineage can't distort the next one's probes.
-      graft.operators.CoPurchaseGraph.sweepLeftovers(spark)
     }
     spark.stop()
   }

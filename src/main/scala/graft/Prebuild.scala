@@ -24,7 +24,8 @@ object Prebuild {
 
   /** Queries whose construction performs a one-time persisted-table or
     * staged-fixture build (the build happens EAGERLY inside the query
-    * function; the returned probe plan is discarded unexecuted).
+    * function; the returned probe plan is discarded unexecuted, and its
+    * checkpoints are freed with its scope).
     * x253 shares x252's table; x256 folds x255's segments.
     */
   private val buildQueries = Seq(
@@ -40,7 +41,7 @@ object Prebuild {
     val t0 = System.nanoTime()
     graft.streaming.StreamingOps.prestage(spark, dir)
     buildQueries.foreach { n =>
-      try SparkEntry.queries(n)(spark, dir)
+      try Checkpoints.scope(SparkEntry.queries(n)(spark, dir))
       catch { case e: Throwable =>
         System.err.println(s"[prebuild] $n failed: ${e.getMessage}")
       }

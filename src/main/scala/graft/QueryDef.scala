@@ -34,21 +34,4 @@ object QueryDef {
   /** DuckDB-side rendering of [[dsum]]. */
   def dsumSql(expr: String, scale: Int = 6): String =
     s"CAST(sum(CAST($expr AS DECIMAL(18,$scale))) AS DOUBLE)"
-
-  /** Frees the persisted blocks behind a `localCheckpoint()`ed frame.
-    *
-    * `Dataset.unpersist()` only clears CacheManager entries (from
-    * `persist()`), never checkpoint RDD blocks — so a fixpoint loop that
-    * checkpoints a fresh iterate per round accumulates dead blocks
-    * linearly in round count unless it drops the prior iterate here once
-    * the convergence check has consumed it (r9 advice; masked in Bench by
-    * its post-query `getPersistentRDDs` sweep but not in Verify or
-    * library use). Non-blocking; a no-op on non-checkpointed frames.
-    * Each distinct RDD is unpersisted once, however often the plan holds
-    * it (a self-join of one checkpoint holds it twice).
-    */
-  def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.distinct.foreach(_.unpersist(false))
 }

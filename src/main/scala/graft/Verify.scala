@@ -129,9 +129,11 @@ object Verify {
           System.err.println(s"[verify] deadline: skipped $n")
         } else {
           val t0 = elapsedSec
+          // One checkpoint scope per query: its checkpoints are freed when
+          // its output is written, while the other workers' stay.
           try {
-            SparkEntry.queries(n)(sess, sfDir).coalesce(1)
-              .write.mode("overwrite").parquet(s"$outDir/$n")
+            Checkpoints.scope(SparkEntry.queries(n)(sess, sfDir).coalesce(1)
+              .write.mode("overwrite").parquet(s"$outDir/$n"))
             nOk.incrementAndGet()
             note(n, "ok", elapsedSec - t0)
           } catch { case e: Throwable =>

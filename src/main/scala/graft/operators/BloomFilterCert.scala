@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,7 +46,7 @@ object BloomFilterCert {
   def certify(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val users = ev.select(col("user_id").cast("string").as("k")).distinct()
-    val bits = bitsOf(users, "k").localCheckpoint()
+    val bits = Checkpoints.local(bitsOf(users, "k"))
 
     // Merge (OR) law: union of per-source bit sets == bits of all users.
     val perSrc = ev.select(col("event_type"),

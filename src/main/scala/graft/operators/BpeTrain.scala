@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,9 +66,8 @@ object BpeTrain {
     // Word-type table: the one corpus-scale aggregation. Materialized once
     // (localCheckpoint) — every iteration references it, and at warehouse
     // scale it would be a persisted table.
-    val words = TextOps.tokens(docs)
-      .groupBy("w").agg(count(lit(1)).cast("long").as("cnt"))
-      .localCheckpoint()
+    val words = Checkpoints.local(TextOps.tokens(docs)
+      .groupBy("w").agg(count(lit(1)).cast("long").as("cnt")))
     var sq = words.withColumn("seq",
       filter(split(col("w"), ""), s => s =!= ""))
     val tops = (1 to iters).map { it =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +32,7 @@ object ClusterEval {
     graft.functions.GraftFunctions.register(spark)
     // Materialized (r17): vecs feeds the init TakeOrdered and both
     // assignment passes — each re-ran the parquet scan + cast.
-    val vecs = KMeansLite.vectors(emb).localCheckpoint()
+    val vecs = Checkpoints.local(KMeansLite.vectors(emb))
     val (a2, c1) = KMeansLite.lloyd2(vecs, K) // a2: (vec_id, cid, v)
 
     val d2 = KMeansLite.d2(col("v"), col("cv"))

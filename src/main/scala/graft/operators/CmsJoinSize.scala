@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,9 +42,8 @@ object CmsJoinSize {
     // Materialized (r16): `deg` feeds the sketch AND the exact truth, and
     // `ests` (D rows) feeds three report legs — lazily each re-ran the
     // events aggregate (5 scans / 16 exchanges in one plan).
-    val deg = Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    val deg = Checkpoints.local(Tables.events(spark, dir)
+      .groupBy(col("user_id")).agg(count(lit(1)).as("d")))
     val cells = deg.select(explode(array((1 to D).map(i => struct(
         lit(i.toLong).as("r"),
         (h60(concat(lit(s"$i:"), col("user_id").cast("string"))) % W)
@@ -52,9 +51,8 @@ object CmsJoinSize {
         col("d"))): _*)).as("x"))
       .select(col("x.r"), col("x.b"), col("x.d"))
       .groupBy("r", "b").agg(sum(col("d")).as("c"))
-    val ests = cells.groupBy("r")
-      .agg(sum(col("c") * col("c")).as("est"))
-      .localCheckpoint()
+    val ests = Checkpoints.local(cells.groupBy("r")
+      .agg(sum(col("c") * col("c")).as("est")))
     val truth = deg.agg(sum(col("d") * col("d")).as("t"))
     val estMin = ests.agg(min(col("est")).as("m"))
     ests.select(concat(lit("est_row_"), col("r").cast("string")).as("stat"),

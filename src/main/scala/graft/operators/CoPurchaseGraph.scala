@@ -1,9 +1,8 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Checkpoints, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Shared co-purchase graph derivation (r9 verdict #7 / r11 verdict #4).
   *
@@ -33,10 +32,11 @@ import org.apache.spark.storage.StorageLevel
   * holds (r9's isolation rationale traded ~6 s of redundant derivation
   * per sf0.1 run for a property the symmetry already guarantees).
   *
-  * Liveness: the cache survives the per-query persistent-RDD sweep
-  * ([[sweepLeftovers]] skips its blocks); anything else that unpersists the
-  * blocks (ScalingSlopeSpec's full sweep, a stopped context) is detected
-  * by [[alive]] and the table is re-derived on next access — a dropped
+  * Liveness: the table is checkpointed with `Checkpoints.shared`, outside
+  * any query's scope, so it outlives the query that first asks for it and
+  * serves the rest of the run; anything that unpersists its blocks
+  * (ScalingSlopeSpec's full sweep, a stopped context) is detected by
+  * [[alive]] and the table is re-derived on next access — a dropped
   * shared view degrades to the old per-query behavior, never to an error.
   *
   * 100 TB: the pair table is |distinct co-purchase pairs| rows — bounded
@@ -49,46 +49,9 @@ object CoPurchaseGraph {
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // Backing RDD id per cache key (key already embeds the applicationId).
-  // Keyed — not a grow-only id set — because RDD ids restart from 0 in a
-  // fresh SparkContext (Bench's isolated-adjudication phase creates one):
-  // a stale id from a dead context would otherwise collide with an
-  // unrelated localCheckpoint RDD in the new context and exempt it from
-  // Bench's per-query sweep (r12 advice #1). Replacing a dead entry in
-  // [[pairWeights]] overwrites its id here, so nothing stale survives.
-  private val sharedByKey =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
-  /** RDD ids backing live shared tables OF THIS SESSION's context —
-    * the per-query sweep must not unpersist these (the whole point is
-    * cross-query reuse). Scoped to the session's applicationId so a
-    * fresh context never inherits exemptions from a dead one.
-    */
-  private def sharedRddIds(s: SparkSession): Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    val prefix = s.sparkContext.applicationId + "|"
-    sharedByKey.asScala.collect {
-      case (k, id) if k.startsWith(prefix) => id
-    }.toSet
-  }
-
-  /** The per-query leftover sweep: unpersists (non-blocking) every
-    * persistent RDD of `s`'s context except [[sharedRddIds]].
-    */
-  def sweepLeftovers(s: SparkSession): Unit = {
-    val keep = sharedRddIds(s)
-    s.sparkContext.getPersistentRDDs.values
-      .filterNot(r => keep(r.id)).foreach(_.unpersist(false))
-  }
-
-  private def backingRdd(df: DataFrame) =
-    df.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.headOption
 
   private def alive(df: DataFrame): Boolean =
-    !df.sparkSession.sparkContext.isStopped &&
-      backingRdd(df).exists(_.getStorageLevel != StorageLevel.NONE)
+    !df.sparkSession.sparkContext.isStopped && Checkpoints.held(df)
 
   /** The directed pair-weight table (src, dst, w): every ordered pair of
     * distinct parts sharing >= 1 order, with the distinct-order count.
@@ -102,27 +65,18 @@ object CoPurchaseGraph {
     this.synchronized {
       val again = cache.get(k)
       if (again != null && alive(again)) return again
-      // Evict entries of dead SparkContexts from BOTH maps (r13 advice
-      // #2): correctness never depended on it (sharedRddIds filters by
-      // live applicationId), but in long-lived multi-session JVMs — the
-      // test suite, Bench's isolated-adjudication contexts — the maps
-      // otherwise grow one dead entry per (context, dir) forever.
-      import scala.jdk.CollectionConverters._
-      val dead = cache.asScala.collect {
-        case (key, df) if df.sparkSession.sparkContext.isStopped => key
-      }.toSeq
-      dead.foreach { key => cache.remove(key); sharedByKey.remove(key) }
-      sharedByKey.asScala.keys.filterNot(cache.containsKey)
-        .foreach(sharedByKey.remove)
+      // Evict the entries of stopped contexts: in a long-lived JVM with
+      // many sessions (the test suite, Bench's isolated-adjudication
+      // contexts) the cache would otherwise grow one dead entry per
+      // (context, dir) forever.
+      cache.values.removeIf(_.sparkSession.sparkContext.isStopped)
       val op = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
-      val pw = op.as("a").join(op.as("b"),
+      val pw = Checkpoints.shared(op.as("a").join(op.as("b"),
           col("a.o") === col("b.o") && col("a.p") =!= col("b.p"))
         .groupBy(col("a.p").as("src"), col("b.p").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint()
-      backingRdd(pw).foreach(r => sharedByKey.put(k, r.id))
+        .agg(count(lit(1)).as("w")))
       cache.put(k, pw)
       pw
     }

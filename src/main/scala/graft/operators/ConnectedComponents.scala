@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,12 +55,11 @@ object ConnectedComponents {
         .isEmpty
     // Canonical undirected edges (a < b), deduped; self-loops dropped.
     val (edges, rounds) = GraphLoops.fixpoint(
-        pairs
+        Checkpoints.local(pairs
           .select(least(col("a"), col("b")).as("a"),
             greatest(col("a"), col("b")).as("b"))
           .filter(col("a") =!= col("b"))
-          .distinct()
-          .localCheckpoint(),
+          .distinct()),
         Int.MaxValue, Some(same)) { (edges, _) =>
       // Large-star: symmetrize; per node u with neighborhood N(u),
       // m = min(N(u) ∪ {u}); emit (v, m) for every v ∈ N(u), v > u.

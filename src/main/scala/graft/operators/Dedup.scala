@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -50,7 +50,7 @@ object Dedup {
     // [[ngramJaccardPairsFromShingles]] (BucketingSpec proves the bucketed
     // index self-joins with no exchange).
     ngramJaccardPairsFromShingles(
-      TextOps.shingles(docs).localCheckpoint(), threshold, maxDocFreq)
+      Checkpoints.local(TextOps.shingles(docs)), threshold, maxDocFreq)
   }
 
   /** The inverted-index core over an ALREADY MATERIALIZED `(doc_id,
@@ -121,7 +121,7 @@ object Dedup {
     * shuffles on candidate doc ids, not the shingle.
     */
   def prefixFilteredJaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = TextOps.shingles(docs).localCheckpoint() // see ngramJaccardPairs
+    val sh = Checkpoints.local(TextOps.shingles(docs)) // see ngramJaccardPairs
     val dfreq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pref = sh.join(dfreq, "shingle").join(sizes, "doc_id")
@@ -233,8 +233,7 @@ object Dedup {
     * candidate generation executes before any plan is returned; callers
     * that only want the physical plan (audits, explain tooling) pay that
     * execution, and a candidate-side failure surfaces at construction
-    * time. The count itself reads the already-checkpointed blocks, not
-    * the lineage.
+    * time. The count is observed in the checkpoint's own job.
     */
   def verifyCandidates(docs: DataFrame, candidates0: DataFrame,
       threshold: Double): DataFrame = {
@@ -246,15 +245,15 @@ object Dedup {
     // STREAMS through the semi-join instead of being exchanged (with its
     // text column — the fattest bytes in the pipeline, guide §2.3/§2.4)
     // to meet a pair-sized list. Past the gate: the former shuffle plan.
-    val candidates = candidates0.localCheckpoint()
-    val pairBytes = candidates.count() * 16L
+    val (candidates, nPairs) = Checkpoints.counted(candidates0)
+    val pairBytes = nPairs * 16L
     val bar = effectiveBroadcastBar(docs.sparkSession)
     def gated(d: DataFrame) = gatedBroadcast(d, pairBytes, bar)
     val ids = candidates.select(col("a").as("doc_id"))
       .union(candidates.select(col("b").as("doc_id"))).distinct()
-    val sh = TextOps.shingles(
-        docs.join(gated(ids), Seq("doc_id"), "left_semi"))
-      .localCheckpoint() // feeds sizes + both sides of the common-count join
+    // feeds sizes + both sides of the common-count join
+    val sh = Checkpoints.local(TextOps.shingles(
+        docs.join(gated(ids), Seq("doc_id"), "left_semi")))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val common = gated(candidates)
       .join(sh.as("sx"), col("a") === col("sx.doc_id"))
@@ -289,7 +288,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, threshold: Double,
       bands: Int = 16, rows: Int = 2): DataFrame = {
     val numPerm = bands * rows
-    val sh = TextOps.shingles(docs).localCheckpoint() // see ngramJaccardPairs
+    val sh = Checkpoints.local(TextOps.shingles(docs)) // see ngramJaccardPairs
 
     // One minhash column per permutation, in a single aggregation pass.
     val minhashes = sh.groupBy("doc_id").agg(
@@ -492,21 +491,20 @@ object Dedup {
     */
   private def simhashBandedCompleteFromFps(fps0: DataFrame, maxHamming: Int,
       chunks: Int, bruteSampleHexLt: Option[String] = None): DataFrame = {
-    val fps = fps0.localCheckpoint()
+    val fps = Checkpoints.local(fps0)
     // Both pair sets feed TWO consumers (the anti-join and their own
     // count aggregate); without materialization the banded chunk
     // self-join + DISTINCT and the quadratic brute join each run twice —
     // measured as half of x158's residual cost after the fingerprint
     // path went narrow. Pair sets are near-dup-sized (output-bounded),
     // so the checkpoint is small.
-    val banded = simhashBandedPairs(fps, maxHamming, chunks).localCheckpoint()
+    val banded = Checkpoints.local(simhashBandedPairs(fps, maxHamming, chunks))
     val bfps = bruteSampleHexLt.fold(fps)(bound => fps.filter(
       substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2) < bound))
-    val brute = bfps.as("x").join(bfps.as("y"),
+    val brute = Checkpoints.local(bfps.as("x").join(bfps.as("y"),
         col("x.doc_id") < col("y.doc_id") &&
           bit_count(col("x.fp").bitwiseXOR(col("y.fp"))) <= maxHamming)
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .localCheckpoint()
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")))
     val missing = brute.join(banded, Seq("a", "b"), "left_anti")
     banded.agg(count(lit(1)).as("n_banded"))
       .crossJoin(missing.agg(count(lit(1)).as("n_missing")))
@@ -731,14 +729,10 @@ object Dedup {
     // exact-verification pipeline executed TWICE inside the edge
     // checkpoint (measured ~1-2 s per caller at sf0.1). Already-
     // checkpointed inputs skip the extra hop.
-    val p = pairs.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => pairs
-      case _ => pairs.localCheckpoint()
-    }
-    val edges = p.select(col("a"), col("b"))
-      .union(p.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    if (!(p eq pairs)) graft.QueryDef.dropCheckpoint(p)
+    val p = Checkpoints.local(pairs)
+    val edges = Checkpoints.local(p.select(col("a"), col("b"))
+      .union(p.select(col("b").as("a"), col("a").as("b"))))
+    if (!(p eq pairs)) Checkpoints.release(p)
     // One aggregation carries both the new label (min over self +
     // neighborhood) and the previous label (min over the self rows only).
     // The changed-label count rides the SAME job as the checkpoint
@@ -749,9 +743,8 @@ object Dedup {
     val settled = (_: DataFrame, _: DataFrame, _: Int) =>
       obs.get("changed").asInstanceOf[Long] == 0L
     val (labels, rounds) = GraphLoops.fixpoint(
-        edges.select(col("a").as("node")).distinct()
-          .withColumn("lbl", col("node"))
-          .localCheckpoint(),
+        Checkpoints.local(edges.select(col("a").as("node")).distinct()
+          .withColumn("lbl", col("node"))),
         Int.MaxValue, Some(settled)) { (iterate, _) =>
       obs = org.apache.spark.sql.Observation()
       val labels = iterate.select("node", "lbl")
@@ -766,7 +759,7 @@ object Dedup {
           .otherwise(0L)), lit(0L)).as("changed")))
     }
     // The final iterate is the only store the returned (lazy) frame needs.
-    graft.QueryDef.dropCheckpoint(edges)
+    Checkpoints.release(edges)
     (labels.select(col("node").as("doc_id"), col("lbl").as("cluster_id")),
       rounds)
   }

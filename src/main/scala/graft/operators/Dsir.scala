@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -61,8 +61,7 @@ object Dsir {
     // Materialized (r16): five aggregate consumers (target/raw bucket
     // counts, both totals, per-doc weights) each re-ran the tokenize+md5
     // pipeline lazily. Thin (doc, bucket) rows.
-    val bt = TextOps.tokens(docs).select(col("doc_id"), bucket)
-      .localCheckpoint()
+    val bt = Checkpoints.local(TextOps.tokens(docs).select(col("doc_id"), bucket))
 
     // DENSE bucket spine (the x202 lesson): an empty bucket must exist
     // with count 0 or its smoothed λ silently vanishes from doc sums.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -231,7 +231,7 @@ object EntityResolution {
     // each arm re-ran the WHOLE blocking+levenshtein+distinct subtree,
     // which is why the pre-r16 plan scanned the customer parquet 39
     // times. The admitted set is match-band-sized — id-scale rows.
-    val admitted = entitiesAdmittedLazy(cust).localCheckpoint()
+    val admitted = Checkpoints.local(entitiesAdmittedLazy(cust))
 
     // Bipartite node encoding: clean key k -> 2k, dirty id -> 2*did+1.
     // Component minima are always clean nodes (a dirty record's own key
@@ -244,11 +244,10 @@ object EntityResolution {
     val cleanAgg = cl.filter(col("doc_id") % 2 === 0)
       .groupBy("cluster_id").agg(count(lit(1)).as("n_clean"))
     val dirtyBest = admitted.groupBy("did").agg(max(col("score")).as("bs"))
-    val dm = cl.filter(col("doc_id") % 2 === 1)
+    val dm = Checkpoints.local(cl.filter(col("doc_id") % 2 === 1)
       .select(col("cluster_id"), expr("(doc_id - 1) div 2").as("did"))
       .join(dirtyBest, "did")
-      .crossJoin(broadcast(off))
-      .localCheckpoint() // two consumers: dirtyAgg + survivor election
+      .crossJoin(broadcast(off))) // two consumers: dirtyAgg + survivor election
     val dirtyAgg = dm.groupBy("cluster_id").agg(
       count(lit(1)).as("n_dirty"),
       sum((col("did") >= col("off") && col("did") < col("off") * 2)

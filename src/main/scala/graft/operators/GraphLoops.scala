@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   *
   * [[fixpoint]] is the one loop every checkpointed iteration in the
   * library runs (x43/x172 components, the BFS, LPA and PageRank twins):
-  * every iterate localCheckpointed, an optional stopping probe over the
-  * two materialized iterates (no recompute), and the PRIOR iterate's
-  * blocks dropped (`QueryDef.dropCheckpoint`) the moment the probe has
-  * consumed them, so the live footprint is O(1) iterates no matter how
-  * many rounds run.
+  * every iterate checkpointed (`Checkpoints.local`), an optional stopping
+  * probe over the two materialized iterates (no recompute), and the PRIOR
+  * iterate's blocks released (`Checkpoints.release`) the moment the probe
+  * has consumed them, so the live footprint is O(1) iterates no matter
+  * how many rounds run; what the loop leaves, the caller's scope frees.
   *
   * x144 PageRank, x201 LPA and x226 BFS unroll a FIXED round count so
   * their trajectories are DuckDB-oracle-replayable; their convergence
@@ -45,9 +45,10 @@ object GraphLoops {
 
   /** Runs `step` from the materialized `init` (the caller checkpoints it;
     * the loop owns it from here) for at most `maxRounds` rounds. Each
-    * round local-checkpoints the step's iterate, asks `converged(prior,
-    * next, round)` on the two materialized iterates, then drops the
-    * prior iterate and the round's scratch. With no probe the loop runs
+    * round checkpoints the step's iterate, asks `converged(prior, next,
+    * round)` on the two materialized iterates, then releases the prior
+    * iterate and the round's scratch (never `next` itself, when a step
+    * hands back a frame that already is a checkpoint). With no probe the loop runs
     * exactly `maxRounds` rounds and one checkpoint job per round beyond
     * whatever the step itself runs. Returns the final (materialized)
     * iterate and the rounds run.
@@ -61,9 +62,9 @@ object GraphLoops {
     while (!done && rounds < maxRounds) {
       rounds += 1
       val round = step(cur, rounds)
-      val next = round.next.localCheckpoint()
+      val next = Checkpoints.local(round.next)
       done = converged.exists(_(cur, next, rounds))
-      (cur +: round.scratch).foreach(QueryDef.dropCheckpoint)
+      (cur +: round.scratch).filterNot(_ eq next).foreach(Checkpoints.release)
       cur = next
     }
     (cur, rounds)
@@ -87,7 +88,7 @@ object GraphLoops {
     val grewNothing = (_: DataFrame, reached: DataFrame, r: Int) =>
       reached.filter(col("dist") === r.toLong).isEmpty
     val (reached, rounds) = fixpoint(
-        source.select(col("node"), lit(0L).as("dist")).localCheckpoint(),
+        Checkpoints.local(source.select(col("node"), lit(0L).as("dist"))),
         maxRounds, Option.when(exhaust)(grewNothing)) { (reached, r) =>
       val frontier = reached.filter(col("dist") === (r - 1).toLong)
         .select(col("node").as("src"))
@@ -129,10 +130,9 @@ object GraphLoops {
   private[graft] def lpa(s: SparkSession, dir: String, maxRounds: Int,
       untilFixpoint: Boolean): (DataFrame, Int) = {
     val edges = CoPurchaseGraph.strong(s, dir)
-    val labels0 = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
-    val nodeBytes = labels0.count() * 16L
+    val (labels0, nNodes) = Checkpoints.counted(
+      edges.select(col("src").as("node")).distinct().withColumn("lbl", col("node")))
+    val nodeBytes = nNodes * 16L
     val bar = Dedup.effectiveBroadcastBar(s)
     def gated(d: DataFrame) = Dedup.gatedBroadcast(d, nodeBytes, bar)
     // Node sets of two iterates are identical by construction (every
@@ -143,10 +143,9 @@ object GraphLoops {
       .isEmpty
     val (labels, rounds) = fixpoint(labels0, maxRounds,
         Option.when(untilFixpoint)(unchanged)) { (labels, _) =>
-      val cnt = edges
+      val cnt = Checkpoints.local(edges
         .join(gated(labels.withColumnRenamed("node", "dst")), "dst")
-        .groupBy(col("src").as("node"), col("lbl")).agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .groupBy(col("src").as("node"), col("lbl")).agg(count(lit(1)).as("c")))
       val mx = cnt.groupBy("node").agg(max(col("c")).as("mc"))
       Iterate(cnt.join(gated(mx), "node").filter(col("c") === col("mc"))
         .groupBy("node").agg(min(col("lbl")).as("lbl")), cnt)
@@ -193,11 +192,10 @@ object GraphLoops {
   private[graft] def pagerankRound(s: SparkSession, dir: String)
       : (DataFrame, DataFrame => DataFrame) = {
     val edges = CoPurchaseGraph.directed(s, dir)
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    val nodes = edges.select(col("src").as("node")).distinct()
-      .localCheckpoint()
-    val nodeBytes = nodes.count() * 16L
+    val deg = Checkpoints.local(edges.groupBy("src").agg(count(lit(1)).as("outdeg")))
+    val (nodes, nNodes) =
+      Checkpoints.counted(edges.select(col("src").as("node")).distinct())
+    val nodeBytes = nNodes * 16L
     val bar = Dedup.effectiveBroadcastBar(s)
     def gated(d: DataFrame) = Dedup.gatedBroadcast(d, nodeBytes, bar)
     (nodes.withColumn("r", lit(1000000L)), r => {
@@ -233,7 +231,7 @@ object GraphLoops {
       .join(prev.withColumnRenamed("r", "pr"), "node")
       .agg(max(abs(col("r") - col("pr"))).as("d"))
       .collect()(0).getLong(0) <= tolScaled
-    val (r, rounds) = fixpoint(r0.localCheckpoint(), maxRounds,
+    val (r, rounds) = fixpoint(Checkpoints.local(r0), maxRounds,
       Option.when(tolScaled > 0L)(settled))((r, _) => Iterate(round(r)))
     (pagerankTop20(r), rounds)
   }

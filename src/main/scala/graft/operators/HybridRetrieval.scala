@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,17 +54,15 @@ object HybridRetrieval {
     // lazily each re-ran the tokenize pipeline (x217/x218 scanned the
     // documents parquet 9 times each pre-r16). All three are thin:
     // (doc, word) rows at most.
-    val toks = TextOps.tokens(docs).localCheckpoint()
+    val toks = Checkpoints.local(TextOps.tokens(docs))
     val tf = toks.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-      .localCheckpoint()
+    val dl = Checkpoints.local(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
     val stats = dl.agg(count(lit(1)).cast("double").as("nd"),
       sum(col("dl")).cast("double").as("tot"))
     val qterms = toks.filter(col("doc_id").isin(Probes: _*))
       .select(col("doc_id").as("pid"), col("w")).distinct()
-    val tfQ = tf.join(broadcast(qterms.select("w").distinct()), Seq("w"),
-      "left_semi")
-      .localCheckpoint()
+    val tfQ = Checkpoints.local(
+      tf.join(broadcast(qterms.select("w").distinct()), Seq("w"), "left_semi"))
     val dfreq = tfQ.groupBy("w").agg(count(lit(1)).cast("double").as("df"))
 
     val avgdl = col("tot") / col("nd")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,7 +39,7 @@ object IvfPq {
     // Materialized (r17): vecs feeds the coarse trainer (init + two
     // assignments), the probe set, and the exact side — the same
     // re-scan shape pqRecall had (r16 sweep residual). One narrow scan.
-    val vecs = KMeansLite.vectors(emb).localCheckpoint()
+    val vecs = Checkpoints.local(KMeansLite.vectors(emb))
 
     // Coarse quantizer: the x101 trajectory (init → assign → decimal
     // recompute → assign) on the full 64-d vectors.
@@ -47,10 +47,9 @@ object IvfPq {
 
     // Residuals — feed four subspace trainers plus the code join, so
     // materialize once (the orientByDegree lesson).
-    val res = ca2.join(broadcast(cc1), "cid")
+    val res = Checkpoints.local(ca2.join(broadcast(cc1), "cid")
       .select(col("vec_id"), col("cid"),
-        zip_with(col("v"), col("cv"), (a, b) => a - b).as("v"))
-      .localCheckpoint()
+        zip_with(col("v"), col("cv"), (a, b) => a - b).as("v")))
 
     val trained = (0 until PQ.m).map(s =>
       trainSubspace(res.select("vec_id", "v"), s))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,7 +62,7 @@ object KMeansLite {
     // the lazy TakeOrdered — a full corpus scan — used to execute twice
     // per consumer (and initCentroids has ~11 consumers across the
     // PQ/IVF-PQ subspace trainers alone). k rows, trivially checkpointed.
-    val top = vecs.orderBy("vec_id").limit(k).localCheckpoint()
+    val top = Checkpoints.local(vecs.orderBy("vec_id").limit(k))
     top.as("a").join(top.as("b"), col("b.vec_id") < col("a.vec_id"), "left")
       .groupBy(col("a.vec_id").as("vid"), col("a.v").as("cv"))
       .agg(count(col("b.vec_id")).cast("long").as("cid"))
@@ -110,7 +110,7 @@ object KMeansLite {
     * centroids (cid, cv).
     */
   private[operators] def lloyd2(vecs: DataFrame, k: Int): (DataFrame, DataFrame) = {
-    val c1 = recompute(assign(vecs, initCentroids(vecs, k))).localCheckpoint()
+    val c1 = Checkpoints.local(recompute(assign(vecs, initCentroids(vecs, k))))
     (assign(vecs, c1), c1)
   }
 
@@ -119,7 +119,7 @@ object KMeansLite {
     // Materialized (r17): vecs feeds the init TakeOrdered plus one
     // assignment pass per iteration — each re-ran the parquet scan +
     // elementwise cast. One narrow scan, checkpointed once.
-    val vecs = vectors(emb).localCheckpoint()
+    val vecs = Checkpoints.local(vectors(emb))
     var cents = initCentroids(vecs, k)
     var assigned = assign(vecs, cents)
     for (_ <- 1 until iters) {
@@ -196,8 +196,7 @@ object KMeansLite {
         graft.functions.GraftFunctions.register(s)
         // Materialized (r16): both sides of the in-cluster pair join
         // lazily re-ran the whole two-iteration k-means trajectory.
-        val assigned = kmeans(Tables.embeddings(s, dir), k = 4, iters = 2)
-          .localCheckpoint()
+        val assigned = Checkpoints.local(kmeans(Tables.embeddings(s, dir), k = 4, iters = 2))
         val a = assigned.select(col("cid"), col("vec_id").as("a"),
           col("v").as("va"))
         val b = assigned.select(col("cid"), col("vec_id").as("b"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,13 +41,12 @@ object KmvSketch {
     // Materialized (r16): `grams` feeds the global distinct AND the
     // per-source sketches — lazily both arms re-ran the tokenize+md5
     // pipeline from the parquet scan up. Thin (source, hash) rows.
-    val grams = TextOps.shingles(docs, 2)
+    val grams = Checkpoints.local(TextOps.shingles(docs, 2)
       .join(docs.select("doc_id", "source"), "doc_id")
       .select(col("source"),
         conv(substring(md5(col("shingle").cast("binary")), 1, 13), 16, 10)
-          .cast("long").as("h"))
-      .localCheckpoint()
-    val hashes = grams.select("h").distinct().localCheckpoint()
+          .cast("long").as("h")))
+    val hashes = Checkpoints.local(grams.select("h").distinct())
 
     // Per-source bottom-K (the shard sketches), then merge-of-sketches.
     val w = org.apache.spark.sql.expressions.Window

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,12 +52,11 @@ object LshTuning {
     // pair join consumed two independent tokenize→explode pipelines over
     // the same corpus; both now read one materialized shingle set (the
     // ngramJaccardPairsFromShingles entry exists for exactly this).
-    val sh = TextOps.shingles(docs).localCheckpoint()
-    val sigs = sh.groupBy("doc_id")
-      .agg(mhCol(0), (1 until P).map(mhCol): _*)
-      .localCheckpoint()
-    val truth = Dedup.ngramJaccardPairsFromShingles(sh, threshold)
-      .select("a", "b").localCheckpoint()
+    val sh = Checkpoints.local(TextOps.shingles(docs))
+    val sigs = Checkpoints.local(sh.groupBy("doc_id")
+      .agg(mhCol(0), (1 until P).map(mhCol): _*))
+    val truth = Checkpoints.local(Dedup.ngramJaccardPairsFromShingles(sh, threshold)
+      .select("a", "b"))
 
     val rows = configs.map { case (b, r) =>
       // Band rows: (band j, sig = m_{jr} .. m_{jr+r-1} glued). The sig is

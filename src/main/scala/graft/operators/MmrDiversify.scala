@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -43,11 +43,10 @@ object MmrDiversify {
       col("embedding").cast("array<double>").as("embedding"))
     val q = e.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"))
-    val rel = e.crossJoin(broadcast(q))
+    val rel = Checkpoints.local(e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"), col("embedding"),
-        simU(col("embedding"), col("qe")).as("rel_u"))
-      .localCheckpoint()
+        simU(col("embedding"), col("qe")).as("rel_u")))
 
     val lam = lambdaPermille
     var picks = Vector.empty[(Int, Long, Long)]
@@ -68,7 +67,7 @@ object MmrDiversify {
       val row = scored.orderBy(desc("score"), col("vec_id")).limit(1).head()
       picks :+= ((step, row.getLong(0), row.getLong(1)))
     }
-    graft.QueryDef.dropCheckpoint(rel)
+    Checkpoints.release(rel)
     import spark.implicits._
     picks.toDF("step", "vec_id", "score").orderBy("step")
   }

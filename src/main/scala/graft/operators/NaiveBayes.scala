@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -67,11 +67,9 @@ object NaiveBayes {
     // and each lazily re-ran the tokenize pipeline — the pre-r16 plan
     // scanned the documents parquet 19 times. Same for `cwc` (model
     // sizing probe + scoring join) and `scored` (argmin's two steps).
-    val ttr = TextOps.tokens(train)
-      .join(train.select(col("doc_id"), col("lang").as("c")), "doc_id")
-      .localCheckpoint()
-    val cwc = ttr.groupBy("c", "w").agg(count(lit(1)).as("cwc"))
-      .localCheckpoint()
+    val ttr = Checkpoints.local(TextOps.tokens(train)
+      .join(train.select(col("doc_id"), col("lang").as("c")), "doc_id"))
+    val cwc = Checkpoints.local(ttr.groupBy("c", "w").agg(count(lit(1)).as("cwc")))
     val nc = ttr.groupBy("c").agg(count(lit(1)).as("nc"))
     val vocab = ttr.agg(count_distinct(col("w")).as("v"))
     val dcnt = train.groupBy(col("lang").as("c")).agg(count(lit(1)).as("dc"))
@@ -101,7 +99,8 @@ object NaiveBayes {
     // model so unseen words take the add-one floor (cwc = 0).
     val tcnt = TextOps.tokens(test).groupBy("doc_id", "w")
       .agg(count(lit(1)).as("cnt"))
-    val scored = tcnt
+    // argmin consumes it twice (mn + the tie filter)
+    val scored = Checkpoints.local(tcnt
       .crossJoin(broadcast(classes))
       .join(gated(cwc), Seq("c", "w"), "left")
       .select(col("doc_id"), col("c"), col("prior_unat"),
@@ -109,8 +108,7 @@ object NaiveBayes {
           (coalesce(col("cwc"), lit(0L)) + 1).cast("double") /
             (col("nc").cast("double") + col("v"))))).as("s"))
       .groupBy("doc_id", "c")
-      .agg((sum(col("s")) + max(col("prior_unat"))).as("score"))
-      .localCheckpoint() // argmin consumes it twice (mn + the tie filter)
+      .agg((sum(col("s")) + max(col("prior_unat"))).as("score")))
 
     // Exact argmin with total tie-break (min class name among the tied) —
     // the two-step rendering, since single-pass min_by is

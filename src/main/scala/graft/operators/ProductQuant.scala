@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import KMeansLite.d2
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -60,8 +60,7 @@ object ProductQuant {
     // re-scanned the embeddings 35 times across its 4 subspaces). Both
     // frames are tiny: k rows of centroids, |corpus| id+code rows.
     val (a2, c1) = KMeansLite.lloyd2(vs, PQ.k)
-    (a2.select(col("vec_id"), col("cid").as(s"code_$s")).localCheckpoint(),
-      c1)
+    (Checkpoints.local(a2.select(col("vec_id"), col("cid").as(s"code_$s"))), c1)
   }
 
   /** x166: PQ-ADC recall certification. Trains the M codebooks, encodes
@@ -83,7 +82,7 @@ object ProductQuant {
     // two assignment passes each), the probe set, and the exact side —
     // lazily every one re-ran the parquet scan + double cast (the r16
     // sweep's residual "7 scans"). One narrow scan, checkpointed once.
-    val vecs = KMeansLite.vectors(emb).localCheckpoint()
+    val vecs = Checkpoints.local(KMeansLite.vectors(emb))
     val trained = (0 until PQ.m).map(s => trainSubspace(vecs, s))
     val codes = trained.map(_._1).reduce(_.join(_, "vec_id"))
 

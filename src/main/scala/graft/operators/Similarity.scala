@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.functions.GraftFunctions.inSet
 import graft.operators.VectorOps.{cos6, cos6Sql}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -799,10 +799,10 @@ object Similarity {
     graft.functions.GraftFunctions.register(spark)
     // One signature pass over the two language blocks, materialized — the
     // production rendering is a stored signature index (the x81 story).
-    val sigs = hyperplaneSigs(spark, emb, planes)
+    // 4 consumers: both banded sides + both vector sides
+    val sigs = Checkpoints.local(hyperplaneSigs(spark, emb, planes)
       .join(docs.filter(col("lang").isin("en", "fr"))
-        .select(col("doc_id").as("vec_id"), col("lang")), "vec_id")
-      .localCheckpoint() // 4 consumers: both banded sides + both vector sides
+        .select(col("doc_id").as("vec_id"), col("lang")), "vec_id"))
     def side(lang: String): DataFrame = sigs.filter(col("lang") === lang)
     // Byte-gate the two fr-side broadcasts on MEASURED bytes (one 1-row
     // aggregate over the already-checkpointed sigs): the banded probe
@@ -904,7 +904,7 @@ object Similarity {
     // Materialized (r17): vecs feeds the step count, the train sample,
     // the global assignment and the query row — each re-ran the parquet
     // scan + cast lazily. One narrow scan.
-    val vecs = KMeansLite.vectors(emb).localCheckpoint()
+    val vecs = Checkpoints.local(KMeansLite.vectors(emb))
 
     // step = ceil(n / maxTrain) as a 1-row subquery — the plan stays lazy.
     val stepDF = vecs.agg(greatest(lit(1L),
@@ -912,10 +912,9 @@ object Similarity {
     // Materialized (r17): the sample subtree appears once per init/assign
     // reference INSIDE the single trajectory plan executed at the cents
     // checkpoint — ≤maxTrain rows, checkpointed once.
-    val sample = vecs.crossJoin(broadcast(stepDF))
+    val sample = Checkpoints.local(vecs.crossJoin(broadcast(stepDF))
       .filter(pmod(col("vec_id"), col("step")) === 0)
-      .select("vec_id", "v")
-      .localCheckpoint()
+      .select("vec_id", "v"))
 
     var trained = KMeansLite.initCentroids(sample, nlist)
     for (_ <- 0 until iters)
@@ -925,9 +924,9 @@ object Similarity {
     // whole sampled-Lloyd trajectory re-evaluates once per consumer (the
     // r6 x23 regression: 0.62 s → 1.59 s); localCheckpoint materializes
     // the nlist-row table once (the x137/x144 multi-consumer fix).
-    val cents = trained.localCheckpoint()
+    val cents = Checkpoints.local(trained)
     // `trained`'s plan holds the sample and init-centroid checkpoints.
-    (vecs, cents, () => Seq(vecs, trained, cents).foreach(QueryDef.dropCheckpoint))
+    (vecs, cents, () => Seq(vecs, trained, cents).foreach(Checkpoints.release))
   }
 
   /** The `nprobe` cells whose centroid `cv` is nearest the query vector

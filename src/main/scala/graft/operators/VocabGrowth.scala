@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,7 @@ object VocabGrowth {
     // the per-doc totals — two tokenize pipelines lazily; and `cur`
     // (4 rows) below feeds both sides of its own growth self-join, which
     // doubled the WHOLE query subtree (14 parquet scans pre-r16).
-    val toks = TextOps.tokens(docs).localCheckpoint()
+    val toks = Checkpoints.local(TextOps.tokens(docs))
     // First occurrence (min doc_id) per word type and per bigram type —
     // one aggregate each; shingles() is per-doc-distinct which is exactly
     // what a min-over-docs needs.
@@ -62,8 +62,7 @@ object VocabGrowth {
       .filter(col("doc_id") < col("t"))
       .groupBy("p").agg(sum(col("n_bi")).as("n_occ"))
 
-    val cur = spine.select("p").join(occ, "p").join(vw, "p").join(vb, "p")
-      .localCheckpoint()
+    val cur = Checkpoints.local(spine.select("p").join(occ, "p").join(vw, "p").join(vb, "p"))
     val prev = cur.select(col("p").as("pp"), col("n_occ").as("po"),
       col("v_words").as("pw"), col("v_bigrams").as("pb"))
     cur.join(prev, col("p") === col("pp") + 1, "left")

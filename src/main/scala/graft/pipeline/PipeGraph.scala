@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.explode
 import org.apache.spark.storage.StorageLevel
@@ -366,9 +367,9 @@ final class PipeGraph private[pipeline] (nodes: Vector[PipeGraph.Node]) {
             frontier.get(in).foreach { df =>
               outs.zip(op(df)).foreach { case (p, o) =>
                 if (cyclePipes.contains(p)) {
-                  val chk = o.localCheckpoint(true)
+                  val chk = Checkpoints.local(o)
                   next(p) = next.get(p).map(_.union(chk)).getOrElse(chk)
-                } else state.write(p, rank, o.localCheckpoint(true))
+                } else state.write(p, rank, Checkpoints.local(o))
               }
             }
           case _ =>

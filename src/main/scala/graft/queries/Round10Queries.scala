@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QueryDef
+import graft.{Checkpoints, QueryDef}
 import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * per-neighbor removal counts, then updates degrees by a left join —
   * the incremental-peeling formulation. Edge data moves zero times per
   * round; checkpointed degree iterates are dropped as consumed
-  * (QueryDef.dropCheckpoint, the r9-advice idiom). The DuckDB oracle
+  * (Checkpoints.release, the r9-advice idiom). The DuckDB oracle
   * unrolls the SAME delta algorithm [[Rounds]] times (> max peel round,
   * so trailing rounds are provable no-ops), making every peel round
   * hash-certified.
@@ -70,16 +70,14 @@ object Round10Queries {
     */
   private[graft] def kcorePeelWithRounds(s: SparkSession, dir: String)
       : (DataFrame, Int) = {
-    val e0 = peelFixtureEdges(s, dir).localCheckpoint()
+    val e0 = Checkpoints.local(peelFixtureEdges(s, dir))
     // Both-direction adjacency, materialized ONCE: each round's removal
     // count used to scan the edge checkpoint TWICE (u-side + v-side
     // arms); one (x → neighbor y) table halves the per-round scan work
     // and collapses the two joins into one (r16, guide §2.4).
-    val adj = e0.select(col("u").as("y"), col("v").as("nb"))
-      .union(e0.select(col("v").as("y"), col("u").as("nb")))
-      .localCheckpoint()
-    var deg = adj.groupBy(col("y").as("x")).agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    val adj = Checkpoints.local(e0.select(col("u").as("y"), col("v").as("nb"))
+      .union(e0.select(col("v").as("y"), col("u").as("nb"))))
+    var deg = Checkpoints.local(adj.groupBy(col("y").as("x")).agg(count(lit(1)).as("d")))
     // Byte-gated broadcasts for the per-round small sides (r16, guide
     // §2.4/§3.1): every round joins the |E|-sized checkpointed adjacency
     // and the |V|-sized degree iterate against the DOOMED set and its
@@ -100,13 +98,11 @@ object Round10Queries {
     var converged = false
     while (!converged) {
       rounds += 1
-      val doomed = deg.filter(col("d") < K)
-        .select(col("x"), lit(rounds.toLong).as("peel_round"))
-        .localCheckpoint()
-      val nDoomed = doomed.count()
+      val (doomed, nDoomed) = Checkpoints.counted(deg.filter(col("d") < K)
+        .select(col("x"), lit(rounds.toLong).as("peel_round")))
       if (nDoomed == 0L) {
         converged = true
-        graft.QueryDef.dropCheckpoint(doomed)
+        Checkpoints.release(doomed)
       } else {
         removed ::= doomed
         val dx = Dedup.gatedBroadcast(doomed.select(col("x").as("dx")),
@@ -115,22 +111,21 @@ object Round10Queries {
         // adjacency against the (small) doomed set — edges never rewritten
         val delta = adj.join(dx, col("y") === col("dx"))
           .groupBy(col("nb").as("x")).agg(count(lit(1)).as("rm"))
-        val next = deg.join(dx, col("x") === col("dx"), "left_anti")
+        val next = Checkpoints.local(deg.join(dx, col("x") === col("dx"), "left_anti")
           .join(Dedup.gatedBroadcast(delta, nodeBytes, bar), Seq("x"), "left")
           .select(col("x"),
-            (col("d") - coalesce(col("rm"), lit(0L))).as("d"))
-          .localCheckpoint()
-        graft.QueryDef.dropCheckpoint(deg)
+            (col("d") - coalesce(col("rm"), lit(0L))).as("d")))
+        Checkpoints.release(deg)
         deg = next
       }
     }
-    graft.QueryDef.dropCheckpoint(adj)
+    Checkpoints.release(adj)
     // The convergence round was the edge list's last consumer: the output
-    // below reads only the checkpointed deg/doomed iterates, so drop the
-    // suite's largest checkpoint (the full edge list) NOW — otherwise its
-    // blocks pin executor memory for the rest of a Verify/library session
-    // (the x137 co-tenancy lesson; Bench's post-query sweep masks it).
-    graft.QueryDef.dropCheckpoint(e0)
+    // below reads only the checkpointed deg/doomed iterates, so release the
+    // suite's largest checkpoint (the full edge list) NOW rather than when
+    // the query's scope ends: its blocks would otherwise pin executor
+    // memory through the query's action (the x137 co-tenancy lesson).
+    Checkpoints.release(e0)
     val core = deg.select(col("x").as("node"), lit(0L).as("peel_round"))
     val out = removed.map(_.select(col("x").as("node"), col("peel_round")))
       .reduceOption(_.unionByName(_))
@@ -260,9 +255,9 @@ object Round10Queries {
     */
   private[graft] def cappedHamilton(ps0: DataFrame, nt0: DataFrame)
       : (DataFrame, Int) = {
-    val ps = ps0.localCheckpoint()
-    val nt = nt0.localCheckpoint()
-    var capped = ps.filter(lit(false)).localCheckpoint()
+    val ps = Checkpoints.local(ps0)
+    val nt = Checkpoints.local(nt0)
+    var capped = Checkpoints.local(ps.filter(lit(false)))
     var alloc: DataFrame = null
     var rounds = 0
     var converged = false
@@ -287,30 +282,28 @@ object Round10Queries {
           col("a.fl").as("fl"))
         .agg(count(col("b.source")).as("ahead"))
       val sumFl = base.agg(coalesce(sum("fl"), lit(0L)).as("sumfl"))
-      val q = ranked.crossJoin(broadcast(sumFl)).crossJoin(broadcast(rb))
+      val q = Checkpoints.local(ranked.crossJoin(broadcast(sumFl)).crossJoin(broadcast(rb))
         .select(col("source"), col("n_src"),
           (col("fl") + when(col("ahead") < col("rb") - col("sumfl"), 1L)
-            .otherwise(0L)).as("alloc"))
-        .localCheckpoint()
+            .otherwise(0L)).as("alloc")))
       val over = q.filter(col("alloc") > col("n_src"))
       if (over.isEmpty) {
         converged = true
         alloc = q.select(col("source"), col("alloc"))
           .unionByName(capped.select(col("source"), col("n_src").as("alloc")))
       } else {
-        val nextCapped = capped.unionByName(
+        val nextCapped = Checkpoints.local(capped.unionByName(
           over.join(ps.select(col("source"), col("w")), Seq("source"))
-            .select(col("source"), col("n_src"), col("w")))
-          .localCheckpoint()
-        graft.QueryDef.dropCheckpoint(capped)
-        graft.QueryDef.dropCheckpoint(q)
+            .select(col("source"), col("n_src"), col("w"))))
+        Checkpoints.release(capped)
+        Checkpoints.release(q)
         capped = nextCapped
       }
     }
     // ps/nt fed only the (now-checkpointed) final q/capped iterates — drop
     // them; the final iterates stay live as the alloc table's lineage.
-    graft.QueryDef.dropCheckpoint(ps)
-    graft.QueryDef.dropCheckpoint(nt)
+    Checkpoints.release(ps)
+    Checkpoints.release(nt)
     (alloc, rounds)
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.QueryDef
+import graft.{Checkpoints, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,10 +62,9 @@ object Round10bQueries {
     // Materialized (r16): `dv` feeds the MAD chain AND the output — each
     // reference re-ran the median rank-join from the parquet scan up
     // (13 scans in the pre-r16 plan). id+two-ints rows, corpus-count-sized.
-    val dv = docs.crossJoin(broadcast(m1))
+    val dv = Checkpoints.local(docs.crossJoin(broadcast(m1))
       .select(col("doc_id"), col("n_chars"),
-        abs(col("n_chars") - col("med")).as("dev"))
-      .localCheckpoint()
+        abs(col("n_chars") - col("med")).as("dev")))
     val m2 = lowerMedian(dv.select(col("dev").as("v")), "mad")
     dv.crossJoin(broadcast(m2))
       .select(col("doc_id"), col("n_chars"), col("dev"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,9 +129,8 @@ object Round11bQueries {
     // Materialized (r16): `cj` feeds two plan arms (m + canon) and its
     // lineage contains the qualityScore TOKEN PASS over the corpus —
     // lazily that pass ran twice per execution.
-    val cj = clusters.join(
-      TextAnalysis.qualityScore(docs).select("doc_id", "quality"), "doc_id")
-      .localCheckpoint()
+    val cj = Checkpoints.local(clusters.join(
+      TextAnalysis.qualityScore(docs).select("doc_id", "quality"), "doc_id"))
     val m = cj.groupBy("cluster_id")
       .agg(max(col("quality")).as("best_quality"),
         count(lit(1)).as("n_members"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,12 +42,11 @@ object Round12cQueries {
     */
   private def negativeSampling(s: SparkSession, dir: String): DataFrame = {
     val T = 500L
-    val counts = graft.operators.TextOps.tokens(Tables.documents(s, dir))
+    val counts = Checkpoints.local(graft.operators.TextOps.tokens(Tables.documents(s, dir))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .withColumn("weight",
         (round(sqrt(col("c").cast("double")), 6).cast(DecimalType(18, 6))
-          * 1000000).cast("long"))
-      .localCheckpoint() // consumed by cumsum, totals, and the final join
+          * 1000000).cast("long"))) // consumed by cumsum, totals, and the final join
     // Two-phase exclusive prefix sum over (w) order.
     val bucketed = counts.withColumn("bkt", substring(col("w"), 1, 1))
     val inB = bucketed.withColumn("cum_b",

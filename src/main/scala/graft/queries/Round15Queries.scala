@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,12 +37,11 @@ object Round15Queries {
   private def annotatorKappa(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val nClasses = emb.agg((max(col("label")) + 1).as("nc"))
-    val pairs = emb.crossJoin(broadcast(nClasses))
+    val pairs = Checkpoints.local(emb.crossJoin(broadcast(nClasses))
       .select(col("vec_id"),
         col("label").cast("long").as("a"),
         when(col("vec_id") % 9 === 4, (col("label") + 1) % col("nc"))
-          .otherwise(col("label")).cast("long").as("b"))
-      .localCheckpoint() // three aggregate consumers (r16)
+          .otherwise(col("label")).cast("long").as("b"))) // three aggregate consumers (r16)
     val agree = pairs.agg(
       count(lit(1)).as("n"),
       sum((col("a") === col("b")).cast("long")).as("agree"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.{Dedup, VectorOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -97,7 +97,7 @@ object Round15bQueries {
     */
   private def weakestLink(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val pairs = Dedup.minhashLshPairs(docs, 0.8).localCheckpoint()
+    val pairs = Checkpoints.local(Dedup.minhashLshPairs(docs, 0.8))
     val clusters = Dedup.dedupClusters(pairs)
     val members = clusters.groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"))
@@ -204,10 +204,9 @@ object Round15bQueries {
       .select(col("user_id").cast("string").as("k")).distinct()
     val hashed = hllRho(keys, "k")
     val spine = s.range(0, M).select(col("id").as("b"))
-    val regs = spine.join(hashed.groupBy("b").agg(max(col("rho")).as("m")),
-        Seq("b"), "left")
-      .select(col("b"), coalesce(col("m"), lit(0L)).as("m"))
-      .localCheckpoint()
+    val regs = Checkpoints.local(spine
+      .join(hashed.groupBy("b").agg(max(col("rho")).as("m")), Seq("b"), "left")
+      .select(col("b"), coalesce(col("m"), lit(0L)).as("m")))
 
     // Per-source registers, max-merged, vs the all-keys registers.
     val perSrc = Tables.events(s, dir)

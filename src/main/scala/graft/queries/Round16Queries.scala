@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.{TextAnalysis, TextOps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -51,9 +51,9 @@ object Round16Queries {
   }
 
   private def vocabCoverageSweep(s: SparkSession, dir: String): DataFrame = {
-    val vocab = TextOps.tokens(Tables.documents(s, dir))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // 3 consumers: both rank-join sides + the total
+    // 3 consumers: both rank-join sides + the total
+    val vocab = Checkpoints.local(TextOps.tokens(Tables.documents(s, dir))
+      .groupBy("w").agg(count(lit(1)).as("cnt")))
     val ranked = vocab.as("x").join(vocab.as("y"),
         col("y.cnt") > col("x.cnt") ||
           (col("y.cnt") === col("x.cnt") && col("y.w") < col("x.w")),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,7 +97,7 @@ object Round17Queries {
   private def histQuantiles(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("event_type"), vMicros(col("value")).as("v"))
-    val stats = eventStats(s, dir).localCheckpoint()
+    val stats = Checkpoints.local(eventStats(s, dir))
     val hist = ev.join(stats, "event_type")
       .select(col("event_type"),
         expr(s"v * $Buckets DIV (mx + 1)").as("b"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.{Similarity, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -77,9 +77,9 @@ object Round18Queries {
     */
   private def vocabCoverageTwoPhase(s: SparkSession, dir: String)
       : DataFrame = {
-    val vocab = TextOps.tokens(Tables.documents(s, dir))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // 3 consumers: bucket counts, rank join, total
+    // 3 consumers: bucket counts, rank join, total
+    val vocab = Checkpoints.local(TextOps.tokens(Tables.documents(s, dir))
+      .groupBy("w").agg(count(lit(1)).as("cnt")))
     Round16Queries.coverageSweepTail(s, vocab, twoPhaseRank(vocab))
   }
 
@@ -132,9 +132,8 @@ object Round18Queries {
         text: org.apache.spark.sql.Column) =
       h60(concat_ws("\u0001", id.cast("string"), text, col("lang"),
         col("source"), col("n_chars").cast("string")))
-    val old = docs.select(col("doc_id"), col("source"),
-      rowHash(col("doc_id"), col("text")).as("h"))
-      .localCheckpoint() // 2 consumers: manifest + diff join
+    val old = Checkpoints.local(docs.select(col("doc_id"), col("source"),
+      rowHash(col("doc_id"), col("text")).as("h"))) // 2 consumers: manifest + diff join
     val mx = docs.agg((max(col("doc_id")) + 1).as("m"))
     val kept = docs.filter(!(mv && col("doc_id") % 13 === 3))
       .select(col("doc_id"), col("source"),
@@ -147,7 +146,7 @@ object Round18Queries {
       .select((col("doc_id") + col("m")).as("doc_id"), col("source"),
         rowHash(col("doc_id") + col("m"), concat(lit("new "), col("text")))
           .as("h"))
-    val nw = kept.unionByName(added).localCheckpoint() // same 2 consumers
+    val nw = Checkpoints.local(kept.unionByName(added)) // same 2 consumers
 
     def manifest(df: DataFrame, sfx: String): DataFrame = df
       .groupBy("source")
@@ -155,13 +154,12 @@ object Round18Queries {
         expr("bit_xor(h)").as(s"fx_$sfx"),
         expr("CAST(sum(CAST(h AS DECIMAL(38,0))) % 9223372036854775808" +
           " AS BIGINT)").as(s"fs_$sfx"))
-    val m = manifest(old, "o")
+    val m = Checkpoints.local(manifest(old, "o")
       .join(manifest(nw, "n"), Seq("source"), "full_outer")
       .select(col("source"), col("n_o"),
         coalesce(col("n_o") === col("n_n") &&
           col("fx_o") === col("fx_n") && col("fs_o") === col("fs_n"),
-          lit(false)).as("same"))
-      .localCheckpoint() // tiny (|sources| rows), 2 consumers
+          lit(false)).as("same"))) // tiny (|sources| rows), 2 consumers
     val clean = m.filter(col("same"))
       .select(col("source"), lit(0L).as("added"), lit(0L).as("removed"),
         lit(0L).as("changed"), col("n_o").as("unchanged"))

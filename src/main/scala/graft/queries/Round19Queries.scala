@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,7 +59,7 @@ object Round19Queries {
     // Stage 1: filter audit. Checkpointed — consumed by the ledger AND
     // as the survivor keep-list (x156's plan is 4 token passes; recomputing
     // it per consumer would double the pipeline's dominant cost).
-    val fr = Round6bQueries.filterReport(s, dir).localCheckpoint()
+    val fr = Checkpoints.local(Round6bQueries.filterReport(s, dir))
     val kept1 = fr.filter(col("reason") === "keep").select("doc_id")
     // Byte-gated broadcast of the keep-list (r16, guide §2.3/§3.1): the
     // checkpointed audit carries no stats, so both consumers of `docs1`
@@ -78,9 +78,8 @@ object Round19Queries {
     // Materialized (r16): `cj` feeds two plan arms (m + canon) and its
     // lineage contains the qualityScore TOKEN PASS over the survivors —
     // lazily that pass ran twice per execution (the x200 fix, same shape).
-    val cj = clusters.join(
-      TextAnalysis.qualityScore(docs1).select("doc_id", "quality"), "doc_id")
-      .localCheckpoint()
+    val cj = Checkpoints.local(clusters.join(
+      TextAnalysis.qualityScore(docs1).select("doc_id", "quality"), "doc_id"))
     val m = cj.groupBy("cluster_id").agg(max(col("quality")).as("bq"))
     val canon = cj.join(m, "cluster_id")
       .filter(col("quality") === col("bq"))
@@ -88,15 +87,15 @@ object Round19Queries {
     val dropped2 = clusters.join(canon, "cluster_id")
       .filter(col("doc_id") =!= col("canonical"))
       .select("doc_id")
-    val s2 = kept1
+    // ledger + stage-3 input
+    val s2 = Checkpoints.local(kept1
       .join(dropped2.withColumn("dup", lit(true)), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        when(col("dup"), "near_dup").otherwise("keep").as("reason"))
-      .localCheckpoint() // ledger + stage-3 input
-    val docs2 = docs.join(
-      gatedKeep(s2.filter(col("reason") === "keep").select("doc_id")),
-      "doc_id") // kept2 ⊆ kept1, so the measured byte gate still bounds it
-      .localCheckpoint() // 3 consumers: ps, nt, selection
+        when(col("dup"), "near_dup").otherwise("keep").as("reason")))
+    // kept2 ⊆ kept1, so the measured byte gate still bounds it; 3
+    // consumers: ps, nt, selection
+    val docs2 = Checkpoints.local(docs.join(
+      gatedKeep(s2.filter(col("reason") === "keep").select("doc_id")), "doc_id"))
 
     // Stage 3: capacity-capped Hamilton apportionment (x187's recipe
     // weights — the planted src0 over-weight keeps the capacity cascade
@@ -114,11 +113,11 @@ object Round19Queries {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= col("alloc"))
       .select("doc_id", "source", "text")
-    val s3 = docs2.select("doc_id")
+    // ledger + stage-4 input via sel
+    val s3 = Checkpoints.local(docs2.select("doc_id")
       .join(sel.select(col("doc_id"), lit(true).as("in_sel")), Seq("doc_id"), "left")
       .select(col("doc_id"),
-        when(col("in_sel"), "keep").otherwise("over_budget").as("reason"))
-      .localCheckpoint() // ledger + stage-4 input via sel
+        when(col("in_sel"), "keep").otherwise("over_budget").as("reason")))
 
     // Stage 4: sequence packing over the selection; the ledger derives
     // the sequence count from the packed frame itself.

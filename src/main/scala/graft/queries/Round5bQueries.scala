@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.TextOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,10 +98,9 @@ object Round5bQueries {
         val docs = Tables.documents(s, dir)
         // Materialized (r16): `ssh` feeds sizes + BOTH self-join sides —
         // three tokenize pipelines lazily (8 scans in one plan).
-        val ssh = TextOps.shingles(docs)
+        val ssh = Checkpoints.local(TextOps.shingles(docs)
           .join(docs.select("doc_id", "source"), "doc_id")
-          .select("source", "shingle").distinct()
-          .localCheckpoint()
+          .select("source", "shingle").distinct())
         val sizes = ssh.groupBy("source")
           .agg(count(lit(1)).as("sz"))
         val inter = ssh.withColumnRenamed("source", "src_a")

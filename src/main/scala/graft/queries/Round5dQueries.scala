@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.QueryDef.{dsum, dsumSql}
 import graft.operators.TextOps
 import org.apache.spark.sql.Column
@@ -139,9 +139,8 @@ object Round5dQueries {
         // this is the difference between |incidence| and |incidence|×
         // avg-bucket-size shuffle bytes. localCheckpoint: bridge feeds 3
         // passes.
-        val bridge = Tables.lineitem(s, dir)
-          .select(col("l_partkey"), col("l_suppkey")).distinct()
-          .localCheckpoint()
+        val bridge = Checkpoints.local(Tables.lineitem(s, dir)
+          .select(col("l_partkey"), col("l_suppkey")).distinct())
         val cnt = bridge.groupBy("l_partkey").agg(count(lit(1)).as("c"))
         val s1 = bridge.join(cnt, "l_partkey")
           .groupBy(col("l_suppkey"))

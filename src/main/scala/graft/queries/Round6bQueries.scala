@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.{LineOps, TextAnalysis, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -35,8 +35,8 @@ object Round6bQueries {
         // Materialized (r16): step i feeds step i+1's gate AND its own
         // count AND (step 1) the base — lazily the funnel re-ran the
         // whole prefix per consumer (7 event scans in one plan).
-        Some(gated.groupBy("user_id").agg(min("ts").as(s"t${i + 1}"))
-          .localCheckpoint())
+        Some(Checkpoints.local(
+          gated.groupBy("user_id").agg(min("ts").as(s"t${i + 1}"))))
     }.flatten
     val counts = reached.zipWithIndex.map { case (df, i) =>
       df.agg(count(lit(1)).as("users"))
@@ -326,8 +326,8 @@ object Round6bQueries {
       .select(greatest(lit(1L), expr("n div 256")).as("s"))
     val h = conv(substring(md5(col("user_id").cast("string").cast("binary")),
       1, 8), 16, 10).cast("long")
-    val samp = longDf.crossJoin(broadcast(sMod)).filter(h % col("s") === 0)
-      .localCheckpoint() // ~256-user sample; two aggregate consumers
+    // ~256-user sample; two aggregate consumers
+    val samp = Checkpoints.local(longDf.crossJoin(broadcast(sMod)).filter(h % col("s") === 0))
     val ns = samp.groupBy("dim").agg(count(lit(1)).as("ns"))
     val hist = samp.groupBy("dim", "v").agg(count(lit(1)).as("c"))
     val cum = hist.as("a").join(hist.as("b"),
@@ -346,7 +346,7 @@ object Round6bQueries {
     // derivation (itself 3 consumers) AND the quintile assignment —
     // lazily the per-user events aggregate re-ran per consumer (7 scans
     // / 17 exchanges in one plan). user_id×3 thin rows.
-    val longDf = rfmMetricsLong(s, dir).localCheckpoint()
+    val longDf = Checkpoints.local(rfmMetricsLong(s, dir))
     val cuts = rfmCutpoints(s, longDf)
     // Map-side quintile assignment: r ascending (1 = most recent),
     // f/m descending (1 = highest) — same orientation as the old ntile.
@@ -421,7 +421,7 @@ object Round6bQueries {
     // x144 lesson; measured on the r9 skew pair, where it inverted the
     // x162-vs-x163 adjudication by overcharging exactly the degree
     // variant this operator exists to make cheap).
-    val und = und0.localCheckpoint()
+    val und = Checkpoints.local(und0)
     // deg is |V| rows: materialize it once (its two join arms would each
     // re-run the aggregate — checkpointed inputs carry no stats, so
     // Catalyst can neither share nor size the subtree) and byte-gate a
@@ -431,12 +431,11 @@ object Round6bQueries {
     // the edge list itself is broadcastable the degree table certainly
     // is). Past the bar the joins fall back to the shuffle plan — the
     // 100 TB behavior is unchanged.
-    val deg = und.select(col("u").as("x"))
+    val (deg, nDeg) = Checkpoints.counted(und.select(col("u").as("x"))
       .unionAll(und.select(col("v").as("x")))
-      .groupBy("x").agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+      .groupBy("x").agg(count(lit(1)).as("d")))
     val s = und.sparkSession
-    val degBytes = deg.count() * 16L
+    val degBytes = nDeg * 16L
     val bar = graft.operators.Dedup.effectiveBroadcastBar(s)
     def degSide(k: String, d: String) = {
       val side = deg.select(col("x").as(k), col("d").as(d))
@@ -449,11 +448,11 @@ object Round6bQueries {
       .select(when(uFirst, col("u")).otherwise(col("v")).as("lo"),
         when(uFirst, col("v")).otherwise(col("u")).as("hi"))
       .select(col("lo").as("u"), col("hi").as("v"))
-    // The caller checkpoints the oriented output (wedgeTriangles) — deg's
-    // blocks die with the per-query sweep either way, but drop them as
-    // soon as the orientation is materialized in library use too.
-    val out = oriented.localCheckpoint()
-    Seq(und, deg).foreach(graft.QueryDef.dropCheckpoint)
+    // The orientation is materialized here (wedgeTriangles reads it as
+    // is), so und and deg have no consumer left: release them now rather
+    // than when the query's scope ends.
+    val out = Checkpoints.local(oriented)
+    Seq(und, deg).foreach(Checkpoints.release)
     out
   }
 
@@ -509,12 +508,9 @@ object Round6bQueries {
   private def wedgeTriangles(s: org.apache.spark.sql.SparkSession,
       oriented: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // orientByDegree already returns a checkpointed frame — don't pay a
-    // second materialization pass re-checkpointing those blocks.
-    val e = oriented.queryExecution.logical match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => oriented
-      case _ => oriented.localCheckpoint()
-    }
+    // orientByDegree already returns a checkpointed frame, which
+    // Checkpoints.local hands back without a second materialization pass.
+    val e = Checkpoints.local(oriented)
     val st = e.agg(count(lit(1)), min(col("u")), max(col("u")),
       min(col("v")), max(col("v"))).head()
     val edgeBytes = st.getLong(0) * 16L
@@ -652,9 +648,8 @@ object Round6bQueries {
     // Materialized (r16): three aggregate consumers (corpus vocab,
     // per-source totals, per-source counts) each re-ran the tokenize
     // pipeline lazily.
-    val toks = Tables.documents(s, dir).select(col("source"),
-      explode(TextOps.tokenArray(col("text"))).as("w"))
-      .localCheckpoint()
+    val toks = Checkpoints.local(Tables.documents(s, dir).select(col("source"),
+      explode(TextOps.tokenArray(col("text"))).as("w")))
     val corpus = toks.groupBy("w").agg(count(lit(1)).as("c"))
     val total = corpus.agg(sum(col("c")).as("n"))
     val vocab = corpus.crossJoin(broadcast(total))

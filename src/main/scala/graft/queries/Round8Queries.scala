@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,8 +61,7 @@ object Round8Queries {
     // aggregate consume this, and without the checkpoint each branch
     // re-scans and re-tokenizes the corpus — the dominant cost at scale.
     // The checkpointed projection is 4 narrow columns, not the text.
-    val bucketed = toks.withColumn("bucket", substring(col("k"), 1, 2))
-      .localCheckpoint()
+    val bucketed = Checkpoints.local(toks.withColumn("bucket", substring(col("k"), 1, 2)))
     val w = Window.partitionBy("bucket").orderBy("k", "doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
     val inBucket = bucketed.withColumn("cum_b",

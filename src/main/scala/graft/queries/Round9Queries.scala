@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.operators.TextOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -211,8 +211,8 @@ object Round9Queries {
     QueryDef(
       "x179_shingle_containment",
       (s, dir) => {
-        val sh = TextOps.shingles(Tables.documents(s, dir))
-          .localCheckpoint() // one shingle pass feeds sizes AND the index
+        // one shingle pass feeds sizes AND the index
+        val sh = Checkpoints.local(TextOps.shingles(Tables.documents(s, dir)))
         val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val inter = sh.as("x").join(sh.as("y"),
             col("x.shingle") === col("y.shingle") &&

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,8 +50,8 @@ object Round9cQueries {
         .as("k1"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("k2"))
-    val bucketed = pts.withColumn("bucket", expr("cents DIV 2048"))
-      .localCheckpoint() // feeds both the window and the totals aggregate
+    // feeds both the window and the totals aggregate
+    val bucketed = Checkpoints.local(pts.withColumn("bucket", expr("cents DIV 2048")))
     val w = Window.partitionBy("bucket").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, 0)
     val inBucket = bucketed

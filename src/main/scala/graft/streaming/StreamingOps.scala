@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{QueryDef, Tables}
+import graft.{Checkpoints, QueryDef, Tables}
 import graft.QueryDef.dsumSql
 import graft.operators.Staging
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -464,8 +464,8 @@ object StreamingOps {
       // (per-day totals, global mix, spine) — checkpointing both bounds
       // the work AND gives each branch fresh attribute ids (the memory
       // sink's View otherwise makes the self-joins ambiguous).
-      val counts = sink.groupBy("day", "event_type")
-        .agg(max(col("n")).as("n")).localCheckpoint()
+      val counts = Checkpoints.local(sink.groupBy("day", "event_type")
+        .agg(max(col("n")).as("n")))
       val glob = counts.groupBy("event_type").agg(sum(col("n")).as("g"))
       val gtot = glob.agg(sum(col("g")).as("gt"))
       val dayTot = counts.groupBy("day").agg(sum(col("n")).as("nd"))
@@ -557,11 +557,10 @@ object StreamingOps {
             .select(col("user_id").cast("string").as("k")), "k")
         .groupBy("b").agg(max(col("rho")).as("m")), sinkName, OutputMode.Update())
       val spine = spark.range(0, M).select(col("id").as("b"))
-      val regs = spine.join(
+      val regs = Checkpoints.local(spine.join(
           sink.groupBy("b").agg(max(col("m")).as("m")),
           Seq("b"), "left")
-        .select(col("b"), coalesce(col("m"), lit(0L)).as("m"))
-        .localCheckpoint()
+        .select(col("b"), coalesce(col("m"), lit(0L)).as("m")))
       val keys = graft.Tables.events(spark, dir)
         .select(col("user_id").cast("string").as("k")).distinct()
       val batchRegs = spine.join(
@@ -703,28 +702,27 @@ object StreamingOps {
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           batches.incrementAndGet()
-          val newDocs = batch.select("doc_id", "text").localCheckpoint()
-          arrivals.addAndGet(newDocs.count())
+          val (newDocs, nNew) = Checkpoints.counted(batch.select("doc_id", "text"))
+          arrivals.addAndGet(nNew)
           val fpPrev = deltas("fp", fpDdl, batchId)
           val sigPrev = deltas("sig", sigDdl, batchId)
           // Winners incl. this batch = min doc_id per fp over kept-fp
           // deltas ∪ this batch's fingerprints.
-          val winners = fpPrev
+          val winners = Checkpoints.local(fpPrev
             .unionByName(newDocs.select(md5(col("text")).as("fp"),
               col("doc_id")))
-            .groupBy("fp").agg(min("doc_id").as("doc_id"))
-            .localCheckpoint()
+            .groupBy("fp").agg(min("doc_id").as("doc_id")))
           val winnerIds = winners.select("doc_id")
-          val keptNew = newDocs.join(winnerIds, Seq("doc_id"), "left_semi")
-            .localCheckpoint()
-          keptTotal.addAndGet(keptNew.count())
+          val (keptNew, nKept) =
+            Checkpoints.counted(newDocs.join(winnerIds, Seq("doc_id"), "left_semi"))
+          keptTotal.addAndGet(nKept)
           // This batch's surviving docs land in the corpus store FIRST:
           // verification below point-reads candidate text from it.
           keptNew.write.mode("overwrite").parquet(s"$docsDir/b$batchId")
           // New-side-only candidate join: new sigs × (alive old ∪ new).
           // "Alive" = semi-join current winners (revocation is permanent,
           // so beaten docs drop out of the index without an explicit log).
-          val sigsNew = Dedup.bandSignatures(keptNew).localCheckpoint()
+          val sigsNew = Checkpoints.local(Dedup.bandSignatures(keptNew))
           val sigAlive = sigPrev.join(winnerIds, Seq("doc_id"), "left_semi")
             .unionByName(sigsNew)
           val cand = sigsNew.as("x").join(sigAlive.as("y"),
@@ -743,8 +741,7 @@ object StreamingOps {
             .write.mode("overwrite").parquet(s"$d/fp")
           sigsNew.write.mode("overwrite").parquet(s"$d/sig")
           edgesNew.write.mode("overwrite").parquet(s"$d/edge")
-          Seq(newDocs, winners, keptNew, sigsNew)
-            .foreach(graft.QueryDef.dropCheckpoint)
+          Seq(newDocs, winners, keptNew, sigsNew).foreach(Checkpoints.release)
           ()
         }
         .start()
@@ -752,18 +749,16 @@ object StreamingOps {
       val nb = batches.get()
       require(nb > 0, "no microbatch ran")
       // Drain: reconstruct final state from the deltas, then COMPACT.
-      val winners = deltas("fp", fpDdl, -1L)
-        .groupBy("fp").agg(min("doc_id").as("doc_id"))
-        .localCheckpoint()
+      val winners = Checkpoints.local(deltas("fp", fpDdl, -1L)
+        .groupBy("fp").agg(min("doc_id").as("doc_id")))
       val winnerIds = winners.select("doc_id")
       val edgesAlive = deltas("edge", edgeDdl, -1L)
         .join(winnerIds.select(col("doc_id").as("a")), Seq("a"), "left_semi")
         .join(winnerIds.select(col("doc_id").as("b")), Seq("b"), "left_semi")
       val losers = Dedup.dedupClusters(edgesAlive)
         .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-      val survivors = winnerIds
-        .join(losers, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+      val survivors = Checkpoints.local(winnerIds
+        .join(losers, Seq("doc_id"), "left_anti"))
       // Compaction: one generation holding exactly the live state — the
       // corpus text store shrinks to the current winners (docs beaten
       // after arrival leave with their revocation), spec-asserted
@@ -779,7 +774,7 @@ object StreamingOps {
         .write.mode("overwrite").parquet(s"$compactDir/docs")
       val nWinners = winners.count()
       val nCompactDocs = spark.read.parquet(s"$compactDir/docs").count()
-      graft.QueryDef.dropCheckpoint(winners)
+      Checkpoints.release(winners)
       // The run's scratch space (staged deltas + compacted generation) is
       // deleted once the survivor set is materialized — Bench runs this
       // query 3+ times per round and a ~corpus-sized temp dir per run
@@ -803,7 +798,7 @@ object StreamingOps {
       sinkName: String): DataFrame =
     withStreamPartitions(spark) {
       import graft.queries.Round17Queries
-      val stats = Round17Queries.eventStats(spark, dir).localCheckpoint()
+      val stats = Checkpoints.local(Round17Queries.eventStats(spark, dir))
       val cells = stagedEventsStream(spark, dir)
         .select(col("event_type"),
           Round17Queries.vMicros(col("value")).as("v"))
@@ -814,10 +809,9 @@ object StreamingOps {
       // localCheckpoint: quantileReport self-joins the hist (the cum
       // prefix), and the memory sink's View hands both sides identical
       // attribute ids (the x212 gotcha) — checkpointing mints fresh ones.
-      val hist = memoryDrain(cells, sinkName, OutputMode.Update())
+      val hist = Checkpoints.local(memoryDrain(cells, sinkName, OutputMode.Update())
         .groupBy("event_type", "b")
-        .agg(max(col("cnt")).as("cnt"))
-        .localCheckpoint()
+        .agg(max(col("cnt")).as("cnt")))
       Round17Queries.quantileReport(hist, stats,
         Round17Queries.exactQuantiles(spark, dir))
     }
@@ -849,7 +843,7 @@ object StreamingOps {
     withStreamPartitions(spark) {
       val byCust = Window.partitionBy("o_custkey")
         .orderBy(col("od"), col("o_orderkey"))
-      val dim = graft.Tables.orders(spark, dir)
+      val dim = Checkpoints.local(graft.Tables.orders(spark, dir)
         .select(col("o_custkey"),
           graft.functions.TimeCols.ntzEpochMicros("o_orderdate").as("od"),
           col("o_orderkey"), col("o_orderpriority"))
@@ -858,8 +852,7 @@ object StreamingOps {
           col("prev") =!= col("o_orderpriority"))
         .withColumn("valid_to", lead(col("od"), 1).over(byCust))
         .select(col("o_custkey").as("du"), col("o_orderpriority").as("prio"),
-          col("od").as("valid_from"), col("valid_to"))
-        .localCheckpoint()
+          col("od").as("valid_from"), col("valid_to")))
       memoryDrain(stagedEventsStream(spark, dir, byTime = true)
         .select(col("event_type"), col("user_id"),
           (lit(788918400000000L) +
@@ -1585,9 +1578,8 @@ object StreamingOps {
           org.apache.spark.sql.types.StructField("lines",
             org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType))))
         // Eager: the returned frame must survive the sink's deletion below.
-        graft.operators.LineOps.boilerplateRemovalFromLined(
-          spark.read.schema(linedSchema).parquet(sink.toString))
-          .localCheckpoint(true)
+        Checkpoints.local(graft.operators.LineOps.boilerplateRemovalFromLined(
+          spark.read.schema(linedSchema).parquet(sink.toString)))
       } finally Staging.deleteTree(sink)
     }
 

@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * enclosing def. The bar itself derives from Spark's own
   * `spark.sql.autoBroadcastJoinThreshold`: the library has no conf keys
   * of its own, and a second test fails on any code line that reads or
-  * writes a `graft.`-prefixed key. Comment lines are not code and are
+  * writes a `graft.`-prefixed key. A third fails on any checkpoint made
+  * or freed outside `Checkpoints`. Comment lines are not code and are
   * skipped.
   */
 class IterationLintSpec extends AnyFunSuite {
@@ -97,6 +98,18 @@ class IterationLintSpec extends AnyFunSuite {
     if (hits.nonEmpty)
       fail(s"\n${hits.size} graft conf key lines (derive the value from " +
         "Spark's own settings instead):" + listing(hits))
+  }
+
+  test("every checkpoint is made and freed through Checkpoints") {
+    // A raw checkpoint, a plan walk for its RDD, or a context-wide sweep
+    // each decide on their own when blocks are freed; Checkpoints holds
+    // that decision once, scoped to the query that made them.
+    val raw = """localCheckpoint\(|getPersistentRDDs|LogicalRDD""".r
+    val hits = codeLines.filter { case (file, _, _, line) =>
+      file != "graft/Checkpoints.scala" && raw.findFirstIn(line).nonEmpty }
+    if (hits.nonEmpty)
+      fail(s"\n${hits.size} lines checkpoint or free blocks outside " +
+        "Checkpoints (call Checkpoints.local/counted/release/scope):" + listing(hits))
   }
 
   private def listing(hits: Seq[(String, Int, String, String)]): String =

@@ -26,22 +26,32 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType}
   * streaming twins drain and localCheckpoint()ed intermediates
   * materialize eagerly — this spec is effectively a full sf0.001
   * construction sweep, which is also what makes it a smoke gate: any
-  * query whose CONSTRUCTION throws fails here by name.
+  * query whose CONSTRUCTION throws fails here by name. It is also the
+  * leak gate: after each construction's checkpoint scope closes, no RDD
+  * may stay persisted that was not persisted before it (the shared
+  * co-purchase table is derived before the first query).
   */
 class OutputSchemaLintSpec extends SparkSuite {
 
   test("every query output schema is driver-gate-safe (no decimals, no nested types)") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // The one table meant to outlive a query: derived up front, so it is
+    // in every query's `before` set.
+    graft.operators.CoPurchaseGraph.pairWeights(spark, sfDir)
+    val leaks = Seq.newBuilder[String]
     val offenders = SparkEntry.defs.flatMap { d =>
+      // Each construction runs in its own checkpoint scope (the Bench.run
+      // discipline), so 275 constructions leave nothing behind in the
+      // shared test JVM.
+      val before = persisted
       val fields =
-        try d.spark(spark, sfDir).schema.fields.toSeq
+        try Checkpoints.scope(d.spark(spark, sfDir).schema.fields.toSeq)
         catch {
           case e: Throwable =>
             fail(s"${d.name}: query construction threw: ${e.getMessage}")
         }
-      // Sweep per-query checkpoint leftovers (the Bench.run discipline) so
-      // 260+ constructions don't squeeze the shared test JVM; the shared
-      // co-purchase graph is exempt — it exists to be reused.
-      graft.operators.CoPurchaseGraph.sweepLeftovers(spark)
+      val left = persisted -- before
+      if (left.nonEmpty) leaks += s"${d.name}: RDDs ${left.toSeq.sorted.mkString(", ")}"
       fields.flatMap { f =>
         f.dataType match {
           case dt: DecimalType =>
@@ -57,5 +67,9 @@ class OutputSchemaLintSpec extends SparkSuite {
     assert(offenders.isEmpty,
       s"\n${offenders.size} driver-gate-unsafe output column(s):\n  " +
         offenders.mkString("\n  "))
+    val leaked = leaks.result()
+    assert(leaked.isEmpty,
+      s"\n${leaked.size} queries left persisted RDDs behind:\n  " +
+        leaked.mkString("\n  "))
   }
 }

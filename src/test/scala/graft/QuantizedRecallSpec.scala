@@ -27,7 +27,7 @@ class QuantizedRecallSpec extends SparkSuite {
       assert(exact.length == 10)
       got != exact
     }
-    QueryDef.dropCheckpoint(emb)
+    Checkpoints.release(emb)
     assert(misses.isEmpty, s"int8 top-10 differs from exact for queries $misses")
   }
 }
