@@ -76,11 +76,33 @@ object Dedup {
           .filter(col("df") > cap).select("shingle")
         shAll.join(broadcast(hot), Seq("shingle"), "left_anti")
     }
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = sh.as("x").join(sh.as("y"),
+    jaccardPairs(sh.as("x").join(sh.as("y"),
         col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .agg(count(lit(1)).as("c"))
+      .agg(count(lit(1)).as("c")), sh, threshold)
+  }
+
+  /** Exact Jaccard of candidate pairs `(a, b)` over a `(doc_id, shingle)`
+    * frame: each candidate joins both docs' shingles on the shingle to
+    * count the common ones, then [[jaccardPairs]] divides. The candidate
+    * verify of the LSH, PPJoin and incremental paths.
+    */
+  private def verifiedPairs(candidates: DataFrame, sh: DataFrame,
+      threshold: Double): DataFrame =
+    jaccardPairs(candidates
+      .join(sh.as("sx"), col("a") === col("sx.doc_id"))
+      .join(sh.as("sy"),
+        col("b") === col("sy.doc_id") && col("sx.shingle") === col("sy.shingle"))
+      .groupBy("a", "b").agg(count(lit(1)).as("c")), sh, threshold)
+
+  /** The Jaccard tail of every exact pair path: common counts `(a, b, c)`
+    * over the doc sizes of the SAME `(doc_id, shingle)` frame they were
+    * counted on, J = c / (|A| + |B| - c) rounded to 6 places, kept at or
+    * above `threshold`.
+    */
+  private def jaccardPairs(common: DataFrame, sh: DataFrame,
+      threshold: Double): DataFrame = {
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     common
       .join(sizes.as("sa"), col("a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("b") === col("sb.doc_id"))
@@ -137,17 +159,7 @@ object Dedup {
             lit(threshold) * greatest(col("px.n"), col("py.n")) - lit(1e-9))
       .select(col("px.doc_id").as("a"), col("py.doc_id").as("b"))
       .distinct()
-    val common = cand
-      .join(sh.as("x"), col("a") === col("x.doc_id"))
-      .join(sh.as("y"),
-        col("b") === col("y.doc_id") && col("x.shingle") === col("y.shingle"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("b") === col("sb.doc_id"))
-      .select(col("a"), col("b"),
-        round(col("c") / (col("sa.n") + col("sb.n") - col("c")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifiedPairs(cand, sh, threshold)
   }
 
   /** Oracle-side rendering of [[ngramJaccardPairs]]. */
@@ -187,20 +199,6 @@ object Dedup {
        |  GROUP BY 1, 2) p
        |WHERE jaccard >= $threshold ORDER BY a, b""".stripMargin
 
-  /** MinHash signatures + banded LSH candidates + exact verification.
-    *
-    * numPerm minhashes from xxhash64(permIndex, shingle); bands of `rows`
-    * hashes each; docs sharing any band signature become candidate pairs;
-    * candidates are then verified with the exact Jaccard (computed only on
-    * candidate docs' shingles). With 16 bands × 2 rows, a pair at the 0.8
-    * threshold is missed with prob (1-0.8²)^16 ≈ 3e-7 — and the planted
-    * near-dups in this data sit at J≈0.98 (miss prob ~1e-26), so the output
-    * equals the exact x02 result and shares its oracle.
-    *
-    * At 100 TB this is THE scalable near-dup path: signature computation is
-    * a single groupBy(doc) pass; the candidate join shuffles on (band, sig)
-    * — tiny keys, uniformly distributed by construction.
-    */
   /** The LSH INDEX rows for a doc set: (doc_id, band, sig) — `bands`
     * band signatures per doc, each an xxhash64 of its `rows` minhashes.
     * This is the id-sized state an incremental pipeline persists between
@@ -208,9 +206,16 @@ object Dedup {
     * against the stored index, and the old corpus text is never
     * re-shingled.
     */
-  def bandSignatures(docs: DataFrame, bands: Int = 16, rows: Int = 2): DataFrame = {
+  def bandSignatures(docs: DataFrame, bands: Int = 16, rows: Int = 2): DataFrame =
+    signaturesOf(TextOps.shingles(docs), bands, rows)
+
+  /** Band signatures of a `(doc_id, shingle)` frame: one minhash column
+    * per permutation (xxhash64(permIndex, shingle)) in a single
+    * aggregation pass, then each band's row-hashes hashed together and
+    * exploded to one row per band.
+    */
+  private def signaturesOf(sh: DataFrame, bands: Int, rows: Int): DataFrame = {
     val numPerm = bands * rows
-    val sh = TextOps.shingles(docs)
     val minhashes = sh.groupBy("doc_id").agg(
       min(xxhash64(lit(0), col("shingle"))).as("h0"),
       (1 until numPerm).map(i => min(xxhash64(lit(i), col("shingle"))).as(s"h$i")): _*)
@@ -254,111 +259,48 @@ object Dedup {
     // feeds sizes + both sides of the common-count join
     val sh = Checkpoints.local(TextOps.shingles(
         docs.join(gated(ids), Seq("doc_id"), "left_semi")))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = gated(candidates)
-      .join(sh.as("sx"), col("a") === col("sx.doc_id"))
-      .join(sh.as("sy"),
-        col("b") === col("sy.doc_id") && col("sx.shingle") === col("sy.shingle"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("b") === col("sb.doc_id"))
-      .select(col("a"), col("b"),
-        round(col("c") / (col("sa.n") + col("sb.n") - col("c")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifiedPairs(gated(candidates), sh, threshold)
   }
 
-  /** LSH pairs from PRECOMPUTED band signatures — the incremental path
-    * ([[IncrementalDedup]]), where signatures live in a persisted index
-    * and re-deriving them would re-shingle the whole corpus. Identical
-    * output to [[minhashLshPairs]] over the same docs: the candidate
-    * self-join and the exact verification are the same, only the
-    * signature pass is skipped.
+  /** MinHash signatures + banded LSH candidates + exact verification.
+    *
+    * numPerm minhashes from xxhash64(permIndex, shingle); bands of `rows`
+    * hashes each; docs sharing any band signature become candidate pairs;
+    * candidates are then verified with the exact Jaccard (computed only on
+    * candidate docs' shingles). With 16 bands × 2 rows, a pair at the 0.8
+    * threshold is missed with prob (1-0.8²)^16 ≈ 3e-7 — and the planted
+    * near-dups in this data sit at J≈0.98 (miss prob ~1e-26), so the output
+    * equals the exact x02 result and shares its oracle.
+    *
+    * At 100 TB this is THE scalable near-dup path: signature computation is
+    * a single groupBy(doc) pass; the candidate join shuffles on (band, sig)
+    * — tiny keys, uniformly distributed by construction.
     */
-  def minhashLshPairsFromSignatures(docs: DataFrame, sigs: DataFrame,
-      threshold: Double): DataFrame = {
-    val candidates = sigs.as("x").join(sigs.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    verifyCandidates(docs, candidates, threshold)
-  }
-
   def minhashLshPairs(docs: DataFrame, threshold: Double,
       bands: Int = 16, rows: Int = 2): DataFrame = {
-    val numPerm = bands * rows
     val sh = Checkpoints.local(TextOps.shingles(docs)) // see ngramJaccardPairs
-
-    // One minhash column per permutation, in a single aggregation pass.
-    val minhashes = sh.groupBy("doc_id").agg(
-      min(xxhash64(lit(0), col("shingle"))).as("h0"),
-      (1 until numPerm).map(i => min(xxhash64(lit(i), col("shingle"))).as(s"h$i")): _*)
-
-    // Band signatures: hash the band's row-hashes together, explode.
-    val bandCols = (0 until bands).map { b =>
-      val rowCols = (0 until rows).map(r => col(s"h${b * rows + r}"))
-      struct(lit(b).as("band"), xxhash64(rowCols: _*).as("sig"))
-    }
-    val banded = minhashes
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
-
+    val banded = signaturesOf(sh, bands, rows)
     val candidates = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-
-    // Exact verification restricted to candidate pairs: count common
-    // shingles by joining each side's shingle set. (r16 note: a
-    // semi-filter of `sh` down to candidate docs — verifyCandidates'
-    // shape — was tried here and MEASURED ~0.3 s slower warm at sf0.1:
-    // the extra eager materializations cost more than the ~1M-row
-    // shingle exchanges they remove. At index scale the persisted-
-    // signature path minhashLshPairsFromSignatures/verifyCandidates is
-    // the one that runs, and it does carry the semi-filter.)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val common = candidates
-      .join(sh.as("sx"), col("a") === col("sx.doc_id"))
-      .join(sh.as("sy"),
-        col("b") === col("sy.doc_id") && col("sx.shingle") === col("sy.shingle"))
-      .groupBy("a", "b").agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.as("sa"), col("a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("b") === col("sb.doc_id"))
-      .select(col("a"), col("b"),
-        round(col("c") / (col("sa.n") + col("sb.n") - col("c")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    // Verified against the full shingle set `sh`, already materialized
+    // for the signature pass, rather than verifyCandidates' semi-filter
+    // to the candidate docs: that filter costs two more eager
+    // materializations (the counted candidates and the filtered
+    // shingles), which outweigh the ~1M-row shingle exchanges it saves
+    // here (~0.3 s slower warm at sf0.1). It pays where the shingles are
+    // not already in hand: the incremental path's stored signature index.
+    verifiedPairs(candidates, sh, threshold)
   }
 
-  /** 64-bit SimHash per doc + banded hamming-distance pairs.
-    *
-    * fingerprint bit i = sign of sum over tokens of (+1 if token-hash bit i
-    * set else -1). Banded search: split the fingerprint into `chunks` equal
-    * slices; by pigeonhole any pair with hamming <= chunks-1 shares at least
-    * one exact chunk, so joining on (chunkIdx, chunkVal) finds ALL pairs
-    * within the radius — no brute-force O(n²) scan. Scale: the join
-    * shuffles on 8-bit chunk values + index; for 100 TB corpora widen to
-    * 16-bit chunks to keep bucket sizes down.
-    */
   /** 64-bit SimHash fingerprint per doc: bit i = sign of the sum over
     * tokens of (+1 if token-hash bit i set else -1).
     */
   def simhashFingerprints(docs: DataFrame): DataFrame =
     simhashFingerprintsNarrow(docs, TextOps.tokenArray(col("text")))
 
-  /** Character n-gram units (doc_id, w): every `n`-char sliding window of
-    * the lowercased text. The tokenization-robust feature source production
-    * near-dup pipelines use when whitespace/token boundaries are noisy
-    * (CJK, code, boilerplate with drifting punctuation): two texts that
-    * differ only in tokenization share almost all char-grams but few word
-    * tokens. Lowercasing matches the word-token path (TextOps.tokens), so
-    * the variant tolerates case drift — the same class of superficial
-    * difference it exists to absorb. Texts shorter than `n` chars yield
-    * zero units (the sequence-descending guard — Spark's `sequence(1, 0)`
-    * is [1, 0], not empty).
-    */
   /** The sliding-window gram array over an ALREADY-PROJECTED lowered-text
     * attribute. `t` must be a plain column reference, not an expression:
     * the lambda body evaluates its subtree once PER ELEMENT, so an
@@ -376,6 +318,17 @@ object Dedup {
   private def withLoweredText(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), lower(col("text")).as("lt"))
 
+  /** Character n-gram units (doc_id, w): every `n`-char sliding window of
+    * the lowercased text. The tokenization-robust feature source production
+    * near-dup pipelines use when whitespace/token boundaries are noisy
+    * (CJK, code, boilerplate with drifting punctuation): two texts that
+    * differ only in tokenization share almost all char-grams but few word
+    * tokens. Lowercasing matches the word-token path (TextOps.tokens), so
+    * the variant tolerates case drift — the same class of superficial
+    * difference it exists to absorb. Texts shorter than `n` chars yield
+    * zero units (the sequence-descending guard — Spark's `sequence(1, 0)`
+    * is [1, 0], not empty).
+    */
   def charGramUnits(docs: DataFrame, n: Int = 4): DataFrame =
     withLoweredText(docs)
       .select(col("doc_id"), explode(charGramArray(col("lt"), n)).as("w"))
@@ -437,7 +390,17 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Per-pair simhash search, fingerprints computed inline. */
+  /** 64-bit SimHash per doc + banded hamming-distance pairs, fingerprints
+    * computed inline.
+    *
+    * fingerprint bit i = sign of sum over tokens of (+1 if token-hash bit i
+    * set else -1). Banded search: split the fingerprint into `chunks` equal
+    * slices; by pigeonhole any pair with hamming <= chunks-1 shares at least
+    * one exact chunk, so joining on (chunkIdx, chunkVal) finds ALL pairs
+    * within the radius — no brute-force O(n²) scan. Scale: the join
+    * shuffles on 8-bit chunk values + index; for 100 TB corpora widen to
+    * 16-bit chunks to keep bucket sizes down.
+    */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3, chunks: Int = 8): DataFrame =
     simhashBandedPairs(simhashFingerprints(docs), maxHamming, chunks)
 
@@ -457,6 +420,11 @@ object Dedup {
       chunks: Int = 8): DataFrame =
     simhashBandedCompleteFromFps(simhashFingerprints(docs), maxHamming, chunks)
 
+  /** Char-gram SimHash fingerprints (narrow, zero-shuffle). */
+  def simhashCharGramFps(docs: DataFrame): DataFrame =
+    simhashFingerprintsNarrow(withLoweredText(docs),
+      charGramArray(col("lt")))
+
   /** x158: the same completeness invariant over CHAR-GRAM fingerprints
     * ([[charGramUnits]]) — the tokenization-robust near-dup variant. The
     * banded kernel, pigeonhole argument, and oracle shape are identical to
@@ -472,11 +440,6 @@ object Dedup {
     * guards the sampled side against vacuity (sampling that dropped
     * every in-radius pair would certify nothing).
     */
-  /** Char-gram SimHash fingerprints (narrow, zero-shuffle). */
-  def simhashCharGramFps(docs: DataFrame): DataFrame =
-    simhashFingerprintsNarrow(withLoweredText(docs),
-      charGramArray(col("lt")))
-
   def simhashCharGramComplete(docs: DataFrame, maxHamming: Int = 3,
       chunks: Int = 8): DataFrame =
     simhashBandedCompleteFromFps(

@@ -614,37 +614,37 @@ object StreamingOps {
   case class IncDedupDrain(survivors: DataFrame, batches: Int,
       winners: Long, compactedDocs: Long, kept: Long, arrivals: Long)
 
-  /** x251: streaming incremental dedup — x137's two-snapshot state
-    * machine placed in its PRODUCTION position (r13 verdict #4): dedup as
-    * data lands, one microbatch at a time, with the three id-sized stores
-    * x137 carries between snapshots maintained as parquet-backed state
-    * (the x119 generation-swap idiom, crash-atomicity proven by
-    * MvRecoverySpec for the shared pattern):
+  /** x251: streaming incremental dedup — x137's incremental dedup placed
+    * in its PRODUCTION position (r13 verdict #4): dedup as data lands, one
+    * microbatch at a time. Each microbatch is one
+    * [[graft.operators.IncrementalDedup.ingest]] — the step x137 runs per
+    * snapshot — over the id-sized state kept as parquet (the x119
+    * generation-swap idiom, crash-atomicity proven by MvRecoverySpec for
+    * the shared pattern):
     *
-    *  - fingerprint store (fp → min doc_id): exact-dup winners, merged
-    *    per batch; an old winner beaten by a smaller-id exact twin is
+    *  - fingerprint store (fp, doc_id): exact-dup winners, merged per
+    *    batch; an old winner beaten by a smaller-id exact twin is
     *    REVOKED — its signature rows and edges leave with it.
     *  - signature index (doc_id, band, sig): new survivors' LSH rows
     *    join ONLY against this index — new×(new∪old) candidates per
     *    microbatch, old×old never re-joins.
     *  - edge store (a, b): verified near-dup pairs among survivors,
-    *    accumulated; revoked endpoints filtered out on merge.
+    *    accumulated; revoked endpoints filtered out on read.
     *
     * The corpus text itself is a batchId-keyed store (docs/b<batchId> per
-    * microbatch — a replayed microbatch overwrites, not doubles):
-    * candidate verification point-reads only candidate docs' text from
-    * it, exactly x137's "shingle only the candidates" shape.
+    * microbatch — a replayed microbatch overwrites, not doubles): the
+    * ingest verifies its candidates by point-reading the text of the
+    * earlier batches' stores plus this batch's kept docs, exactly x137's
+    * "shingle only the candidates" shape. The batch then writes what the
+    * ingest returned.
     *
     * State maintenance is DELTA GENERATIONS (r14 verdict #3 — the first
     * rendering rewrote all three stores every microbatch, O(store) per
     * batch and quadratic over a stream's life): each batch WRITES only
     * its delta (delta/b<batchId>/{fp,sig,edge} — this batch's kept
     * fingerprints, kept docs' signature rows, new verified edges), and
-    * READS state as union-of-prior-deltas minus revocations. Revocation
-    * needs no log: winners = min doc_id per fingerprint over the kept-fp
-    * deltas (the overall winner was kept by the batch it arrived in — it
-    * beat the then-winner), and a beaten doc can never win again, so
-    * "alive" is a semi-join against current winners. Per-batch WRITE cost
+    * READS state as union-of-prior-deltas; revocation needs no log
+    * ([[graft.operators.IncrementalDedup.State]]). Per-batch WRITE cost
     * is O(batch); the delta reads are id-sized parquet. At drain the
     * deltas COMPACT into one generation — winners, alive signatures,
     * alive edges, and the corpus text bounded to SURVIVING docs (r14
@@ -653,19 +653,16 @@ object StreamingOps {
     * generation). This is MERGE-on-read + compaction, the table-format
     * (Delta/Iceberg) lifecycle rendered on plain parquet.
     *
-    * Drained ≡ batch: the final survivor set (fp winners minus cluster
-    * losers over the drained edge store) is split-independent by x137's
-    * incremental-≡-scratch construction — kept set = min-id per
-    * fingerprint over the union however it arrived; every ≥1-new edge is
-    * generated by the batch that introduced its newer endpoint; identical
-    * edge set → identical components → identical survivors. So x251
+    * Drained ≡ batch: the final survivor set is split-independent by the
+    * incremental-≡-scratch construction (see IncrementalDedup), so x251
     * shares x137's from-scratch oracle VERBATIM
     * ([[graft.operators.IncrementalDedup.scratchOracleSql]]).
     */
   def streamingIncrementalDedupWithStats(spark: SparkSession, dir: String,
       threshold: Double = 0.8): IncDedupDrain =
     withStreamPartitions(spark) {
-      import graft.operators.Dedup
+      import graft.operators.IncrementalDedup
+      import graft.operators.IncrementalDedup.{DocsDdl, EdgeDdl, FpDdl, SigDdl, State, alive}
       import java.nio.file.Files
       val runDir = Files.createTempDirectory("graft_incdedup_").toString
       val docsDir = s"$runDir/docs"
@@ -676,72 +673,40 @@ object StreamingOps {
       // processAllAvailable/stop).
       val batches = new java.util.concurrent.atomic.AtomicInteger(0)
       val arrivals = new java.util.concurrent.atomic.AtomicLong(0L)
-      val keptTotal = new java.util.concurrent.atomic.AtomicLong(0L)
-      def emptyDf(ddl: String) = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      // Union of delta generations b<i> with i < before (before < 0: all).
+      // Union of the generations <root>/b<i><sub> with i < before (before
+      // < 0: all), read with their schema from the listed directories.
       // Excluding the current batchId makes a replayed batch read exactly
-      // the pre-crash state — its own half-written delta is invisible,
-      // then overwritten (idempotence without a log).
-      def deltas(sub: String, ddl: String, before: Long): DataFrame = {
-        val parts = Option(new java.io.File(deltaDir).listFiles())
+      // the pre-crash state — its own half-written generation is
+      // invisible, then overwritten (idempotence without a log).
+      def stored(root: String, sub: String, ddl: String, before: Long): DataFrame = {
+        val parts = Option(new java.io.File(root).listFiles())
           .getOrElse(Array.empty)
           .filter(f => f.getName.startsWith("b") &&
             (before < 0 || f.getName.drop(1).toLong < before))
-          .map(f => s"${f.getAbsolutePath}/$sub")
-        if (parts.isEmpty) emptyDf(ddl)
+          .map(f => s"${f.getAbsolutePath}$sub")
+        if (parts.isEmpty) IncrementalDedup.empty(spark, ddl)
         else spark.read.schema(
           org.apache.spark.sql.types.StructType.fromDDL(ddl))
           .parquet(parts.toSeq: _*)
       }
-      val fpDdl = "fp STRING, doc_id BIGINT"
-      val sigDdl = "doc_id BIGINT, band INT, sig BIGINT"
-      val edgeDdl = "a BIGINT, b BIGINT"
+      def state(before: Long) = State(stored(deltaDir, "/fp", FpDdl, before),
+        stored(deltaDir, "/sig", SigDdl, before),
+        stored(deltaDir, "/edge", EdgeDdl, before))
       val q = stagedDocsStream(spark, dir)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
           batches.incrementAndGet()
           val (newDocs, nNew) = Checkpoints.counted(batch.select("doc_id", "text"))
           arrivals.addAndGet(nNew)
-          val fpPrev = deltas("fp", fpDdl, batchId)
-          val sigPrev = deltas("sig", sigDdl, batchId)
-          // Winners incl. this batch = min doc_id per fp over kept-fp
-          // deltas ∪ this batch's fingerprints.
-          val winners = Checkpoints.local(fpPrev
-            .unionByName(newDocs.select(md5(col("text")).as("fp"),
-              col("doc_id")))
-            .groupBy("fp").agg(min("doc_id").as("doc_id")))
-          val winnerIds = winners.select("doc_id")
-          val (keptNew, nKept) =
-            Checkpoints.counted(newDocs.join(winnerIds, Seq("doc_id"), "left_semi"))
-          keptTotal.addAndGet(nKept)
-          // This batch's surviving docs land in the corpus store FIRST:
-          // verification below point-reads candidate text from it.
-          keptNew.write.mode("overwrite").parquet(s"$docsDir/b$batchId")
-          // New-side-only candidate join: new sigs × (alive old ∪ new).
-          // "Alive" = semi-join current winners (revocation is permanent,
-          // so beaten docs drop out of the index without an explicit log).
-          val sigsNew = Checkpoints.local(Dedup.bandSignatures(keptNew))
-          val sigAlive = sigPrev.join(winnerIds, Seq("doc_id"), "left_semi")
-            .unionByName(sigsNew)
-          val cand = sigsNew.as("x").join(sigAlive.as("y"),
-              col("x.band") === col("y.band") &&
-                col("x.sig") === col("y.sig") &&
-                col("x.doc_id") =!= col("y.doc_id"))
-            .select(least(col("x.doc_id"), col("y.doc_id")).as("a"),
-              greatest(col("x.doc_id"), col("y.doc_id")).as("b"))
-            .distinct()
-          val corpus = spark.read.parquet(s"$docsDir/b*")
-          val edgesNew = Dedup.verifyCandidates(corpus, cand, threshold)
-            .select("a", "b")
-          // Delta write — O(this batch), batchId-keyed (replay overwrites).
+          val (delta, kept) = IncrementalDedup.ingest(state(batchId), newDocs,
+            stored(docsDir, "", DocsDdl, batchId), threshold)
+          // Writes — O(this batch), batchId-keyed (replay overwrites).
+          kept.write.mode("overwrite").parquet(s"$docsDir/b$batchId")
           val d = s"$deltaDir/b$batchId"
-          keptNew.select(md5(col("text")).as("fp"), col("doc_id"))
-            .write.mode("overwrite").parquet(s"$d/fp")
-          sigsNew.write.mode("overwrite").parquet(s"$d/sig")
-          edgesNew.write.mode("overwrite").parquet(s"$d/edge")
-          Seq(newDocs, winners, keptNew, sigsNew).foreach(Checkpoints.release)
+          delta.fps.write.mode("overwrite").parquet(s"$d/fp")
+          delta.sigs.write.mode("overwrite").parquet(s"$d/sig")
+          delta.edges.write.mode("overwrite").parquet(s"$d/edge")
+          Seq(newDocs, kept, delta.sigs, delta.edges).foreach(Checkpoints.release)
           ()
         }
         .start()
@@ -749,31 +714,23 @@ object StreamingOps {
       val nb = batches.get()
       require(nb > 0, "no microbatch ran")
       // Drain: reconstruct final state from the deltas, then COMPACT.
-      val winners = Checkpoints.local(deltas("fp", fpDdl, -1L)
-        .groupBy("fp").agg(min("doc_id").as("doc_id")))
-      val winnerIds = winners.select("doc_id")
-      val edgesAlive = deltas("edge", edgeDdl, -1L)
-        .join(winnerIds.select(col("doc_id").as("a")), Seq("a"), "left_semi")
-        .join(winnerIds.select(col("doc_id").as("b")), Seq("b"), "left_semi")
-      val losers = Dedup.dedupClusters(edgesAlive)
-        .filter(col("doc_id") =!= col("cluster_id")).select("doc_id")
-      val survivors = Checkpoints.local(winnerIds
-        .join(losers, Seq("doc_id"), "left_anti"))
+      val all = state(-1L)
+      val winners = Checkpoints.local(IncrementalDedup.winners(all.fps))
+      val ids = winners.select("doc_id")
+      val survivors = Checkpoints.local(IncrementalDedup.survivors(ids, all.edges))
       // Compaction: one generation holding exactly the live state — the
       // corpus text store shrinks to the current winners (docs beaten
       // after arrival leave with their revocation), spec-asserted
       // compactedDocs == winners in Round19Spec.
       val compactDir = s"$runDir/compact"
+      val docs = stored(docsDir, "", DocsDdl, -1L)
       winners.write.mode("overwrite").parquet(s"$compactDir/fp")
-      deltas("sig", sigDdl, -1L)
-        .join(winnerIds, Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$compactDir/sig")
-      edgesAlive.write.mode("overwrite").parquet(s"$compactDir/edge")
-      spark.read.parquet(s"$docsDir/b*")
-        .join(winnerIds, Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$compactDir/docs")
+      alive(all.sigs, ids, "doc_id").write.mode("overwrite").parquet(s"$compactDir/sig")
+      alive(all.edges, ids, "a", "b").write.mode("overwrite").parquet(s"$compactDir/edge")
+      alive(docs, ids, "doc_id").write.mode("overwrite").parquet(s"$compactDir/docs")
       val nWinners = winners.count()
       val nCompactDocs = spark.read.parquet(s"$compactDir/docs").count()
+      val nKept = docs.count()
       Checkpoints.release(winners)
       // The run's scratch space (staged deltas + compacted generation) is
       // deleted once the survivor set is materialized — Bench runs this
@@ -781,8 +738,7 @@ object StreamingOps {
       // accumulated in /tmp (r14 advice #2). Production retains compact/.
       val out = survivors.orderBy("doc_id")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(runDir))
-      IncDedupDrain(out, nb, nWinners, nCompactDocs, keptTotal.get(),
-        arrivals.get())
+      IncDedupDrain(out, nb, nWinners, nCompactDocs, nKept, arrivals.get())
     }
 
   /** x244: streaming histogram quantiles — x243's 32-bucket per-type

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Driver-side iteration is written once: every checkpointed loop runs
   * in `GraphLoops.fixpoint` (checkpoint each iterate, probe, drop the
   * prior one), and every forced-broadcast byte gate goes through
-  * `Dedup.gatedBroadcast`. A hand-written loop counter grows its own
+  * `Dedup.gatedBroadcast`, and the near-dup kernels — the MinHash
+  * signature pass, the Jaccard ratio and the incremental new-side
+  * candidate join — each live in one helper. A hand-written loop counter grows its own
   * story for when its iterates are freed, and a hand-written gate can
   * lose the `bar > 0` guard that keeps a disabled bar from broadcasting a
   * 0-byte estimate, so this spec fails on either by file, line and
@@ -46,6 +48,14 @@ class IterationLintSpec extends AnyFunSuite {
     Rule("byte-gated broadcast", """(?i)bar > 0 &&""".r,
       ("graft/operators/Dedup.scala", "gatedBroadcast"), "Dedup.gatedBroadcast"))
 
+  private val dedupRules = Seq(
+    Rule("MinHash aggregate", """min\(xxhash64\(lit\(0\)""".r,
+      ("graft/operators/Dedup.scala", "signaturesOf"), "Dedup.bandSignatures"),
+    Rule("Jaccard ratio", """col\("sa\.n"\) \+ col\("sb\.n"\)""".r,
+      ("graft/operators/Dedup.scala", "jaccardPairs"), "Dedup.verifyCandidates"),
+    Rule("new-side candidate join", """least\(col\("x\.doc_id"\)""".r,
+      ("graft/operators/IncrementalDedup.scala", "ingest"), "IncrementalDedup.ingest"))
+
   /** A member def (indented at most two spaces): a def nested inside a
     * method body does not change the enclosing member.
     */
@@ -71,6 +81,14 @@ class IterationLintSpec extends AnyFunSuite {
   }
 
   test("each driver loop and byte gate is written once, inside its helper") {
+    writtenOnce(rules)
+  }
+
+  test("each near-dup kernel is written once, inside its helper") {
+    writtenOnce(dedupRules)
+  }
+
+  private def writtenOnce(rules: Seq[Rule]): Unit = {
     val lines = codeLines
     val report = rules.flatMap { r =>
       val hits = lines.filter { case (file, _, enclosing, line) =>

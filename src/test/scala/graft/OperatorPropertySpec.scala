@@ -3,6 +3,7 @@ package graft
 import graft.operators.{Dedup, Skew}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 /** Property-based checks (raw ScalaCheck, no scalatest bridge in the
   * offline cache): each Spark operator is compared against an INDEPENDENT
@@ -122,12 +123,20 @@ class OperatorPropertySpec extends SparkSuite {
     check(Prop.forAll(docsGen) { xs =>
       import spark.implicits._
       val df = xs.toDF("doc_id", "text")
-      def pairs(d: org.apache.spark.sql.DataFrame) =
-        d.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = pairs(Dedup.ngramJaccardPairs(df, 0.8))
-      val lsh = pairs(Dedup.minhashLshPairs(df, 0.8))
+      def rows(d: org.apache.spark.sql.DataFrame) = d.select("a", "b", "jaccard")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+      val exact = rows(Dedup.ngramJaccardPairs(df, 0.8))
+      val lsh = rows(Dedup.minhashLshPairs(df, 0.8))
+      // the shared verify kernel: the prefix filter and a verify of every
+      // a < b pair are exact, so they equal the inverted-index join
+      val everyPair = (for ((a, _) <- xs; (b, _) <- xs if a < b) yield (a, b))
+        .toDF("a", "b")
+      val ppjoin = rows(Dedup.prefixFilteredJaccardPairs(df, 0.8))
+      val verified = rows(Dedup.verifyCandidates(df, everyPair, 0.8))
       // candidates are exactly verified → no false positives, ever
-      lsh.subsetOf(exact)
+      (lsh.toSet.subsetOf(exact.toSet) :| s"LSH $lsh not within $exact") &&
+        ((ppjoin == exact) :| s"prefix filter $ppjoin != $exact") &&
+        ((verified == exact) :| s"verify of every pair $verified != $exact")
     })
   }
 

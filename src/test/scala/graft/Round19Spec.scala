@@ -224,9 +224,39 @@ class Round19Spec extends SparkSuite {
         "unrolls only 4; raise the unroll")
   }
 
+  /** The WARN messages `logger` logs while `body` runs. */
+  private def warnsOf[T](logger: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("warnsOf", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val log = LoggerContext.getContext(false).getLogger(logger)
+    log.addAppender(capture)
+    try {
+      val out = body
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      log.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
   test("x251: drained streaming state equals the batch rebuild; >= 2 microbatches ran") {
-    val drain = graft.streaming.StreamingOps
-      .streamingIncrementalDedupWithStats(spark, sfDir)
+    // The store reads list their b<i> directories: a glob path makes
+    // FileStreamSink.hasMetadata log a WARN with a stack trace per read.
+    val (drain, sinkWarns) = warnsOf(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink") {
+      graft.streaming.StreamingOps.streamingIncrementalDedupWithStats(spark, sfDir)
+    }
+    assert(sinkWarns.isEmpty, s"${sinkWarns.size} FileStreamSink WARN(s) " +
+      s"during the drain, first: ${sinkWarns.take(1).mkString}")
     val streamed = drain.survivors.collect().map(_.getLong(0)).toSeq
     assert(drain.batches >= 2,
       s"only ${drain.batches} microbatch(es) — the incremental state " +
